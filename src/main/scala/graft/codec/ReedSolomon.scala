@@ -87,31 +87,55 @@ object ReedSolomon {
       g
     })
 
+  /** Products(nsym)(coef * nsym + j - 1) = gen(j) · coef: the generator
+    * coefficients' GF(2^8) multiplication table, one row per coefficient
+    * value.
+    */
+  private val productsCache =
+    new java.util.concurrent.ConcurrentHashMap[Int, Array[Byte]]()
+
+  private def products(nsym: Int): Array[Byte] =
+    productsCache.computeIfAbsent(nsym, { n =>
+      val gen = generatorPoly(n)
+      val t = new Array[Byte](256 * n)
+      var c = 0
+      while (c < 256) {
+        var j = 1
+        while (j <= n) { t(c * n + j - 1) = gfMul(gen(j), c).toByte; j += 1 }
+        c += 1
+      }
+      t
+    })
+
+  /** Parity of `data[off, off + len)` (one block) into
+    * `dst[dstOff, dstOff + nsym)`: synthetic division by the generator,
+    * one table row per data byte.
+    */
+  private def blockParity(data: Array[Byte], off: Int, len: Int, nsym: Int,
+      dst: Array[Byte], dstOff: Int): Unit = {
+    require(len + nsym <= 255, s"block too long: $len + $nsym > 255")
+    val t = products(nsym)
+    val rem = new Array[Byte](len + nsym)
+    System.arraycopy(data, off, rem, 0, len)
+    var i = 0
+    while (i < len) {
+      val row = (rem(i) & 0xff) * nsym
+      if (row != 0) {
+        var j = 0
+        while (j < nsym) { rem(i + 1 + j) = (rem(i + 1 + j) ^ t(row + j)).toByte; j += 1 }
+      }
+      i += 1
+    }
+    System.arraycopy(rem, len, dst, dstOff, nsym)
+  }
+
   /** Systematic encode of one block (≤ 255 - nsym data bytes):
     * returns data ++ nsym parity bytes.
     */
   def encodeBlock(data: Array[Byte], nsym: Int): Array[Byte] = {
-    require(data.length + nsym <= 255, s"block too long: ${data.length} + $nsym > 255")
-    val gen = generatorPoly(nsym)
-    val out = new Array[Int](data.length + nsym)
-    var i = 0
-    while (i < data.length) { out(i) = data(i) & 0xff; i += 1 }
-    i = 0
-    while (i < data.length) {
-      val coef = out(i)
-      if (coef != 0) {
-        var j = 1
-        while (j < gen.length) {
-          out(i + j) ^= gfMul(gen(j), coef)
-          j += 1
-        }
-      }
-      i += 1
-    }
-    // restore the (destroyed) message part; keep the remainder as parity
-    i = 0
-    while (i < data.length) { out(i) = data(i) & 0xff; i += 1 }
-    out.map(_.toByte)
+    val out = java.util.Arrays.copyOf(data, data.length + nsym)
+    blockParity(data, 0, data.length, nsym, out, data.length)
+    out
   }
 
   /** Chunked encode: splits at 255 - nsym, each sub-block gets its own
@@ -126,11 +150,34 @@ object ReedSolomon {
 
   /** The parity suffix the reference stores as `error_correction_code`:
     * the last `encoded.length - data.length` bytes of the encoded
-    * stream (`dna_encoding.py:324`).
+    * stream (`dna_encoding.py:324`). That suffix is not the blocks'
+    * parities side by side: it starts at stream offset `data.length`,
+    * so it holds the tail of a late block's data too. Only the blocks
+    * that reach into it are encoded (2 of 5 for a 1000-byte chunk at
+    * nsym 10).
     */
   def parity(data: Array[Byte], nsym: Int): Array[Byte] = {
-    val enc = encode(data, nsym)
-    enc.drop(data.length)
+    val blockData = 255 - nsym
+    val n = data.length
+    val nBlocks = if (n <= blockData) 1 else (n + blockData - 1) / blockData
+    val out = new Array[Byte](nBlocks * nsym)
+    val parityBlock = new Array[Byte](nsym)
+    // block b sits at stream offset b * 255: its data, then its parity
+    var b = nBlocks - 1
+    while (b >= 0 && b * 255 + math.min(blockData, n - b * blockData) + nsym > n) {
+      val len = math.min(blockData, n - b * blockData)
+      val blockStart = b * 255
+      blockParity(data, b * blockData, len, nsym, parityBlock, 0)
+      // the block's data bytes at stream offsets >= n, then its parity
+      val dataFrom = math.max(n - blockStart, 0)
+      if (dataFrom < len)
+        System.arraycopy(data, b * blockData + dataFrom, out, blockStart + dataFrom - n, len - dataFrom)
+      val parityAt = blockStart + len - n
+      val parityFrom = math.max(-parityAt, 0)
+      System.arraycopy(parityBlock, parityFrom, out, parityAt + parityFrom, nsym - parityFrom)
+      b -= 1
+    }
+    out
   }
 
   private def syndromes(block: Array[Int], nsym: Int): Array[Int] = {

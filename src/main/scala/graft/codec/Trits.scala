@@ -14,15 +14,51 @@ package graft.codec
   */
 object Trits {
 
-  /** Bytes → base-3 digits, most-significant trit first.
-    *
-    * In-place repeated division of a base-2³² limb array by 3 —
-    * numerically identical to the reference's arbitrary-precision
-    * divmod loop, but allocation-free per digit (BigInt divideAndRemainder
-    * allocates two objects per trit and made the codec the pipeline's
-    * hot spot: ~50× slower at chunk_size=1000).
-    */
+  /** Bytes → base-3 digits, most-significant trit first. */
   def bytesToTrits(data: Array[Byte]): Array[Int] = {
+    val sd = superdigits(data)
+    val top = sd.length - 1
+    val total = top * RadixTrits + tritCount(sd(top))
+    val arr = new Array[Int](total)
+    var p = total - 1
+    var s = 0
+    while (s <= top) {
+      var v = sd(s)
+      val k = if (s == top) total - top * RadixTrits else RadixTrits
+      var c = 0
+      while (c < k) { arr(p) = v % 3; v /= 3; p -= 1; c += 1 }
+      s += 1
+    }
+    arr
+  }
+
+  private[codec] final val RadixTrits = 19
+  private final val Radix = 1162261467L // 3^19 < 2^31
+
+  /** 3^k for k in [0, 19]. */
+  private val Pow3: Array[Long] = Array.iterate(1L, RadixTrits + 1)(_ * 3)
+
+  /** Trits a superdigit needs at its minimal width (at least one). */
+  private[codec] def tritCount(superdigit: Int): Int = {
+    var v = superdigit
+    var n = 1
+    while (v >= 3) { v /= 3; n += 1 }
+    n
+  }
+
+  /** The big-endian unsigned value of `data` in base 3^19, least
+    * significant superdigit first, with no leading zero superdigit
+    * (`[0]` for an empty or all-zero input). Each superdigit expands to
+    * 19 trits (the most significant one to [[tritCount]] trits), so the
+    * digit sequence is the reference's one-divmod-per-trit loop
+    * (`dna_encoding.py:47-61`).
+    *
+    * Repeated division of a base-2³² limb array by 3^19. Each walk over
+    * the limbs divides four times: each division consumes the previous
+    * one's quotient limb as soon as it exists, so the four remainder
+    * chains run side by side and a walk yields four superdigits.
+    */
+  private[codec] def superdigits(data: Array[Byte]): Array[Int] = {
     if (data.isEmpty) return Array(0)
     val nl = (data.length + 3) / 4
     val limbs = new Array[Int](nl) // big-endian base-2^32
@@ -40,65 +76,64 @@ object Trits {
     var start = 0
     while (start < nl && limbs(start) == 0) start += 1
     if (start == nl) return Array(0)
-    // divide by 3^19 per pass (19 trits per limb walk), then expand
-    // each base-3^19 superdigit locally — same digit sequence as
-    // dividing by 3 once per trit, ~19× fewer limb operations
-    val supers = new scala.collection.mutable.ArrayBuffer[Long](data.length / 2 + 1)
+    // 32 bits per limb over log2(3^19) ≈ 30.1 bits per superdigit,
+    // plus the zeros a final walk may add
+    val out = new Array[Int](nl * 12 / 11 + 5)
+    var n = 0
     while (start < nl) {
-      var rem = 0L
+      var r0, r1, r2, r3 = 0L
       var j = start
       while (j < nl) {
-        val cur = (rem << 32) | (limbs(j) & 0xffffffffL)
-        limbs(j) = (cur / Radix).toInt
-        rem = cur % Radix
+        var c = (r0 << 32) | (limbs(j) & 0xffffffffL)
+        var q = c / Radix; r0 = c - q * Radix
+        c = (r1 << 32) | q; q = c / Radix; r1 = c - q * Radix
+        c = (r2 << 32) | q; q = c / Radix; r2 = c - q * Radix
+        c = (r3 << 32) | q; q = c / Radix; r3 = c - q * Radix
+        limbs(j) = q.toInt
         j += 1
       }
-      supers += rem // least-significant superdigit of the remaining value
+      out(n) = r0.toInt; out(n + 1) = r1.toInt; out(n + 2) = r2.toInt; out(n + 3) = r3.toInt
+      n += 4
       while (start < nl && limbs(start) == 0) start += 1
     }
-    // most-significant superdigit expands to its minimal trit count
-    var msd = supers(supers.length - 1)
-    var msdTrits = 0
-    while (msd > 0) { msd /= 3; msdTrits += 1 }
-    val total = (supers.length - 1) * RadixTrits + math.max(msdTrits, 1)
-    val arr = new Array[Int](total)
-    var p = total - 1
-    var si = 0
-    while (si < supers.length - 1) {
-      var v = supers(si)
-      var c = 0
-      while (c < RadixTrits) { arr(p) = (v % 3).toInt; v /= 3; p -= 1; c += 1 }
-      si += 1
-    }
-    var v = supers(supers.length - 1)
-    while (p >= 0) { arr(p) = (v % 3).toInt; v /= 3; p -= 1 }
-    arr
+    while (n > 1 && out(n - 1) == 0) n -= 1 // the value ran out mid-walk
+    java.util.Arrays.copyOf(out, n)
   }
 
-  private final val RadixTrits = 19
-  private final val Radix = 1162261467L // 3^19 < 2^31
-
   /** Trits → fixed-width big-endian bytes (left-pad zeros / keep the
-    * low-order `targetLengthBytes` bytes when wider). Horner evaluation
-    * into base-2³² limbs (multiply-by-3-and-add in place).
+    * low-order `targetLengthBytes` bytes when wider; minimal width, at
+    * least one byte, when `targetLengthBytes <= 0`).
     */
   def tritsToBytes(trits: Seq[Int], targetLengthBytes: Int): Array[Byte] = {
-    var limbs = new Array[Int](math.max(1, trits.length / 20 + 1))
-    var used = 1 // limbs are little-endian here; index 0 = least significant
-    // Horner in radix 3^19: fold 19 trits into one superdigit, then one
-    // multiply-add limb walk per group instead of per trit
-    val ts = trits.toIndexedSeq
-    val n = ts.length
-    var gStart = 0
-    while (gStart < n) {
-      val g = if (gStart == 0 && n % RadixTrits != 0) n % RadixTrits else RadixTrits
-      var gv = 0L
-      var k = gStart
-      while (k < gStart + g) { gv = gv * 3 + ts(k); k += 1 }
-      var mult = 1L
-      var c = 0
-      while (c < g) { mult *= 3; c += 1 }
-      var carry = gv
+    val n = trits.length
+    val groups = new Array[Long]((n + RadixTrits - 1) / RadixTrits)
+    val it = trits.iterator
+    var g = 0
+    var left = if (n % RadixTrits == 0) RadixTrits else n % RadixTrits
+    var gv = 0L
+    while (it.hasNext) {
+      gv = gv * 3 + it.next()
+      left -= 1
+      if (left == 0) { groups(g) = gv; g += 1; gv = 0; left = RadixTrits }
+    }
+    fromSuperdigits(groups, n, targetLengthBytes)
+  }
+
+  /** Horner evaluation of `nTrits` trits folded most-significant first
+    * into base-3^19 groups (the first group holds `nTrits % 19` trits
+    * when that is not zero), written as fixed-width big-endian bytes
+    * like [[tritsToBytes]]. One multiply-add walk over base-2³² limbs
+    * per group (`dna_encoding.py:63-76`).
+    */
+  private[codec] def fromSuperdigits(groups: Array[Long], nTrits: Int,
+      targetLengthBytes: Int): Array[Byte] = {
+    var limbs = new Array[Int](nTrits / 16 + 2) // little-endian base-2^32
+    var used = 1
+    var gi = 0
+    while (gi < groups.length) {
+      val mult =
+        if (gi == 0 && nTrits % RadixTrits != 0) Pow3(nTrits % RadixTrits) else Radix
+      var carry = groups(gi)
       var j = 0
       while (j < used) {
         val cur = (limbs(j) & 0xffffffffL) * mult + carry
@@ -112,34 +147,21 @@ object Trits {
         carry = carry >>> 32
         used += 1
       }
-      gStart += g
+      gi += 1
     }
-    // little-endian limbs → big-endian bytes, minimal width
-    val bytes = new Array[Byte](used * 4)
-    var j = 0
-    while (j < used) {
-      val v = limbs(j)
-      val base = bytes.length - 4 * j
-      bytes(base - 1) = v.toByte
-      bytes(base - 2) = (v >>> 8).toByte
-      bytes(base - 3) = (v >>> 16).toByte
-      bytes(base - 4) = (v >>> 24).toByte
-      j += 1
-    }
-    val byteLength = math.max(1, targetLengthBytes)
-    val raw = bytes.dropWhile(_ == 0) match {
-      case a if a.isEmpty => Array[Byte](0)
-      case a              => a
-    }
-    val data =
-      if (raw.length < byteLength)
-        Array.fill[Byte](byteLength - raw.length)(0) ++ raw
-      else raw
-    if (data.length < targetLengthBytes)
-      Array.fill[Byte](targetLengthBytes - data.length)(0) ++ data
-    else if (data.length > targetLengthBytes && targetLengthBytes > 0)
-      data.takeRight(targetLengthBytes)
-    else data
+    @inline def byteAt(k: Int): Byte = // k-th byte from the least significant end
+      if (k / 4 < used) (limbs(k / 4) >>> (8 * (k % 4))).toByte else 0
+    val width =
+      if (targetLengthBytes > 0) targetLengthBytes
+      else {
+        var w = used * 4
+        while (w > 1 && byteAt(w - 1) == 0) w -= 1
+        w
+      }
+    val out = new Array[Byte](width)
+    var k = 0
+    while (k < width) { out(width - 1 - k) = byteAt(k); k += 1 }
+    out
   }
 
   /** Bit-string → trits (legacy path, `dna_encoding.py:78-104`; dead on

@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.udf
-import graft.codec.{DnaCodec, Goldman, ReedSolomon, Utf8Chunker}
+import graft.codec.{DnaChunk, DnaCodec, Goldman, ReedSolomon, Utf8Chunker}
 
 /** Spark column functions wrapping the pure DNA codec
   * (SURVEY.md §2.8 X2–X18). Scalar UDFs first (correctness layer);
@@ -20,24 +20,27 @@ object DnaFunctions {
       dna_sequence: String,
       ecc_hex: String)
 
+  private def chunkOut(c: DnaChunk): ChunkOut =
+    ChunkOut(c.chunkId, c.index, c.originalLengthBytes, c.checksum,
+      c.dnaSequence, DnaCodec.hex(c.errorCorrectionCode))
+
   /** Per-file report (the reference's process_text_file result,
-    * `dna_encoding.py:458-468`).
+    * `dna_encoding.py:458-468`) with the file's chunk rows.
     */
   case class ReportOut(
       original_checksum: String,
       reconstructed_checksum: String,
       n_chunks: Int,
       total_dna_bases: Long,
-      status: String)
+      status: String,
+      chunks: Seq[ChunkOut])
 
   /** text → array<chunk struct>: UTF-8-safe chunk + RS parity + MD5 +
-    * Goldman DNA, in one pass (`dna_encoding.py:270-335`).
+    * Goldman DNA, in one pass (`dna_encoding.py:270-335`). Encode only;
+    * the pipelines take their chunks from [[dnaProcessNative]]'s report.
     */
   def dnaChunks(chunkSize: Int, nsym: Int) = udf { (text: String) =>
-    DnaCodec.createDnaChunks(text, chunkSize, nsym).map { c =>
-      ChunkOut(c.chunkId, c.index, c.originalLengthBytes, c.checksum,
-        c.dnaSequence, c.errorCorrectionCode.map(b => f"${b & 0xff}%02x").mkString)
-    }
+    DnaCodec.createDnaChunks(text, chunkSize, nsym).map(chunkOut)
   }
 
   /** Fused encode→validate→reconstruct→report: the whole per-file
@@ -48,7 +51,7 @@ object DnaFunctions {
   def dnaProcess(chunkSize: Int, nsym: Int) = udf { (text: String) =>
     val r = DnaCodec.processText(text, chunkSize, nsym)
     ReportOut(r.originalChecksum, r.reconstructedChecksum, r.dnaChunksCount,
-      r.totalDnaBases, r.status)
+      r.totalDnaBases, r.status, r.chunks.map(chunkOut))
   }
 
   /** Native-expression form of [[dnaProcess]] (`graft.plans.DnaProcess`):

@@ -53,31 +53,27 @@ object DnaPipeline {
 
   /** Exploded chunk relation (X15 chunker → generator): one row per DNA
     * chunk with id/index/bytes/checksum/DNA/parity (`dag.py:551-563`).
-    * Built ONCE per (session, corpus, chunkSize, nsym) and persisted:
-    * the Goldman+RS encode is the pipeline's dominant compute, four
-    * queries (chunks/validate/reconstruct/stats) read the same rows,
-    * and at deployment scale this relation IS the stored chunk+meta
-    * sink (S8) — encode once, store, serve every downstream query from
-    * the stored table.
+    * An explode of the `chunks` column of [[fileReport]]'s cached
+    * relation: the Goldman+RS encode is the pipeline's dominant compute,
+    * and `dna_process` already builds every file's chunks (a file whose
+    * validation fails included), so the corpus is encoded once per
+    * (session, corpus, chunkSize, nsym) and the chunk consumers
+    * (chunks/validate/reconstruct/stats) read it from that cache.
     */
   def chunkRelation(s: SparkSession, d: String,
-      chunkSize: Int = ChunkSize, nsym: Int = Nsym): DataFrame =
-    chunkRelCache.getOrBuild(s, s"$chunkSize/$nsym#$d") {
-      import s.implicits._
-      discover(s, d)
-        .withColumn("chunk", explode(DnaFunctions.dnaChunks(chunkSize, nsym)($"text")))
-        .select($"doc_id", $"file_hash", $"chunk.*")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
-
-  private val chunkRelCache = new SessionCache[DataFrame](df =>
-    scala.util.Try(df.unpersist(blocking = false)))
+      chunkSize: Int = ChunkSize, nsym: Int = Nsym): DataFrame = {
+    import s.implicits._
+    fileReport(s, d, chunkSize, nsym)
+      .select($"doc_id", $"file_hash", explode($"chunks").as("chunk"))
+      .select($"doc_id", $"file_hash", $"chunk.*")
+  }
 
   /** Fused per-file report (§3.2): one narrow map produces the whole
-    * process_text_file result — no shuffle. Build-once like
-    * [[chunkRelation]] (dna_roundtrip and pipe_status_report both read
-    * it; it is the reference's per-file processing result, written once
-    * per file in `dag.py:723`).
+    * process_text_file result and the file's chunk rows — no shuffle.
+    * Built once per (session, corpus, chunkSize, nsym) and persisted:
+    * dna_roundtrip and pipe_status_report read its report columns,
+    * [[chunkRelation]] its `chunks`; it is the reference's per-file
+    * processing result, written once per file in `dag.py:723`.
     */
   def fileReport(s: SparkSession, d: String,
       chunkSize: Int = ChunkSize, nsym: Int = Nsym): DataFrame =

@@ -4,10 +4,11 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{BinaryType, DataType, IntegerType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, IntegerType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.codec.Goldman
+import graft.codec.{DnaCodec, Goldman}
 
 /** Native Catalyst expressions for the hot codec path (SURVEY.md §4.2
   * phase-2 promotion): `DnaEncode`/`DnaDecode` participate in
@@ -26,12 +27,12 @@ case class DnaEncode(child: Expression) extends UnaryExpression {
   override def prettyName: String = "dna_encode"
 
   override protected def nullSafeEval(input: Any): Any =
-    UTF8String.fromString(Goldman.bytesToDna(input.asInstanceOf[Array[Byte]]))
+    UTF8String.fromBytes(Goldman.bytesToDnaAscii(input.asInstanceOf[Array[Byte]]))
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, c =>
-      s"org.apache.spark.unsafe.types.UTF8String.fromString(" +
-        s"graft.codec.Goldman.bytesToDna($c))")
+      s"org.apache.spark.unsafe.types.UTF8String.fromBytes(" +
+        s"graft.codec.Goldman.bytesToDnaAscii($c))")
 
   override protected def withNewChildInternal(newChild: Expression): DnaEncode =
     copy(child = newChild)
@@ -68,7 +69,10 @@ case class DnaDecode(left: Expression, right: Expression)
 /** dna_process(text, chunk_size, nsym) → report struct: the fused
   * per-file encode→validate→reconstruct pipeline kernel
   * (`plugins/utils/dna_encoding.py:416-476`) as a native expression.
-  * This is the pipeline's codec-bound hot path; the codegen form keeps
+  * This is the pipeline's codec-bound hot path and the one place a file
+  * is encoded: the struct also carries the file's `chunks` (the S8
+  * chunk+meta rows, `dags/dag.py:551-563`), which the chunk consumers
+  * explode instead of encoding the text again. The codegen form keeps
   * it inside whole-stage codegen — the generated Java calls the static
   * kernel and receives an InternalRow directly, with no ScalaUDF
   * encoder boxing of the input string or the output struct per row.
@@ -97,6 +101,15 @@ case class DnaProcess(child: Expression, chunkSize: Int, nsym: Int)
 }
 
 object DnaProcess {
+  /** One chunk row: the same fields as the UDF form's `ChunkOut`. */
+  private val chunkSchema: StructType = StructType(Seq(
+    StructField("chunk_id", StringType),
+    StructField("idx", IntegerType, nullable = false),
+    StructField("chunk_nbytes", IntegerType, nullable = false),
+    StructField("checksum", StringType),
+    StructField("dna_sequence", StringType),
+    StructField("ecc_hex", StringType)))
+
   /** Same field names/order as the UDF form's `ReportOut`, so
     * `$"r.*"` call sites are interchangeable.
     */
@@ -105,16 +118,27 @@ object DnaProcess {
     StructField("reconstructed_checksum", StringType),
     StructField("n_chunks", IntegerType),
     StructField("total_dna_bases", LongType),
-    StructField("status", StringType)))
+    StructField("status", StringType),
+    StructField("chunks", ArrayType(chunkSchema))))
 
   /** Static kernel entry the generated Java calls directly. */
   def run(text: UTF8String, chunkSize: Int, nsym: Int): InternalRow = {
-    val r = graft.codec.DnaCodec.processText(text.toString, chunkSize, nsym)
+    val r = DnaCodec.processText(text.toString, chunkSize, nsym)
+    val chunks = r.encoded.map { c =>
+      new GenericInternalRow(Array[Any](
+        UTF8String.fromString(c.chunkId),
+        c.index,
+        c.nbytes,
+        UTF8String.fromBytes(DnaCodec.hexAscii(c.md5)),
+        UTF8String.fromBytes(c.dna),
+        UTF8String.fromBytes(DnaCodec.hexAscii(c.parity))))
+    }
     new GenericInternalRow(Array[Any](
       UTF8String.fromString(r.originalChecksum),
       UTF8String.fromString(r.reconstructedChecksum),
       r.dnaChunksCount,
       r.totalDnaBases,
-      UTF8String.fromString(r.status)))
+      UTF8String.fromString(r.status),
+      new GenericArrayData(chunks.toArray[Any])))
   }
 }

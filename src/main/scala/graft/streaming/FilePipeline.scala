@@ -11,7 +11,9 @@ import graft.functions.DnaFunctions
 /** The reference pipeline end-to-end (SURVEY.md §2.9/§3.1) as a
   * Structured Streaming job: file source → content-hash dedup →
   * fused DNA process → fan-out sinks, with the tracking table,
-  * dead-letter branch and status events.
+  * dead-letter branch and status events. Each file is encoded once per
+  * batch, by `dna_process`; its report struct carries the chunk rows
+  * that the chunk+meta sink writes.
   *
   * Reference mechanics re-expressed (T1–T5):
   *  - 30-min cron rescan (`dags/dag.py:39`) → file-source stream;
@@ -192,6 +194,9 @@ object FilePipeline {
       .join(tracked, Seq("file_hash"), "left_anti")
 
     // Fused per-file pipeline (no shuffle): encode→validate→reconstruct.
+    // The one encode of the batch: the chunk rows ride in the report
+    // and are lifted into their own cached column, so the chunk sink
+    // explodes them and the other sinks never read them from the cache.
     // Files over the size bound are failed without processing (the
     // dead-letter branch needs a deterministic trigger in tests too).
     val processed = fresh
@@ -205,6 +210,8 @@ object FilePipeline {
         when(!$"oversize",
           DnaFunctions.dnaProcessNative(files.sparkSession, cfg.chunkSize,
             cfg.errorCorrectionSymbols)($"content")))
+      .withColumn("chunks", $"r.chunks")
+      .withColumn("r", $"r".dropFields("chunks"))
       .withColumn("status",
         when($"oversize", lit("failed"))
           .when($"r.status" === "success" &&
@@ -246,9 +253,7 @@ object FilePipeline {
       // S8: per-chunk DNA + metadata sink, partitioned by file hash
       // (`dags/dag.py:540-569`), when a chunks dir is configured.
       if (dirs.chunks.nonEmpty)
-        ok.select($"file_hash", $"content")
-          .withColumn("chunk",
-            explode(DnaFunctions.dnaChunks(cfg.chunkSize, cfg.errorCorrectionSymbols)($"content")))
+        ok.select($"file_hash", explode($"chunks").as("chunk"))
           .select($"file_hash", $"chunk.chunk_id", $"chunk.idx",
             $"chunk.dna_sequence", $"chunk.checksum", $"chunk.ecc_hex",
             $"chunk.chunk_nbytes")

@@ -293,6 +293,177 @@ class CodecSpec extends AnyFunSuite {
     assert(r.totalDnaBases == r.chunks.map(_.dnaSequence.length).sum)
   }
 
+  // ---- table-driven kernels == slow oracles (bit identity) ----
+
+  /** The reference's arbitrary-precision base-3 conversion
+    * (`dna_encoding.py:47-76`), one divmod per trit.
+    */
+  private object Oracle {
+    def bytesToTrits(data: Array[Byte]): Seq[Int] = {
+      var v = BigInt(1, data)
+      if (v == 0) return Seq(0)
+      val out = scala.collection.mutable.ArrayBuffer.empty[Int]
+      while (v > 0) { out += (v % 3).toInt; v /= 3 }
+      out.reverse.toSeq
+    }
+
+    def tritsToBytes(trits: Seq[Int], target: Int): Seq[Byte] = {
+      val v = trits.foldLeft(BigInt(0))(_ * 3 + _)
+      val raw = v.toByteArray.dropWhile(_ == 0) match {
+        case a if a.isEmpty => Array[Byte](0)
+        case a              => a
+      }
+      if (target <= 0) raw.toSeq
+      else (Array.fill[Byte](math.max(0, target - raw.length))(0) ++ raw)
+        .takeRight(target).toSeq
+    }
+
+    private val Bases = "ACGT"
+
+    /** Linear scan over the alphabet minus the previous base. */
+    def tritsToDna(trits: Seq[Int]): String = {
+      var prev = ' '
+      trits.zipWithIndex.map { case (t, i) =>
+        val alphabet = if (i == 0) "ACG" else Bases.filter(_ != prev)
+        prev = alphabet(t)
+        prev
+      }.mkString
+    }
+
+    def dnaToTrits(dna: String): Seq[Int] = {
+      var prev = ' '
+      dna.toUpperCase.zipWithIndex.map { case (b, i) =>
+        val alphabet = if (i == 0) "ACG" else Bases.filter(_ != prev)
+        prev = b
+        math.max(alphabet.indexOf(b), 0)
+      }
+    }
+
+    /** Bitwise GF(2^8) product over 0x11d, apart from the codec's tables. */
+    private def mul(a: Int, b: Int): Int = {
+      var (x, y, r) = (a, b, 0)
+      while (y != 0) {
+        if ((y & 1) != 0) r ^= x
+        x <<= 1
+        if ((x & 0x100) != 0) x ^= 0x11d
+        y >>= 1
+      }
+      r
+    }
+
+    private def encodeBlock(block: Seq[Byte], nsym: Int): Seq[Byte] = {
+      var gen = Seq(1)
+      var root = 1
+      for (_ <- 0 until nsym) {
+        gen = (gen :+ 0).zip(0 +: gen.map(mul(_, root))).map { case (a, b) => a ^ b }
+        root = mul(root, 2)
+      }
+      val rem = (block.map(_ & 0xff) ++ Seq.fill(nsym)(0)).toArray
+      block.indices.foreach { i =>
+        val c = rem(i)
+        (1 to nsym).foreach(j => rem(i + j) ^= mul(gen(j), c))
+      }
+      block ++ rem.drop(block.length).map(_.toByte)
+    }
+
+    /** The reference's `protected[len(data):]` over the sub-block stream. */
+    def rsParity(data: Array[Byte], nsym: Int): Seq[Byte] = {
+      val k = 255 - nsym
+      val blocks = if (data.length <= k) Seq(data.toSeq) else data.toSeq.grouped(k).toSeq
+      blocks.flatMap(encodeBlock(_, nsym)).drop(data.length)
+    }
+  }
+
+  /** Random bytes of length 0 to 1100, some with leading zero bytes,
+    * some all zero.
+    */
+  private val byteArrays: Seq[Array[Byte]] = {
+    val rnd = new scala.util.Random(5)
+    Seq.tabulate(120) { i =>
+      val data = Array.fill[Byte](rnd.nextInt(1101))(rnd.nextInt(256).toByte)
+      i % 6 match {
+        case 0 => java.util.Arrays.fill(data, 0, math.min(rnd.nextInt(9), data.length), 0.toByte); data
+        case 1 => new Array[Byte](data.length)
+        case _ => data
+      }
+    } ++ Seq(Array.empty[Byte], Array[Byte](0), Array[Byte](0, 0, 1), Array.fill[Byte](1000)(-1))
+  }
+
+  test("base-3 kernels equal the BigInt oracle") {
+    byteArrays.foreach { data =>
+      val trits = Oracle.bytesToTrits(data)
+      assert(Trits.bytesToTrits(data).toSeq == trits, s"len ${data.length}")
+      for (target <- Seq(0, data.length, data.length + 3, math.max(1, data.length / 2)))
+        assert(Trits.tritsToBytes(trits, target).toSeq == Oracle.tritsToBytes(trits, target),
+          s"len ${data.length} target $target")
+    }
+  }
+
+  test("Goldman kernels equal the alphabet-scan oracle") {
+    byteArrays.foreach { data =>
+      val dna = Oracle.tritsToDna(Oracle.bytesToTrits(data))
+      assert(Goldman.bytesToDna(data) == dna, s"len ${data.length}")
+      assert(new String(Goldman.bytesToDnaAscii(data), "US-ASCII") == dna)
+      val bytes = Oracle.tritsToBytes(Oracle.dnaToTrits(dna), data.length)
+      assert(Goldman.dnaToBytes(dna, data.length).toSeq == bytes)
+      assert(Goldman.dnaAsciiToBytes(dna.getBytes("US-ASCII"), data.length).toSeq == bytes)
+      if (data.nonEmpty) assert(bytes == data.toSeq)
+    }
+    val rnd = new scala.util.Random(9)
+    for (_ <- 1 to 200) {
+      val trits = Seq.fill(rnd.nextInt(60))(rnd.nextInt(3))
+      assert(Goldman.tritsToDna(trits) == Oracle.tritsToDna(trits))
+    }
+  }
+
+  test("Goldman decode equals the oracle on lowercase, unknown and non-ASCII bases") {
+    val rnd = new scala.util.Random(11)
+    val alphabet = "ACGTacgtXN-?ßŉıé中😀".codePoints.toArray.toSeq
+    val inputs = Seq("", "T", "X", "XT", "acgt", "ACXT", "ßACG", "AßT", "ŉA", "ıT", "Ga😀Tc") ++
+      Seq.fill(300) {
+        val cps = Seq.fill(rnd.nextInt(50))(alphabet(rnd.nextInt(alphabet.length)))
+        new String(cps.toArray, 0, cps.length)
+      }
+    assert(Goldman.dnaToTrits("XT").toSeq == Seq(0, 3)) // T after an unknown base
+    inputs.foreach { dna =>
+      val trits = Oracle.dnaToTrits(dna)
+      assert(Goldman.dnaToTrits(dna).toSeq == trits, dna)
+      for (target <- Seq(0, 1, 4, 12))
+        assert(Goldman.dnaToBytes(dna, target).toSeq == Oracle.tritsToBytes(trits, target),
+          s"$dna target $target")
+    }
+  }
+
+  test("RS parity equals the reference's stream suffix for 1 to 5 sub-blocks") {
+    val rnd = new scala.util.Random(3)
+    val blockCounts = scala.collection.mutable.Set.empty[Int]
+    byteArrays.foreach { data =>
+      val nsym = Seq(2, 4, 10, 16, 32)(rnd.nextInt(5))
+      blockCounts += math.max(1, math.ceil(data.length.toDouble / (255 - nsym)).toInt)
+      val expected = Oracle.rsParity(data, nsym)
+      assert(ReedSolomon.parity(data, nsym).toSeq == expected, s"len ${data.length} nsym $nsym")
+      assert(ReedSolomon.encode(data, nsym).drop(data.length).toSeq == expected)
+    }
+    assert((1 to 5).forall(blockCounts), blockCounts)
+  }
+
+  test("hex encoder equals per-byte %02x formatting") {
+    byteArrays.take(20).foreach { data =>
+      assert(DnaCodec.hex(data) == data.map(b => f"${b & 0xff}%02x").mkString)
+    }
+    val all = Array.tabulate[Byte](256)(_.toByte)
+    assert(DnaCodec.md5Hex(all) ==
+      java.security.MessageDigest.getInstance("MD5").digest(all).map(b => f"${b & 0xff}%02x").mkString)
+  }
+
+  test("processText keeps a failing file's chunks and reports it as the reference does") {
+    val r = DnaCodec.processText("a😀b", 2, 4)
+    assert(r.status == "error" && r.dnaChunksCount == 0 && r.totalDnaBases == 0)
+    assert(r.chunks.map(c => (c.chunkId, c.dnaSequence, c.checksum, c.errorCorrectionCode.toSeq)) ==
+      DnaCodec.createDnaChunks("a😀b", 2, 4)
+        .map(c => (c.chunkId, c.dnaSequence, c.checksum, c.errorCorrectionCode.toSeq)))
+  }
+
   test("golden: reference sample files roundtrip byte-identically") {
     val inputDir = new java.io.File("/root/reference/data/input")
     val files = Option(inputDir.listFiles()).getOrElse(Array.empty)

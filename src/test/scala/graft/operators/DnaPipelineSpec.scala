@@ -83,12 +83,11 @@ class DnaPipelineSpec extends AnyFunSuite {
       while (sb.length < 640000) { sb.append(s"w$i "); i += 1 }
       sb.toString.substring(0, 640000)
     }
-    val chunks = spark.createDataset(Seq((0L, text))).toDF("doc_id", "text")
-      .withColumn("chunk",
-        explode(DnaFunctions.dnaChunks(DnaPipeline.ChunkSize, DnaPipeline.Nsym)($"text")))
-      .select($"doc_id", $"chunk.idx", $"chunk.dna_sequence", $"chunk.chunk_nbytes")
+    val chunks = graft.codec.DnaCodec
+      .createDnaChunks(text, DnaPipeline.ChunkSize, DnaPipeline.Nsym)
+      .map(c => DnaFunctions.ChunkSlice(0L, c.index, c.dnaSequence, c.originalLengthBytes))
+      .toDS()
       .repartition(8) // chunks scattered: partial aggregation must merge
-      .as[DnaFunctions.ChunkSlice]
     assert(chunks.count() == 10000)
     val recon = chunks.groupByKey(_.doc_id)
       .agg(DnaFunctions.ReconstructAggregator.toColumn.name("r"))

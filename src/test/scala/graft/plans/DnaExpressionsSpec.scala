@@ -80,6 +80,11 @@ class DnaExpressionsSpec extends AnyFunSuite {
     assert(native.columns.toSeq == viaUdf.columns.toSeq)
     assert(native.except(viaUdf).count() == 0)
     assert(viaUdf.except(native).count() == 0)
+    // the report's chunk rows are the encode-only chunk function's rows
+    val encodeOnly = df.select(
+      graft.functions.DnaFunctions.dnaChunks(64, 4)($"text").as("chunks"))
+    assert(native.select($"chunks").except(encodeOnly).count() == 0)
+    assert(encodeOnly.except(native.select($"chunks")).count() == 0)
     // null text -> null report struct, no NPE
     val n = Seq[String](null).toDF("text")
       .select(graft.functions.DnaFunctions.dnaProcessNative(spark, 64, 4)($"text").as("r"))

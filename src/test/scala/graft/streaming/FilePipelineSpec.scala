@@ -150,6 +150,100 @@ class FilePipelineSpec extends AnyFunSuite {
     assert(chunks.columns.toSet.contains("dna_sequence"))
   }
 
+  private def chunkDirs(): FilePipeline.Dirs = {
+    val dirs = freshDirs()
+    dirs.copy(chunks = Paths.get(dirs.checkpoint).getParent.resolve("chunks").toString)
+  }
+
+  /** A wave of mixed UTF-8 (1- to 4-byte code points), from one chunk
+    * to many at chunk size 64; returns the file texts.
+    */
+  private def mixedUtf8Wave(input: String): Seq[String] = {
+    Files.createDirectories(Paths.get(input))
+    val pieces = Seq("ascii words ", "é", "àçùñ ", "—", "中文", "😀", "\n")
+    val rnd = new scala.util.Random(17)
+    val texts = Seq.tabulate(10)(i =>
+      Seq.fill(1 + rnd.nextInt(30 * (i + 1)))(pieces(rnd.nextInt(pieces.size))).mkString)
+    texts.zipWithIndex.foreach { case (t, i) =>
+      Files.write(Paths.get(input, s"wave_$i.txt"), t.getBytes(StandardCharsets.UTF_8))
+    }
+    texts
+  }
+
+  test("chunk sink rows equal createDnaChunks of their file, field for field") {
+    import spark.implicits._
+    import graft.codec.DnaCodec
+    val dirs = chunkDirs()
+    val texts = mixedUtf8Wave(dirs.input)
+    FilePipeline.runBatch(spark, dirs,
+      FilePipeline.Config(chunkSize = 64, errorCorrectionSymbols = 4))
+    val written = spark.read
+      .schema("file_hash STRING, chunk_id STRING, idx INT, chunk_nbytes INT, " +
+        "checksum STRING, dna_sequence STRING, ecc_hex STRING")
+      .json(dirs.chunks)
+      .select("file_hash", "chunk_id", "idx", "chunk_nbytes", "checksum",
+        "dna_sequence", "ecc_hex")
+      .as[(String, String, Int, Int, String, String, String)].collect().toSeq
+    val expected = texts.flatMap { t =>
+      DnaCodec.createDnaChunks(t, 64, 4).map(c => (DnaCodec.md5HexUtf8(t), c.chunkId,
+        c.index, c.originalLengthBytes, c.checksum, c.dnaSequence,
+        c.errorCorrectionCode.map(b => f"${b & 0xff}%02x").mkString))
+    }
+    assert(expected.map(_._1).distinct.size == texts.size)
+    assert(expected.size > 2 * texts.size) // multi-chunk files are in the wave
+    assert(written.sorted == expected.sorted)
+  }
+
+  test("a batch evaluates the codec in exactly one plan") {
+    import org.apache.spark.sql.catalyst.expressions.{Expression, ScalaUDF}
+    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import scala.jdk.CollectionConverters._
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[LogicalPlan]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.optimizedPlan)
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    def isCodec(e: Expression): Boolean =
+      e.isInstanceOf[graft.plans.DnaProcess] || e.isInstanceOf[ScalaUDF]
+    def evaluates(p: LogicalPlan): Boolean = p.exists(_.expressions.exists(_.exists(isCodec)))
+    object physical extends AdaptiveSparkPlanHelper
+    def codecCalls(p: SparkPlan): Int = physical.collect(p) {
+      case node => node.expressions.map(_.collect { case e if isCodec(e) => e }.size).sum
+    }.sum
+    def cachedEvaluates(p: SparkPlan): Boolean = codecCalls(p) > 0
+    val dirs = chunkDirs()
+    mixedUtf8Wave(dirs.input)
+    spark.listenerManager.register(listener)
+    try {
+      FilePipeline.runBatch(spark, dirs,
+        FilePipeline.Config(chunkSize = 64, errorCorrectionSymbols = 4))
+      // listener events arrive asynchronously; the status-event write is the last plan
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!plans.asScala.exists(_.toString.contains(dirs.statusEvents)) &&
+          System.nanoTime() < deadline) Thread.sleep(50)
+    } finally spark.listenerManager.unregister(listener)
+    // a plan evaluates the codec if it calls it itself, or reads a cached
+    // relation that calls it and that no earlier plan has built
+    val built = java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[SparkPlan, java.lang.Boolean])
+    val evaluating = plans.asScala.toSeq.filter { p =>
+      val builds = p.collect {
+        case r: InMemoryRelation if cachedEvaluates(r.cachedPlan) => r.cachedPlan
+      }.filter(built.add)
+      evaluates(p) || builds.nonEmpty
+    }
+    assert(plans.size >= 5, plans.asScala.mkString("\n"))
+    assert(evaluating.size == 1, evaluating.mkString("\n---\n"))
+    // and that plan calls it once per row
+    assert(built.asScala.toSeq.map(codecCalls) == Seq(1), built)
+  }
+
   test("sample-input bootstrap fires only on an empty input dir") {
     val dirs = freshDirs()
     assert(FilePipeline.bootstrapSampleInput(dirs.input))
