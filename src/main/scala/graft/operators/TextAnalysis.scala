@@ -2295,18 +2295,19 @@ object TextAnalysis {
     // write and the contrib labeling (it ran twice — measured in the
     // r19 LifecycleTiming breakdown, where the slice train was 3.9 s
     // of the ~5 s incremental line); tf comes from the session-cached
-    // full-corpus relation filtered to the slice (trainPred is a
-    // doc_id predicate — every caller's split convention — and the
-    // tokenize kernel is deterministic, so the filtered cache rows ≡
-    // tokenizing the slice), sparing the train its own tokenize pass
-    // next to the scorer's.
+    // full-corpus relation cut to the slice's doc_ids (the tokenize
+    // kernel is deterministic, so those cache rows ≡ tokenizing the
+    // slice), sparing the train its own tokenize pass next to the
+    // scorer's. A semi-join, not a filter: trainPred may read any
+    // documents column (source, text, n_chars), and the cached
+    // relation holds only (doc_id, tok, tf).
     val ar = alphaR(docs)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       gateThresholds(ar).write.mode("overwrite")
         .parquet(s"$outDir/thresholds")
       appendNbContrib(s, outDir, docs, sign = 1L, mode = "overwrite",
-        tfOverride = Some(nbTf(s, d).filter(trainPred)),
+        tfOverride = Some(nbTf(s, d).join(ar.select("doc_id"), Seq("doc_id"), "left_semi")),
         alphaOverride = Some(ar))
     } finally ar.unpersist(blocking = false)
   }

@@ -3,7 +3,7 @@ package graft.streaming
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.functions.DnaFunctions
@@ -30,6 +30,22 @@ import graft.functions.DnaFunctions
   *  - Status events (`dags/dag.py:320-345`): append-only event table,
   *    latest-wins view — fixes the reference's lost-UPDATE quirk
   *    (SURVEY.md §7.4) while keeping the final-table contract.
+  *
+  * A micro-batch ([[processBatch]]) persists its processed frame once
+  * and writes every sink from that cache, in this order: output files
+  * (the action that builds the cache and counts each branch), reports,
+  * chunks, dead letters, status events, and the tracking upsert LAST.
+  * The order matters twice. The processed frame's plan reads the
+  * tracking table (the anti-join), and a parquet append to a path makes
+  * Spark re-plan and drop every cached frame that reads that path
+  * (`recacheByPath`): a sink written after the upsert would recompute
+  * the whole batch, and its anti-join would then find every file
+  * already tracked and write nothing. And a batch that dies before its
+  * upsert is replayed whole, so no file is tracked without its other
+  * sinks. There is no separate emptiness probe: a batch whose build
+  * counts no fresh row touches no sink, and a sink whose branch has no
+  * row is skipped. Every job of a batch carries its phase name in the
+  * [[PhaseProperty]] local property and in its job description.
   */
 object FilePipeline {
 
@@ -82,7 +98,10 @@ object FilePipeline {
     * is at-least-once on failure) cannot double-insert.
     */
   sealed trait TrackingStore extends Serializable {
-    /** Distinct `file_hash` of everything ever tracked. */
+    /** `file_hash` of every tracked row. Not deduplicated: a hash
+      * repeats only if a store holds it twice, and the left-anti join
+      * that reads this needs no distinct build side.
+      */
     def knownHashes(spark: SparkSession): DataFrame
     /** Idempotent append of
       * (file_hash, file_path, file_size, status, output_file) rows.
@@ -97,12 +116,15 @@ object FilePipeline {
     */
   final case class ParquetTracking(dir: String) extends TrackingStore {
     def knownHashes(spark: SparkSession): DataFrame =
+      // schema stated: inferring it runs a footer-reading job per batch
       if (Files.exists(Paths.get(dir)))
-        spark.read.parquet(dir).select("file_hash").distinct()
-      else spark.emptyDataFrame.withColumn("file_hash", lit(null).cast("string"))
-        .limit(0).select("file_hash")
+        spark.read.schema("file_hash STRING, file_path STRING, file_size BIGINT, " +
+          "processed_at TIMESTAMP, output_file STRING, status STRING")
+          .parquet(dir).select("file_hash")
+      else spark.emptyDataset(Encoders.STRING).toDF("file_hash")
     def upsert(spark: SparkSession, rows: DataFrame): Unit =
-      rows.select(col("file_hash"), col("file_path"), col("file_size"),
+      // one file per status and batch: every later batch reads them all
+      rows.coalesce(1).select(col("file_hash"), col("file_path"), col("file_size"),
         current_timestamp().as("processed_at"), col("status"), col("output_file"))
         .write.mode("append").partitionBy("status").parquet(dir)
   }
@@ -118,7 +140,7 @@ object FilePipeline {
     extends TrackingStore {
     def knownHashes(spark: SparkSession): DataFrame =
       graft.sources.JdbcTracking.read(spark, url, user, password, dialect)
-        .select("file_hash").distinct()
+        .select("file_hash")
     def upsert(spark: SparkSession, rows: DataFrame): Unit =
       graft.sources.JdbcTracking.upsert(rows, url, user, password, dialect)
   }
@@ -146,52 +168,63 @@ object FilePipeline {
     * projection (path, name, content hash, size).
     */
   def readFiles(spark: SparkSession, inputDir: String): DataFrame =
-    spark.readStream
-      .format("text")
-      .option("wholetext", "true")
-      .option("pathGlobFilter", "*.txt")
-      .load(inputDir)
-      .select(
-        col("_metadata.file_path").as("file_path"),
-        element_at(split(col("_metadata.file_path"), "/"), -1).as("filename"),
-        col("value").as("content"),
-        md5(to_binary(col("value"), lit("utf-8"))).as("file_hash"),
-        octet_length(col("value")).cast("long").as("file_size"))
+    fileRecords(spark.readStream.options(WholeTxt).text(inputDir))
 
   /** Batch form of the same source (the reference's non-streaming DAG
     * run over a directory).
     */
   def readFilesBatch(spark: SparkSession, inputDir: String): DataFrame =
-    spark.read
-      .format("text")
-      .option("wholetext", "true")
-      .option("pathGlobFilter", "*.txt")
-      .load(inputDir)
-      .select(
-        col("_metadata.file_path").as("file_path"),
-        element_at(split(col("_metadata.file_path"), "/"), -1).as("filename"),
-        col("value").as("content"),
-        md5(to_binary(col("value"), lit("utf-8"))).as("file_hash"),
-        octet_length(col("value")).cast("long").as("file_size"))
+    fileRecords(spark.read.options(WholeTxt).text(inputDir))
+
+  private val WholeTxt = Map("wholetext" -> "true", "pathGlobFilter" -> "*.txt")
+
+  private def fileRecords(text: DataFrame): DataFrame =
+    text.select(
+      col("_metadata.file_path").as("file_path"),
+      element_at(split(col("_metadata.file_path"), "/"), -1).as("filename"),
+      col("value").as("content"),
+      md5(to_binary(col("value"), lit("utf-8"))).as("file_hash"),
+      octet_length(col("value")).cast("long").as("file_size"))
+
+  /** Local property naming the FilePipeline phase a job belongs to:
+    * `filepipeline.build`, `.reports`, `.chunks`, `.dead_letter`,
+    * `.status` or `.tracking`.
+    */
+  val PhaseProperty = "graft.phase"
+
+  /** Runs `body` with its jobs tagged `name`: in [[PhaseProperty]], and
+    * appended to the job description (a streaming batch's own
+    * description stays in front). The job group is left alone: the
+    * streaming engine cancels a query through it.
+    */
+  private def phase[T](spark: SparkSession, name: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    val description = "spark.job.description"
+    val (prevPhase, prevDesc) = (sc.getLocalProperty(PhaseProperty),
+      sc.getLocalProperty(description))
+    sc.setLocalProperty(PhaseProperty, name)
+    sc.setLocalProperty(description, Option(prevDesc).fold(name)(d => s"$d\n$name"))
+    try body
+    finally {
+      sc.setLocalProperty(PhaseProperty, prevPhase)
+      sc.setLocalProperty(description, prevDesc)
+    }
+  }
 
   /** One micro-batch: dedup → process → fan-out. Also the per-run body
-    * of the batch entry point.
+    * of the batch entry point. Sink order and the empty-batch gate are
+    * set out on [[FilePipeline]].
     */
   def processBatch(spark: SparkSession, files: DataFrame, dirs: Dirs,
       cfg: Config = Config(), store: Option[TrackingStore] = None): Unit = {
     import spark.implicits._
 
-    // F4: empty-input gate (`dags/dag.py:816-821`) — nothing to do,
-    // touch no sink.
-    if (files.isEmpty) return
-
     val tracking = store.getOrElse(ParquetTracking(dirs.tracking))
 
     // J1/T2: anti-join on content hash against the tracking table.
-    val tracked: DataFrame = tracking.knownHashes(spark)
     val fresh = files
       .dropDuplicates("file_hash") // first occurrence within the batch wins
-      .join(tracked, Seq("file_hash"), "left_anti")
+      .join(tracking.knownHashes(spark), Seq("file_hash"), "left_anti")
 
     // Fused per-file pipeline (no shuffle): encode→validate→reconstruct.
     // The one encode of the batch: the chunk rows ride in the report
@@ -229,59 +262,87 @@ object FilePipeline {
       // S6: reconstructed text, one exact-named file per input
       // (`processed_{filename}`, dags/dag.py:577) — executor-side
       // writer; on a cluster this is a DFS client, locally java.nio.
-      Files.createDirectories(Paths.get(dirs.output))
+      // This action builds the cache; it also counts both branches,
+      // which is F4's empty-input gate (`dags/dag.py:816-821`).
+      val completedAcc = spark.sparkContext.longAccumulator
+      val failedAcc = spark.sparkContext.longAccumulator
       val outDir = dirs.output
-      ok.select($"filename", $"content").as[(String, String)]
-        .foreachPartition { it: Iterator[(String, String)] =>
-          it.foreach { case (name, text) =>
-            Files.write(Paths.get(outDir, s"processed_$name"),
-              text.getBytes(StandardCharsets.UTF_8))
+      phase(spark, "filepipeline.build") {
+        processed.select($"filename",
+          when($"status" === "completed", $"content").as("content"))
+          .as[(String, String)]
+          .foreachPartition { it: Iterator[(String, String)] =>
+            it.foreach {
+              case (_, null) => failedAcc.add(1)
+              case (name, text) =>
+                Files.createDirectories(Paths.get(outDir))
+                Files.write(Paths.get(outDir, s"processed_$name"),
+                  text.getBytes(StandardCharsets.UTF_8))
+                completedAcc.add(1)
+            }
           }
+      }
+      val (nCompleted, nFailed) = (completedAcc.sum, failedAcc.sum)
+
+      if (nCompleted > 0) {
+        // S7: per-file DNA report (nested JSON)
+        phase(spark, "filepipeline.reports") {
+          ok.select($"file_path", $"filename", $"file_hash",
+            $"r.original_checksum".as("original_checksum"),
+            $"r.reconstructed_checksum".as("reconstructed_checksum"),
+            $"r.n_chunks".as("dna_chunks_count"),
+            $"r.total_dna_bases".as("total_dna_bases"),
+            lit(cfg.chunkSize).as("chunk_size"),
+            lit(cfg.errorCorrectionSymbols).as("error_correction_symbols"),
+            current_timestamp().as("processed_at"))
+            .write.mode("append").json(dirs.reports)
         }
 
-      // S7: per-file DNA report (nested JSON)
-      ok.select($"file_path", $"filename", $"file_hash",
-        $"r.original_checksum".as("original_checksum"),
-        $"r.reconstructed_checksum".as("reconstructed_checksum"),
-        $"r.n_chunks".as("dna_chunks_count"),
-        $"r.total_dna_bases".as("total_dna_bases"),
-        lit(cfg.chunkSize).as("chunk_size"),
-        lit(cfg.errorCorrectionSymbols).as("error_correction_symbols"),
-        current_timestamp().as("processed_at"))
-        .write.mode("append").json(dirs.reports)
-
-      // S8: per-chunk DNA + metadata sink, partitioned by file hash
-      // (`dags/dag.py:540-569`), when a chunks dir is configured.
-      if (dirs.chunks.nonEmpty)
-        ok.select($"file_hash", explode($"chunks").as("chunk"))
-          .select($"file_hash", $"chunk.chunk_id", $"chunk.idx",
-            $"chunk.dna_sequence", $"chunk.checksum", $"chunk.ecc_hex",
-            $"chunk.chunk_nbytes")
-          .write.mode("append").partitionBy("file_hash").json(dirs.chunks)
+        // S8: per-chunk DNA + metadata sink, partitioned by file hash
+        // (`dags/dag.py:540-569`), when a chunks dir is configured.
+        if (dirs.chunks.nonEmpty) phase(spark, "filepipeline.chunks") {
+          ok.select($"file_hash", explode($"chunks").as("chunk"))
+            .select($"file_hash", $"chunk.chunk_id", $"chunk.idx",
+              $"chunk.dna_sequence", $"chunk.checksum", $"chunk.ecc_hex",
+              $"chunk.chunk_nbytes")
+            .write.mode("append").partitionBy("file_hash").json(dirs.chunks)
+        }
+      }
 
       // S10: dead-letter sink — error metadata + original payload;
       // dead-letter filename mirrors the reference's
       // `failed_{timestamp}_{filename}` (X19, dags/dag.py:294-296).
-      failed.select($"file_path", $"filename", $"file_hash", $"file_size",
-        $"error_message", $"content".as("payload"),
-        format_string("failed_%s_%s",
-          date_format(current_timestamp(), "yyyyMMdd_HHmmss"), $"filename")
-          .as("dead_letter_file"),
-        current_timestamp().as("failed_at"))
-        .write.mode("append").json(dirs.deadLetter)
+      if (nFailed > 0) phase(spark, "filepipeline.dead_letter") {
+        failed.select($"file_path", $"filename", $"file_hash", $"file_size",
+          $"error_message", $"content".as("payload"),
+          format_string("failed_%s_%s",
+            date_format(current_timestamp(), "yyyyMMdd_HHmmss"), $"filename")
+            .as("dead_letter_file"),
+          current_timestamp().as("failed_at"))
+          .write.mode("append").json(dirs.deadLetter)
+      }
 
-      // S9: tracking upsert (content-addressed; the anti-join above
-      // plus the store's own insert-if-absent keep ON CONFLICT DO
-      // NOTHING semantics) through the pluggable store
-      tracking.upsert(spark,
-        processed.select($"file_hash", $"file_path", $"file_size", $"status",
-          when($"status" === "completed",
-            concat(lit("processed_"), $"filename")).as("output_file")))
+      if (nCompleted + nFailed > 0) {
+        // S11/T4: status events, append-only
+        phase(spark, "filepipeline.status") {
+          processed.select($"file_hash", $"status",
+            current_timestamp().as("event_time"))
+            .coalesce(1) // a few bytes a file: one parquet file per batch
+            .write.mode("append").parquet(dirs.statusEvents)
+        }
 
-      // S11/T4: status events, append-only
-      processed.select($"file_hash", $"status",
-        current_timestamp().as("event_time"))
-        .write.mode("append").parquet(dirs.statusEvents)
+        // S9: tracking upsert (content-addressed; the anti-join above
+        // plus the store's own insert-if-absent keep ON CONFLICT DO
+        // NOTHING semantics) through the pluggable store. Last: its
+        // append re-plans every cached frame that reads the tracking
+        // table, `processed` included.
+        phase(spark, "filepipeline.tracking") {
+          tracking.upsert(spark,
+            processed.select($"file_hash", $"file_path", $"file_size", $"status",
+              when($"status" === "completed",
+                concat(lit("processed_"), $"filename")).as("output_file")))
+        }
+      }
     } finally processed.unpersist()
   }
 

@@ -25,7 +25,7 @@ class NbLifecycleSpec extends AnyFunSuite {
     * erasure must drop the vocabulary row); alpha ratios differ per
     * doc so the gate's percentile cut labels a real mix.
     */
-  private def fixture(): String = {
+  private def fixture(source: org.apache.spark.sql.Column = lit("spec")): String = {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("nblife").toString
     Seq(
@@ -36,7 +36,7 @@ class NbLifecycleSpec extends AnyFunSuite {
       (5L, "banana dog 99 88 77 66 55 44 33 22 11"))
       .toDF("doc_id", "text")
       .select($"doc_id", $"text", lit("en").as("lang"),
-        lit("spec").as("source"), length($"text").cast("long").as("n_chars"))
+        source.as("source"), length($"text").cast("long").as("n_chars"))
       .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
     tmp
   }
@@ -138,6 +138,18 @@ class NbLifecycleSpec extends AnyFunSuite {
     val (wI, pI) = TextAnalysis.readNbModel(spark, dirA)
     assert(pI == base._2 && weightsOf(wI) == base._1,
       "append-then-delete must be an exact involution")
+  }
+
+  test("a slice model may be cut by any documents column, not only doc_id") {
+    import spark.implicits._
+    val tmp = fixture(when($"doc_id" <= 3L, "web").otherwise("book"))
+    TextAnalysis.writeNbModel(spark, tmp, s"$tmp/bySource", $"source" === "web")
+    TextAnalysis.writeNbModel(spark, tmp, s"$tmp/byId", $"doc_id" <= 3L)
+    val (wS, pS) = TextAnalysis.readNbModel(spark, s"$tmp/bySource")
+    val (wI, pI) = TextAnalysis.readNbModel(spark, s"$tmp/byId")
+    assert(pS == pI)
+    assert(weightsOf(wS) == weightsOf(wI))
+    assert(!weightsOf(wS).contains("99"), "a token only the other slice carries")
   }
 
   test("an empty takedown batch is a no-op, not a crash") {

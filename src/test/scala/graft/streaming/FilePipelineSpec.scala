@@ -156,16 +156,18 @@ class FilePipelineSpec extends AnyFunSuite {
   }
 
   /** A wave of mixed UTF-8 (1- to 4-byte code points), from one chunk
-    * to many at chunk size 64; returns the file texts.
+    * to many at chunk size 64; returns the file texts. Waves of
+    * different seeds hold different content under different names.
     */
-  private def mixedUtf8Wave(input: String): Seq[String] = {
+  private def mixedUtf8Wave(input: String, seed: Int = 17): Seq[String] = {
     Files.createDirectories(Paths.get(input))
     val pieces = Seq("ascii words ", "é", "àçùñ ", "—", "中文", "😀", "\n")
-    val rnd = new scala.util.Random(17)
+    val rnd = new scala.util.Random(seed)
     val texts = Seq.tabulate(10)(i =>
-      Seq.fill(1 + rnd.nextInt(30 * (i + 1)))(pieces(rnd.nextInt(pieces.size))).mkString)
+      s"seed $seed " +
+        Seq.fill(1 + rnd.nextInt(30 * (i + 1)))(pieces(rnd.nextInt(pieces.size))).mkString)
     texts.zipWithIndex.foreach { case (t, i) =>
-      Files.write(Paths.get(input, s"wave_$i.txt"), t.getBytes(StandardCharsets.UTF_8))
+      Files.write(Paths.get(input, s"wave_${seed}_$i.txt"), t.getBytes(StandardCharsets.UTF_8))
     }
     texts
   }
@@ -174,9 +176,13 @@ class FilePipelineSpec extends AnyFunSuite {
     import spark.implicits._
     import graft.codec.DnaCodec
     val dirs = chunkDirs()
-    val texts = mixedUtf8Wave(dirs.input)
-    FilePipeline.runBatch(spark, dirs,
-      FilePipeline.Config(chunkSize = 64, errorCorrectionSymbols = 4))
+    val cfg = FilePipeline.Config(chunkSize = 64, errorCorrectionSymbols = 4)
+    // a first batch, then a later one read against its tracking table
+    val texts = Seq(17, 18).flatMap { seed =>
+      val t = mixedUtf8Wave(dirs.input, seed)
+      FilePipeline.runBatch(spark, dirs, cfg)
+      t
+    }
     val written = spark.read
       .schema("file_hash STRING, chunk_id STRING, idx INT, chunk_nbytes INT, " +
         "checksum STRING, dna_sequence STRING, ecc_hex STRING")
@@ -218,30 +224,123 @@ class FilePipelineSpec extends AnyFunSuite {
     }.sum
     def cachedEvaluates(p: SparkPlan): Boolean = codecCalls(p) > 0
     val dirs = chunkDirs()
-    mixedUtf8Wave(dirs.input)
-    spark.listenerManager.register(listener)
-    try {
-      FilePipeline.runBatch(spark, dirs,
-        FilePipeline.Config(chunkSize = 64, errorCorrectionSymbols = 4))
-      // listener events arrive asynchronously; the status-event write is the last plan
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!plans.asScala.exists(_.toString.contains(dirs.statusEvents)) &&
-          System.nanoTime() < deadline) Thread.sleep(50)
-    } finally spark.listenerManager.unregister(listener)
-    // a plan evaluates the codec if it calls it itself, or reads a cached
-    // relation that calls it and that no earlier plan has built
-    val built = java.util.Collections.newSetFromMap(
-      new java.util.IdentityHashMap[SparkPlan, java.lang.Boolean])
-    val evaluating = plans.asScala.toSeq.filter { p =>
-      val builds = p.collect {
-        case r: InMemoryRelation if cachedEvaluates(r.cachedPlan) => r.cachedPlan
-      }.filter(built.add)
-      evaluates(p) || builds.nonEmpty
+    // the first batch, then a later one whose anti-join reads the
+    // tracking table the first one wrote
+    for (seed <- Seq(17, 18)) {
+      mixedUtf8Wave(dirs.input, seed)
+      plans.clear()
+      spark.listenerManager.register(listener)
+      try {
+        FilePipeline.runBatch(spark, dirs,
+          FilePipeline.Config(chunkSize = 64, errorCorrectionSymbols = 4))
+        // listener events arrive asynchronously, in order: wait for a marker query
+        spark.range(1).toDF("plan_fence").collect()
+        val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+        while (!plans.asScala.exists(_.output.exists(_.name == "plan_fence")) &&
+            System.nanoTime() < deadline) Thread.sleep(50)
+      } finally spark.listenerManager.unregister(listener)
+      // a plan evaluates the codec if it calls it itself, or reads a cached
+      // relation that calls it and that no earlier plan has built
+      val built = java.util.Collections.newSetFromMap(
+        new java.util.IdentityHashMap[SparkPlan, java.lang.Boolean])
+      val evaluating = plans.asScala.toSeq.filter { p =>
+        val builds = p.collect {
+          case r: InMemoryRelation if cachedEvaluates(r.cachedPlan) => r.cachedPlan
+        }.filter(built.add)
+        evaluates(p) || builds.nonEmpty
+      }
+      assert(plans.size >= 6, plans.asScala.mkString("\n"))
+      assert(evaluating.size == 1, s"seed $seed:\n" + evaluating.mkString("\n---\n"))
+      // and that plan calls it once per row
+      assert(built.asScala.toSeq.map(codecCalls) == Seq(1), built)
     }
-    assert(plans.size >= 5, plans.asScala.mkString("\n"))
-    assert(evaluating.size == 1, evaluating.mkString("\n---\n"))
-    // and that plan calls it once per row
-    assert(built.asScala.toSeq.map(codecCalls) == Seq(1), built)
+  }
+
+  /** Jobs started while `body` runs, as (phase, description). Listener
+    * events arrive asynchronously, in order: a marker job is waited for,
+    * so every earlier job is in.
+    */
+  private def jobsDuring(body: => Unit): Seq[(Option[String], String)] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import scala.jdk.CollectionConverters._
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[java.util.Properties]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.add(e.properties)
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setLocalProperty("test.fence", "1")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty("test.fence", null)
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!jobs.asScala.exists(_.getProperty("test.fence") != null) &&
+          System.nanoTime() < deadline) Thread.sleep(20)
+    } finally sc.removeSparkListener(listener)
+    jobs.asScala.toSeq.filter(_.getProperty("test.fence") == null).map(p =>
+      (Option(p.getProperty(FilePipeline.PhaseProperty)),
+        Option(p.getProperty("spark.job.description")).getOrElse("")))
+  }
+
+  private def sinkFiles(dirs: FilePipeline.Dirs): Seq[String] =
+    Seq(dirs.output, dirs.reports, dirs.chunks, dirs.deadLetter, dirs.statusEvents,
+      dirs.tracking).map(Paths.get(_)).filter(Files.exists(_)).flatMap { d =>
+      Files.walk(d).toArray.map(_.asInstanceOf[Path]).filter(Files.isRegularFile(_))
+        .map(_.toString)
+    }.sorted
+
+  test("a later small batch runs at most 9 jobs, each named by its phase") {
+    import org.apache.spark.sql.streaming.Trigger
+    val dirs = chunkDirs()
+    val cfg = FilePipeline.Config(chunkSize = 64, errorCorrectionSymbols = 4)
+    def small(names: String*): Unit = names.foreach(n => Files.write(
+      Paths.get(dirs.input, s"$n.txt"), s"small file $n".getBytes(StandardCharsets.UTF_8)))
+    def drain(): Unit =
+      FilePipeline.run(spark, dirs, cfg, Trigger.AvailableNow()).awaitTermination()
+    Files.createDirectories(Paths.get(dirs.input))
+    small("a", "b")
+    drain()
+    assert(Files.exists(Paths.get(dirs.tracking)))
+
+    // 4 new files against an existing tracking table, no failures
+    val jobs = jobsDuring { small("c", "d", "e", "f"); drain() }
+    val phases = jobs.flatMap(_._1)
+    assert(jobs.nonEmpty && phases.size == jobs.size, s"jobs without a phase: $jobs")
+    assert(jobs.forall { case (p, desc) => desc.endsWith(p.get) }, jobs)
+    assert(jobs.size <= 9, jobs.mkString("\n"))
+    assert(!phases.contains("filepipeline.dead_letter"), phases)
+    assert(phases.distinct == Seq("filepipeline.build", "filepipeline.reports",
+      "filepipeline.chunks", "filepipeline.status", "filepipeline.tracking"), phases)
+
+    // an all-duplicate batch: renamed copies of tracked content
+    val before = sinkFiles(dirs)
+    Files.copy(Paths.get(dirs.input, "a.txt"), Paths.get(dirs.input, "copy_of_a.txt"))
+    Files.copy(Paths.get(dirs.input, "c.txt"), Paths.get(dirs.input, "copy_of_c.txt"))
+    val dupJobs = jobsDuring(drain())
+    assert(sinkFiles(dirs) == before)
+    assert(dupJobs.flatMap(_._1).distinct == Seq("filepipeline.build"), dupJobs)
+  }
+
+  test("every tracked file of a later batch gets its status event") {
+    // batch 2's sinks must read the cached batch, not a re-planned one
+    // whose anti-join already sees batch 2's own tracking rows
+    val dirs = freshDirs()
+    Files.createDirectories(Paths.get(dirs.input))
+    Files.write(Paths.get(dirs.input, "one.txt"), "first batch".getBytes)
+    FilePipeline.runBatch(spark, dirs)
+    Files.write(Paths.get(dirs.input, "two.txt"), "second batch".getBytes)
+    Files.write(Paths.get(dirs.input, "three.txt"), "second batch too".getBytes)
+    Files.write(Paths.get(dirs.input, "big.txt"), ("x" * 4096).getBytes)
+    FilePipeline.runBatch(spark, dirs, FilePipeline.Config(maxFileBytes = 1024))
+    import spark.implicits._
+    val tracked = spark.read.parquet(dirs.tracking)
+      .select("file_hash", "status").as[(String, String)].collect().toSet
+    val st = FilePipeline.currentStatus(spark, dirs.statusEvents)
+      .select("file_hash", "status").as[(String, String)].collect()
+    assert(tracked.size == 4)
+    assert(st.length == tracked.size && st.toSet == tracked)
+    assert(tracked.count(_._2 == "failed") == 1)
   }
 
   test("sample-input bootstrap fires only on an empty input dir") {

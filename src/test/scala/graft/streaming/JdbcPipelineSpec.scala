@@ -103,5 +103,10 @@ class JdbcPipelineSpec extends AnyFunSuite {
     assert(paths.exists(_.endsWith("/first.txt")) &&
       paths.exists(_.endsWith("/second.txt")) &&
       !paths.exists(_.contains("dup_of_first")), paths.toString)
+    // every JDBC row has its status event, drop 2's included
+    import spark.implicits._
+    val events = FilePipeline.currentStatus(spark, dirs.statusEvents)
+      .select("status").as[String].collect()
+    assert(events.toSeq == Seq("completed", "completed"), events.toSeq)
   }
 }
