@@ -322,10 +322,6 @@ object ReedSolomon {
     else Some((block.dropRight(nsym).map(_.toByte), errataPos))
   }
 
-  /** Error-only block decode (erasure-free fast surface). */
-  def decodeBlock(encoded: Array[Byte], nsym: Int): Option[Array[Byte]] =
-    decodeBlockErrata(encoded, nsym).map(_._1)
-
   /** Chunked erasure-aware decode+correct: inverse of [[encode]], with
     * erasure positions given in ENCODED-stream coordinates; returns
     * the corrected data and the stream-coordinate errata positions.

@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.udf
-import graft.codec.{DnaChunk, DnaCodec, Goldman, ReedSolomon, Utf8Chunker}
+import graft.codec.{DnaChunk, DnaCodec, Goldman, Utf8Chunker}
 
 /** Spark column functions wrapping the pure DNA codec
   * (SURVEY.md §2.8 X2–X18). Scalar UDFs first (correctness layer);
@@ -67,32 +67,12 @@ object DnaFunctions {
       org.apache.spark.sql.functions.lit(nsym))
   }
 
-  /** DNA sequence + original byte length → decoded UTF-8 text (null on
-    * malformed bytes, mirroring the reference's raising decode).
-    */
-  val dnaDecodeText = udf { (dna: String, nbytes: Int) =>
-    Utf8Chunker.decodeStrict(Goldman.dnaToBytes(dna, nbytes)).orNull
-  }
-
   /** Chunk integrity check (`dna_encoding.py:371-398`): decode,
     * strict-UTF-8, MD5-compare against the stored checksum.
     */
   val validateChunk = udf { (dna: String, nbytes: Int, checksum: String) =>
     val bytes = Goldman.dnaToBytes(dna, nbytes)
     Utf8Chunker.decodeStrict(bytes).isDefined && DnaCodec.md5Hex(bytes) == checksum
-  }
-
-  /** Ordered reconstruction from collected (index, dna, nbytes) structs
-    * (`dna_encoding.py:337-369`): sort by index, decode, concatenate.
-    * Library form for small groups; the grouped-query path uses
-    * [[ReconstructAggregator]], which never materializes a
-    * collect_list array per file.
-    */
-  val reconstructFromChunks = udf { (chunks: Seq[org.apache.spark.sql.Row]) =>
-    chunks.sortBy(_.getInt(0)).map { row =>
-      Utf8Chunker.decodeStrict(
-        Goldman.dnaToBytes(row.getString(1), row.getInt(2))).getOrElse("�")
-    }.mkString
   }
 
   /** One exploded chunk keyed by its file, as the typed input of the
@@ -131,18 +111,6 @@ object DnaFunctions {
       org.apache.spark.sql.Encoders.STRING
   }
 
-  /** Goldman scalar codecs as columns (X6–X8). */
-  val dnaEncodeBytes = udf { (data: Array[Byte]) => Goldman.bytesToDna(data) }
-  val dnaDecodeBytes = udf { (dna: String, n: Int) => Goldman.dnaToBytes(dna, n) }
+  /** Homopolymer check as a column (X9). */
   val hasHomopolymers = udf { (dna: String) => Goldman.hasHomopolymers(dna) }
-
-  /** RS parity suffix as bytes (X10, `dna_encoding.py:232-248,324`). */
-  def rsParity(nsym: Int) = udf { (data: Array[Byte]) => ReedSolomon.parity(data, nsym) }
-
-  /** RS decode+correct (X11 — dead code in the reference pipeline but
-    * part of its public codec surface; here a usable repair operator).
-    */
-  def rsDecode(nsym: Int) = udf { (encoded: Array[Byte]) =>
-    ReedSolomon.decode(encoded, nsym).orNull
-  }
 }

@@ -234,7 +234,7 @@ object Dedup {
     // restructure (window offset outer, position inner, so inner
     // iterations carry no dependency chain) was measured WITHIN NOISE
     // of this form across alternating warm rounds (0.6–1.15×,
-    // graft.tools.CdcKernelTiming, same-process A/B, r19): successive
+    // same-process A/B, OPTIMIZATION_r19.md item 4): successive
     // positions' 16-step chains are already independent of each
     // other, so the out-of-order core overlaps them from the reorder
     // buffer, and the restructure's 8n-byte hash-array round trip per
@@ -1081,16 +1081,6 @@ object Dedup {
       when(col(s"b$i") > 0, shiftleft(lit(1L), i)).otherwise(lit(0L)))
       .reduce((a, b) => a.bitwiseOR(b))
     sums.select($"doc_id", fp.as("simhash"))
-  }
-
-  /** Cosine similarity between two float-array columns, computed in
-    * double precision with left-to-right accumulation (matches the
-    * oracle's arithmetic). Prefer the precomputed-norm form
-    * (`VectorFunctions.cosineFrom`) inside pair joins.
-    */
-  def cosine(a: Column, b: Column): Column = {
-    import graft.functions.VectorFunctions._
-    cosineFrom(dot(a, b), norm(a), norm(b))
   }
 
   val JaccardThreshold = 0.6

@@ -589,16 +589,13 @@ object Lexical {
     bm25For(s, Similarity.resolveCurrentVersion(s, root), queries, k,
       termCap)
 
-  /** Append into the LIVE version (additive files + the stats swap;
-    * concurrent readers are at worst snapshot-stale — the
-    * appendToLshIndexVersioned contract; the lexical append's own
-    * crash-window/repair discipline applies within the version dir).
+  /** Tombstone doc ids in the live version (id-sized append).
+    * Single writer: a tombstone that races a
+    * [[compactLexIndexVersioned]] can be lost, because the compaction
+    * folds the version it resolved and cuts over to a new one that
+    * never sees a later append to the old. The versioned root makes
+    * readers atomic against a writer, not writers against each other.
     */
-  def appendToLexIndexVersioned(s: SparkSession, root: String,
-      docs: DataFrame): Unit =
-    appendToLexIndex(s, Similarity.resolveCurrentVersion(s, root), docs)
-
-  /** Tombstone doc ids in the live version (id-sized append). */
   def deleteFromLexIndexVersioned(s: SparkSession, root: String,
       docIds: DataFrame): Unit =
     deleteFromLexIndex(s, Similarity.resolveCurrentVersion(s, root), docIds)

@@ -1996,7 +1996,8 @@ object Multimodal {
     * sliced, plus the media family's transient multiplier for the
     * derived pass count. MEASURED on the media-dense fixture chain
     * (tools/make_media_dense.py, the family's duplication shape;
-    * same-process A/B via graft.tools.MediaSlicedTiming, r19): at
+    * same-process A/B, OPTIMIZATION_r19.md "Evidence: the sliced
+    * media pair build"): at
     * md100 (500k rows / ~59 MB documents listing, 100× exact
     * duplication) the monolithic build peaked at 3.8 GB transient
     * (≈64× the listing) vs 2.4 GB sliced — far below the jaccard

@@ -1075,8 +1075,8 @@ object Relational {
     // the projected batch feeds THREE actions (the clustered events
     // write, then the cb and cbu sidecar aggregates): unpersisted,
     // each re-scanned the source events and re-derived bkt/day
-    // (measured in the r19 LifecycleTiming breakdown — the layout
-    // write was 2.3 s of the purged line). Narrow (4 columns);
+    // (measured in the r19 lifecycle breakdown, OPTIMIZATION_r19.md —
+    // the layout write was 2.3 s of the purged line). Narrow (4 columns);
     // persist across the actions of this one maintenance op.
     val batch = batch0.select(col("user_id"), col("ts_ms"))
       .withColumn("bkt", expr(floorDivSql("ts_ms", B)))
@@ -1189,7 +1189,7 @@ object Relational {
     // subtraction's semi-join, the cbu anti-join): unpersisted, each
     // re-evaluated the caller's derivation — for the declared purged
     // query that was a full events scan + distinct PER USE (measured,
-    // r19 LifecycleTiming). Ids are takedown-request-sized; persist
+    // r19 lifecycle breakdown). Ids are takedown-request-sized; persist
     // across the actions of this one maintenance op.
     val ids = userIds
       .select(col(userIds.columns.head).cast("long").as("user_id"))
@@ -1261,7 +1261,7 @@ object Relational {
     // final owner join), and Spark does not dedupe common subplans —
     // unpersisted, each consumer re-ran the events scan + sessionize
     // window (measured: the serve was 1.7 s of the purged line, r19
-    // LifecycleTiming). The probe collect materializes the plan at
+    // lifecycle breakdown). The probe collect materializes the plan at
     // build time regardless (this serve is never a fully-lazy
     // declared plan), so pin the slice-sized session relation once
     // (localCheckpoint: serve-slice sessions, orders below the event

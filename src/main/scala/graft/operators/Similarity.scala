@@ -1219,41 +1219,6 @@ object Similarity {
     else df
   }
 
-  /** Uncompressed byte size of a scan's parquet source (row-group
-    * metadata summed off the footers — no Spark job), for sizing the
-    * [[widenIfStarved]] work estimate of text/decode kernels whose
-    * per-row cost is byte-proportional rather than a fixed
-    * vector-arithmetic count. Long.MaxValue when unknown/many-file
-    * (those layouts are wide already, so the widen is moot).
-    */
-  private[operators] def scanBytes(s: SparkSession, df: DataFrame): Long = {
-    val files = df.inputFiles
-    if (files.isEmpty || files.length > 64) Long.MaxValue
-    else
-      try {
-        val conf = s.sparkContext.hadoopConfiguration
-        files.map { f =>
-          val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-            new org.apache.hadoop.fs.Path(f), conf)
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-          try {
-            var total = 0L
-            r.getRowGroups.forEach(rg => total += rg.getTotalByteSize)
-            total
-          } finally r.close()
-        }.sum
-      } catch { case scala.util.control.NonFatal(_) => Long.MaxValue }
-  }
-
-  /** Rough multiply-add-equivalents per input byte for a tokenize /
-    * hash / decode kernel (FNV per char, split scanning, histogram
-    * accumulation are all a few ops per byte) — with
-    * [[AssignRepartitionFlops]] this widens byte-heavy scans only
-    * past ~6 MB of text per missing core, so bench-SF single-digit-MB
-    * corpora keep their exchange-free plans.
-    */
-  private[operators] val TextKernelFlopsPerByte = 32.0
-
   def ivfAssignments(s: SparkSession, d: String,
       cents: Array[(Long, Array[Float], Double)],
       assign: Int = IvfAssign): DataFrame =
@@ -1981,17 +1946,30 @@ object Similarity {
       fc.rename(tmp, ptr, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
     }
     // retired versions are immutable, so recency by modification time
-    // orders generations; the live version is kept unconditionally
-    val vers = fs.listStatus(new org.apache.hadoop.fs.Path(root))
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("v_"))
+    // orders generations; the live version is kept unconditionally.
+    // Only a full version name counts: a builder's `v_…_staging` dir
+    // takes no keep slot. A staging dir older than every kept version
+    // is a crashed builder's leftover (one writer at a time, so no
+    // build is staging while this cutover runs) and goes with the
+    // retired versions.
+    val dirs = fs.listStatus(new org.apache.hadoop.fs.Path(root))
+      .filter(_.isDirectory)
+    val vers = dirs.filter(st => VersionName.matches(st.getPath.getName))
     val keep = vers.sortBy(-_.getModificationTime)
       .take(keepRetired + 1).map(_.getPath.getName).toSet + version
-    vers.filter(st => !keep.contains(st.getPath.getName))
-      .foreach(st => fs.delete(st.getPath, true))
+    val (kept, retired) = vers.partition(st => keep.contains(st.getPath.getName))
+    val horizon = kept.map(_.getModificationTime).minOption
+    val leftovers = dirs.filter(st => StagingName.matches(st.getPath.getName) &&
+      horizon.exists(st.getModificationTime < _))
+    (retired ++ leftovers).foreach(st => fs.delete(st.getPath, true))
   }
 
   private[operators] def freshVersionName(): String =
     s"v_${java.util.UUID.randomUUID().toString.replace("-", "").take(12)}"
+
+  /** The names [[freshVersionName]] makes, and nothing else. */
+  private val VersionName = "v_[0-9a-f]{12}".r
+  private val StagingName = "v_[0-9a-f]{12}_staging".r
 
   /** Build an LSH index under a VERSIONED root: the layout lands in a
     * fresh version dir, then the pointer cuts over — an existing
@@ -2013,17 +1991,14 @@ object Similarity {
     topkLshStored(s, d, resolveCurrentVersion(s, root), k, multiprobe,
       pushdownCap)
 
-  /** Append into the LIVE version (parquet files are immutable and
-    * the append is additive, so concurrent readers are at worst
-    * snapshot-stale — they miss the new files they never listed).
-    */
-  def appendToLshIndexVersioned(s: SparkSession, root: String,
-      batch: DataFrame): Unit =
-    appendToLshIndex(s, resolveCurrentVersion(s, root), batch)
-
   /** Tombstone ids in the LIVE version (id-sized append — the
     * [[deleteFromIndex]] contract; a reader that listed the tombstone
     * relation before the append is snapshot-stale for its lifetime).
+    * Single writer: a tombstone that races a versioned compaction can
+    * be lost, because the compaction folds the version it resolved and
+    * cuts over to a new one that never sees a later append to the old.
+    * The versioned root makes readers atomic against a writer, not
+    * writers against each other.
     */
   def deleteFromIndexVersioned(s: SparkSession, root: String,
       ids: DataFrame): Unit =
@@ -2074,14 +2049,6 @@ object Similarity {
   def topkIvfVersioned(s: SparkSession, d: String, root: String,
       k: Int = TopK, nprobe: Int = -1, assign: Int = IvfAssign): DataFrame =
     topkIvfStored(s, d, resolveCurrentVersion(s, root), k, nprobe, assign)
-
-  /** Append into the live IVF version (frozen-quantizer assignment,
-    * the [[appendToIvfIndex]] contract; readers are at worst
-    * snapshot-stale).
-    */
-  def appendToIvfIndexVersioned(s: SparkSession, root: String,
-      batch: DataFrame, assign: Int = IvfAssign): Unit =
-    appendToIvfIndex(s, resolveCurrentVersion(s, root), batch, assign)
 
   /** Compact a versioned IVF root with zero reader disruption: the
     * tombstone-folded assignments land in a NEW version dir, its

@@ -1195,7 +1195,7 @@ object TextAnalysis {
       // GROUPING SETS ((source, len), (len)) — ONE scan+tokenize pass
       // feeds both scopes (a naive per-source histogram re-aggregated
       // for the TOTAL row duplicates the corpus scan in the DAG;
-      // measured by ExplainAudit, two FileScans → one); grouping()
+      // measured on the explain plan, two FileScans → one); grouping()
       // marks the all-sources rows, surfaced as the '*' scope
       val hist = Tables.documents(s, d)
         .select($"source",
@@ -2244,7 +2244,8 @@ object TextAnalysis {
     // the label relation feeds TWO actions (the counts write and the
     // scalars aggregate): unpersisted, each re-ran the alpha_r regex
     // pass over the batch (measured — the slice train paid alpha_r
-    // 3x, r19 LifecycleTiming). It is (doc_id, label), docs-sized and
+    // 3x, r19 lifecycle breakdown, OPTIMIZATION_r19.md). It is
+    // (doc_id, label), docs-sized and
     // narrow; persist across the two actions and drop before return.
     val labeled = alphaOverride.getOrElse(alphaR(docs))
       .join(broadcast(thr), Seq("source"))
@@ -2293,7 +2294,8 @@ object TextAnalysis {
     val docs = Tables.documents(s, d).filter(trainPred)
     // ONE alpha_r regex pass over the slice, shared by the thresholds
     // write and the contrib labeling (it ran twice — measured in the
-    // r19 LifecycleTiming breakdown, where the slice train was 3.9 s
+    // r19 lifecycle breakdown, OPTIMIZATION_r19.md, where the slice
+    // train was 3.9 s
     // of the ~5 s incremental line); tf comes from the session-cached
     // full-corpus relation cut to the slice's doc_ids (the tokenize
     // kernel is deterministic, so those cache rows ≡ tokenizing the

@@ -845,14 +845,6 @@ object IvfKernels {
     math.min(size + 1, n)
   }
 
-  /** Measurement-only instrumentation (graft.tools.HierProbe): when
-    * the flag is on, every member scan bumps the adder. Off by
-    * default; the per-member branch compares a static field — noise
-    * next to the d-length dot loop it gates.
-    */
-  @volatile private[graft] var countScans = false
-  private[graft] val scannedMembers = new java.util.concurrent.atomic.LongAdder
-
   def nearestCells(emb: ArrayData, centsObj: Object, hierObj: Object,
       n: Int): ArrayData = {
     // Object-typed like cents: the nested class's binary name
@@ -884,7 +876,6 @@ object IvfKernels {
     var size = 0
 
     def scanMember(c: Int): Unit = {
-      if (countScans) scannedMembers.increment()
       val (cid, cv, cn) = cents(c)
       var dot = 0.0
       var j = 0

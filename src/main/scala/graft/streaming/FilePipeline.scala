@@ -67,14 +67,17 @@ object FilePipeline {
     def parse(s: String): Option[Status] = all.find(_.name == s)
   }
 
-  /** The five reference config knobs (`dags/dag.py:661-667`) plus the
-    * engine's own failure-injection bound.
+  /** The reference's codec knobs (`dags/dag.py:661-667`: chunk size and
+    * RS parity symbols, same defaults) plus the engine's own
+    * failure-injection bound. The reference's `max_retries` and
+    * `circuit_breaker_threshold` have no field: a failed task is retried
+    * by Spark (`spark.task.maxFailures`), and a batch that dies is
+    * replayed whole from the streaming checkpoint. The input directory
+    * is [[Dirs.input]].
     */
   case class Config(
       chunkSize: Int = 1000,
       errorCorrectionSymbols: Int = 10,
-      maxRetries: Int = 3,
-      circuitBreakerThreshold: Int = 5,
       maxFileBytes: Long = 16L * 1024 * 1024)
 
   case class Dirs(

@@ -199,16 +199,6 @@ object VecStream {
           batch.toDF(), d, indexDir, k))
       }.start()
 
-  /** Maintain the stored BQ signatures from a stream of new vectors —
-    * stateless encode, pure append.
-    */
-  def appendStreamBq(vectors: DataFrame, indexDir: String): StreamingQuery =
-    vectors.writeStream
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        graft.operators.Bq.appendToBqIndex(batch.sparkSession, indexDir,
-          batch.toDF())
-      }.start()
-
   /** Maintain the stored residual-PQ codes from a stream of new
     * vectors: frozen coarse quantizer + frozen means + frozen
     * codebooks ([[graft.operators.Pq.appendToResPqIndex]]); the IVF

@@ -121,11 +121,14 @@ class LexVersionedSpec extends AnyFunSuite {
     }, "lex-versioned-reader")
     reader.start()
     try {
-      // three full cutovers while the reader loops — under the
+      // two full cutovers while the reader loops — under the
       // in-place triple swap this window transiently 404s directories
       // or mixes old stats with new postings; under the versioned
-      // root every resolve serves one complete snapshot
-      for (_ <- 0 until 3) Lexical.compactLexIndexVersioned(spark, root)
+      // root every resolve serves one complete snapshot. Two, not
+      // three: retention keeps the live version and two retired ones,
+      // so a third cutover may sweep the version a slow probe resolved
+      // before the first (the stated residual, not what this pins)
+      for (_ <- 0 until 2) Lexical.compactLexIndexVersioned(spark, root)
     } finally {
       stop.set(true)
       reader.join(120000)

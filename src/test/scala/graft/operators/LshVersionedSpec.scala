@@ -181,4 +181,45 @@ class LshVersionedSpec extends AnyFunSuite {
     assert(reads >= 1)
     assert(probeIvf(root) == expected)
   }
+
+  test("retention counts only full version names and sweeps only stale staging dirs") {
+    import java.nio.file.Files
+    val root = Files.createTempDirectory("verretain").resolve("root")
+    // retention orders dirs by mtime; back-to-back cutovers can share
+    // one fs timestamp tick, so each dir gets its own second
+    var clock = System.currentTimeMillis() - 600000
+    def stamp(dir: java.nio.file.Path): Unit = {
+      clock += 1000
+      Files.setLastModifiedTime(dir,
+        java.nio.file.attribute.FileTime.fromMillis(clock))
+    }
+    def cut(): String = {
+      val name = Similarity.freshVersionName()
+      stamp(Files.createDirectories(root.resolve(name)))
+      Similarity.cutVersion(spark, root.toString, name)
+      name
+    }
+    def staging(name: String): java.nio.file.Path = {
+      val dir = root.resolve(name)
+      Files.createDirectories(dir)
+      Files.write(dir.resolve("part-0"), Array[Byte](1))
+      stamp(dir)
+      dir
+    }
+    // a crashed builder's leftover, older than every version to come
+    val stale = staging("v_0123456789ab_staging")
+    val first = (1 to 3).map(_ => cut())
+    assert(!Files.exists(stale),
+      "a staging dir older than every kept version must be swept")
+    // a builder still staging: newer than the oldest kept version
+    val fresh = staging("v_ba9876543210_staging")
+    val last = cut()
+    assert(Similarity.resolveCurrentVersion(spark, root.toString) ==
+      s"$root/$last")
+    val dirs = Files.list(root).toArray.map(_.asInstanceOf[java.nio.file.Path])
+      .filter(Files.isDirectory(_)).map(_.getFileName.toString).toSet
+    assert(dirs == first.drop(1).toSet + last + fresh.getFileName.toString,
+      "live + 2 retired versions and the fresh staging dir must remain")
+    assert(Files.exists(fresh.resolve("part-0")))
+  }
 }
