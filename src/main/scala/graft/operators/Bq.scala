@@ -69,7 +69,7 @@ object Bq {
 
   def topkBq(s: SparkSession, d: String, k: Int = Similarity.TopK,
       candidates: Int = BqCandidates): DataFrame =
-    bqProbe(s, d, bqIndex(s, d), k, candidates)
+    bqProbe(s, d, bqIndex(s, d), k, candidates, Pq.queryRelation(s, d))
 
   /** The probe against a GIVEN signature relation — shared by the
     * session-cached and stored paths (the pqProbe convention). Shape
@@ -81,10 +81,9 @@ object Bq {
     * on n_id in the shared tail).
     */
   private def bqProbe(s: SparkSession, d: String, idx: DataFrame, k: Int,
-      candidates: Int, queries: Option[DataFrame] = None): DataFrame = {
+      candidates: Int, queries: DataFrame): DataFrame = {
     import s.implicits._
-    val qRows = queries.getOrElse(Pq.queryRelation(s, d))
-      .select($"q_id", $"q_emb")
+    val qRows = queries.select($"q_id", $"q_emb")
       .as[(Long, Array[Float])].collect().sortBy(_._1)
     val qIds = qRows.map(_._1)
     val qSigs = qRows.map(r => signature(scala.collection.immutable.ArraySeq.unsafeWrapArray(r._2)))
@@ -126,8 +125,7 @@ object Bq {
   def topkBqStoredFor(s: SparkSession, queries: DataFrame, d: String,
       indexDir: String, k: Int = Similarity.TopK,
       candidates: Int = BqCandidates): DataFrame =
-    bqProbe(s, d, readBqSigs(s, indexDir), k, candidates,
-      Some(queries))
+    bqProbe(s, d, readBqSigs(s, indexDir), k, candidates, queries)
 
   /** The stored signature relation, minus any tombstoned ids — the
     * shared takedown seam (Similarity.deleteFromIndex /
@@ -146,7 +144,7 @@ object Bq {
 
   def topkBqStored(s: SparkSession, d: String, indexDir: String,
       k: Int = Similarity.TopK, candidates: Int = BqCandidates): DataFrame =
-    bqProbe(s, d, readBqSigs(s, indexDir), k, candidates)
+    topkBqStoredFor(s, Pq.queryRelation(s, d), d, indexDir, k, candidates)
 
   /** Append new vectors' signatures — stateless encode, pure append
     * (single-writer, disjoint ids, the shared append conventions).

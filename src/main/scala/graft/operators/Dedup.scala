@@ -2011,9 +2011,10 @@ object Dedup {
     * Streamed-takedown contract: the layout IS an IVF index and its
     * tombstone relation is the shared ANN one
     * ([[Similarity.deleteFromIndex]]), so the streamed erasure feed
-    * is [[graft.streaming.VecStream.deleteStream]] pointed at this
-    * directory — the semantic family needs no takedown stream of its
-    * own, and batch/stream erasure share one kernel by construction.
+    * is [[graft.streaming.MicroBatch.start]] over
+    * [[Similarity.deleteFromIndex]] pointed at this directory — the
+    * semantic family needs no takedown stream of its own, and
+    * batch/stream erasure share one kernel by construction.
     */
   def writeSemanticIndex(s: SparkSession, d: String, outDir: String): Unit =
     Similarity.writeIvfIndexOf(s,

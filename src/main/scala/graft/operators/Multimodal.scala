@@ -1695,7 +1695,7 @@ object Multimodal {
     // empty takedown batch (a feed trigger with no matching media) is
     // a NO-OP, not a tombstone append + full groups rewrite — the
     // deleteFromNbModel convention; without this, a streamed takedown
-    // feed (phashGroupsDeleteStream) pays a distinct-hash-sized
+    // feed (MicroBatch.start over this) pays a distinct-hash-sized
     // rewrite per empty trigger
     if (ids.isEmpty) return
     ids.coalesce(1).write.mode("append")

@@ -370,31 +370,24 @@ object Pq {
       OpqIndex(perm, PqIndex(cb, codes))
     }
 
-  /** The declared query set with PERMUTED coordinates (norms from the
-    * originals — permutation preserves them, and the exact re-rank
-    * wants the original-space convention).
-    */
-  private def opqQueries(s: SparkSession, d: String,
-      perm: Array[Int]): DataFrame = {
-    import s.implicits._
-    import graft.functions.VectorFunctions
-    Tables.embeddings(s, d)
-      .filter($"vec_id" % Similarity.QueryStride === 0)
-      .select($"vec_id".as("q_id"),
-        permutedCol(perm, $"embedding").as("q_emb"),
-        VectorFunctions.norm($"embedding").as("q_nrm"))
-  }
-
   /** The OPQ probe: the PQ probe with PERMUTED query coordinates (the
     * LUTs dot permuted q-slices against codewords trained in permuted
     * space); candidates re-rank by exact cosine on ORIGINAL vectors.
+    * `queries` (q_id, q_emb, q_nrm) arrive in ORIGINAL coordinates and
+    * are permuted here, so callers never handle transformed ones; the
+    * norms carry over, since a permutation preserves them.
     */
-  def topkOpq(s: SparkSession, d: String, k: Int = Similarity.TopK,
-      candidates: Int = PqCandidates): DataFrame = {
-    val idx = opqIndex(s, d)
-    pqProbe(s, d, idx.pq, k, candidates, Some(opqQueries(s, d, idx.perm)),
-      rerankQueries = Some(queryRelation(s, d)))
+  private def opqProbe(s: SparkSession, d: String, idx: OpqIndex,
+      queries: DataFrame, k: Int, candidates: Int): DataFrame = {
+    import s.implicits._
+    val permuted = queries.select($"q_id",
+      permutedCol(idx.perm, $"q_emb").as("q_emb"), $"q_nrm")
+    pqProbe(s, d, idx.pq, k, candidates, permuted, queries)
   }
+
+  def topkOpq(s: SparkSession, d: String, k: Int = Similarity.TopK,
+      candidates: Int = PqCandidates): DataFrame =
+    opqProbe(s, d, opqIndex(s, d), queryRelation(s, d), k, candidates)
 
   /** Store the OPQ index: codes + codebooks (the PQ layout) plus the
     * permutation as a (pos, dim) table — trained state, the same
@@ -427,34 +420,22 @@ object Pq {
     OpqIndex(perm, readPqIndex(s, indexDir))
   }
 
-  /** Probe a STORED OPQ index — queries permuted with the INDEX's
-    * recorded permutation (never the current corpus's retrained one,
-    * the planes-sidecar discipline), through the same probe core.
-    */
+  /** Probe a STORED OPQ index with the declared query set. */
   def topkOpqStored(s: SparkSession, d: String, indexDir: String,
       k: Int = Similarity.TopK,
-      candidates: Int = PqCandidates): DataFrame = {
-    val idx = readOpqIndex(s, indexDir)
-    pqProbe(s, d, idx.pq, k, candidates, Some(opqQueries(s, d, idx.perm)),
-      rerankQueries = Some(queryRelation(s, d)))
-  }
+      candidates: Int = PqCandidates): DataFrame =
+    topkOpqStoredFor(s, queryRelation(s, d), d, indexDir, k, candidates)
 
   /** The stored-OPQ probe for an ARBITRARY query relation in ORIGINAL
     * coordinates (q_id, q_emb, q_nrm) — the serving entry point (the
-    * topkLshStoredFor convention): queries are permuted INSIDE with
-    * the index's recorded permutation, so callers never handle
-    * transformed coordinates.
+    * topkLshStoredFor convention): queries are permuted with the
+    * INDEX's recorded permutation (never the current corpus's
+    * retrained one, the planes-sidecar discipline).
     */
   def topkOpqStoredFor(s: SparkSession, queries: DataFrame, d: String,
       indexDir: String, k: Int = Similarity.TopK,
-      candidates: Int = PqCandidates): DataFrame = {
-    import s.implicits._
-    val idx = readOpqIndex(s, indexDir)
-    val permuted = queries.select($"q_id",
-      permutedCol(idx.perm, $"q_emb").as("q_emb"), $"q_nrm")
-    pqProbe(s, d, idx.pq, k, candidates, Some(permuted),
-      rerankQueries = Some(queries))
-  }
+      candidates: Int = PqCandidates): DataFrame =
+    opqProbe(s, d, readOpqIndex(s, indexDir), queries, k, candidates)
 
   // ----- OPQ (full-rotation form) --------------------------------------
 
@@ -513,6 +494,12 @@ object Pq {
     }
     out
   }
+
+  /** [[rotateF]] as a column: nulls rotate as the empty vector. */
+  private def rotatedCol(rot: Array[Array[Double]], emb: Column): Column =
+    udf { (v: Seq[Float]) =>
+      rotateF(rot, if (v == null) Array.empty[Float] else v.toArray)
+    }.apply(emb)
 
   /** Orthogonal Procrustes solution max_R tr(RM): R = VUᵀ from
     * M = UΣVᵀ. V and Σ² come from the Jacobi eigensolve of MᵀM
@@ -673,11 +660,8 @@ object Pq {
     opqRotCache.getOrBuild(s, d) {
       import s.implicits._
       val (rot, _) = trainRotation(s, d)
-      val rotUdf = udf { (emb: Seq[Float]) =>
-        rotateF(rot, if (emb == null) Array.empty[Float] else emb.toArray)
-      }
       val rotEmb = Tables.embeddings(s, d)
-        .select($"vec_id", rotUdf($"embedding").as("embedding"))
+        .select($"vec_id", rotatedCol(rot, $"embedding").as("embedding"))
       val cb = trainCodebooksOver(s, rotEmb)
       val enc = udf { (emb: Seq[Float]) =>
         val v = emb.toArray
@@ -690,31 +674,23 @@ object Pq {
       OpqRotIndex(rot, PqIndex(cb, codes))
     }
 
-  /** The declared query set rotated with the index's R (norms from
-    * the originals — rotation preserves them exactly in real
-    * arithmetic, and the exact re-rank wants the original-space
-    * convention, the opqQueries contract).
+  /** The OPQ-R probe: `queries` (q_id, q_emb, q_nrm) in ORIGINAL
+    * coordinates are rotated with the index's R for the LUTs, and the
+    * exact re-rank dots the originals (the [[opqProbe]] contract; the
+    * norms carry over, since a rotation preserves them exactly in real
+    * arithmetic).
     */
-  private def opqRotQueries(s: SparkSession, d: String,
-      rot: Array[Array[Double]]): DataFrame = {
+  private def opqRotProbe(s: SparkSession, d: String, idx: OpqRotIndex,
+      queries: DataFrame, k: Int, candidates: Int): DataFrame = {
     import s.implicits._
-    import graft.functions.VectorFunctions
-    val rotUdf = udf { (emb: Seq[Float]) =>
-      rotateF(rot, if (emb == null) Array.empty[Float] else emb.toArray)
-    }
-    Tables.embeddings(s, d)
-      .filter($"vec_id" % Similarity.QueryStride === 0)
-      .select($"vec_id".as("q_id"), rotUdf($"embedding").as("q_emb"),
-        VectorFunctions.norm($"embedding").as("q_nrm"))
+    val rotated = queries.select($"q_id",
+      rotatedCol(idx.rot, $"q_emb").as("q_emb"), $"q_nrm")
+    pqProbe(s, d, idx.pq, k, candidates, rotated, queries)
   }
 
   def topkOpqRot(s: SparkSession, d: String, k: Int = Similarity.TopK,
-      candidates: Int = PqCandidates): DataFrame = {
-    val idx = opqRotIndex(s, d)
-    pqProbe(s, d, idx.pq, k, candidates,
-      Some(opqRotQueries(s, d, idx.rot)),
-      rerankQueries = Some(queryRelation(s, d)))
-  }
+      candidates: Int = PqCandidates): DataFrame =
+    opqRotProbe(s, d, opqRotIndex(s, d), queryRelation(s, d), k, candidates)
 
   /** Store the OPQ-R index: codes + codebooks (the PQ layout) plus R
     * as a (r, vals) table — trained state, the perm-table class.
@@ -759,17 +735,11 @@ object Pq {
     OpqRotIndex(rot, readPqIndex(s, indexDir))
   }
 
-  /** Probe a STORED OPQ-R index — queries rotated with the INDEX's
-    * recorded R (the planes-sidecar discipline).
-    */
+  /** Probe a STORED OPQ-R index with the declared query set. */
   def topkOpqRotStored(s: SparkSession, d: String, indexDir: String,
       k: Int = Similarity.TopK,
-      candidates: Int = PqCandidates): DataFrame = {
-    val idx = readOpqRotIndex(s, indexDir)
-    pqProbe(s, d, idx.pq, k, candidates,
-      Some(opqRotQueries(s, d, idx.rot)),
-      rerankQueries = Some(queryRelation(s, d)))
-  }
+      candidates: Int = PqCandidates): DataFrame =
+    topkOpqRotStoredFor(s, queryRelation(s, d), d, indexDir, k, candidates)
 
   /** [[appendToPqIndex]] for the OPQ layout: the batch is PERMUTED
     * with the index's recorded permutation, then encoded through the
@@ -799,41 +769,26 @@ object Pq {
       batch: DataFrame): Unit = {
     import s.implicits._
     val idx = readOpqRotIndex(s, indexDir)
-    val rot = idx.rot
     val cb = idx.pq.codebooks
-    val rotUdf = udf { (emb: Seq[Float]) =>
-      rotateF(rot, if (emb == null) Array.empty[Float] else emb.toArray)
-    }
     val enc = udf { (emb: Seq[Float]) =>
       val v = emb.toArray
       Array.tabulate(cb.length)(sub => nearestCode(v, sub * SubDim, cb(sub)))
     }
     batch
-      .select($"vec_id", rotUdf($"embedding").as("embedding"))
+      .select($"vec_id", rotatedCol(idx.rot, $"embedding").as("embedding"))
       .select($"vec_id", enc($"embedding").as("codes"))
       .write.mode("append").parquet(s"$indexDir/codes")
   }
 
   /** The stored-OPQ-R probe for an ARBITRARY query relation in
     * ORIGINAL coordinates (q_id, q_emb, q_nrm) — the serving entry
-    * point (the topkOpqStoredFor convention): queries are rotated
-    * INSIDE with the index's recorded R, so callers never handle
-    * transformed coordinates.
+    * point (the topkOpqStoredFor convention): queries are rotated with
+    * the INDEX's recorded R (the planes-sidecar discipline).
     */
   def topkOpqRotStoredFor(s: SparkSession, queries: DataFrame, d: String,
       indexDir: String, k: Int = Similarity.TopK,
-      candidates: Int = PqCandidates): DataFrame = {
-    import s.implicits._
-    val idx = readOpqRotIndex(s, indexDir)
-    val rot = idx.rot
-    val rotUdf = udf { (emb: Seq[Float]) =>
-      rotateF(rot, if (emb == null) Array.empty[Float] else emb.toArray)
-    }
-    val rotated = queries.select($"q_id",
-      rotUdf($"q_emb").as("q_emb"), $"q_nrm")
-    pqProbe(s, d, idx.pq, k, candidates, Some(rotated),
-      rerankQueries = Some(queries))
-  }
+      candidates: Int = PqCandidates): DataFrame =
+    opqRotProbe(s, d, readOpqRotIndex(s, indexDir), queries, k, candidates)
 
   /** ADC (asymmetric distance computation) coarse score: the query
     * stays full-precision, the corpus vector is its reconstruction
@@ -873,7 +828,7 @@ object Pq {
     */
   private[operators] def rerankTail(s: SparkSession, d: String,
       scored: DataFrame, candidates: Int, k: Int,
-      queries: Option[DataFrame] = None): DataFrame = {
+      queries: DataFrame): DataFrame = {
     import s.implicits._
     // winnow the ADC stream per partition before the rank window
     // (Similarity.winnowTopPerKey: output-invariant, kills the full
@@ -890,12 +845,12 @@ object Pq {
   /** The exact full-width re-rank of a coarse candidate set — shared
     * by both coarse front-ends (the ADC join winnow above and the LUT
     * scan in [[pqProbe]]) so the contract (rounding, tie-break, k)
-    * cannot fork. `queries` defaults to the declared corpus query set
-    * (the serving entry points pass their own (q_id, q_emb, q_nrm)
-    * relation — the topkLshStoredFor convention).
+    * cannot fork. `queries` is the (q_id, q_emb, q_nrm) relation the
+    * coarse set was probed for: the declared [[queryRelation]] or a
+    * serving entry point's own (the topkLshStoredFor convention).
     */
   private[graft] def fineRerank(s: SparkSession, d: String, coarse: DataFrame,
-      k: Int, queries: Option[DataFrame] = None): DataFrame = {
+      k: Int, queries: DataFrame): DataFrame = {
     import s.implicits._
     import graft.functions.VectorFunctions
     val full = Tables.embeddings(s, d)
@@ -903,8 +858,8 @@ object Pq {
         VectorFunctions.norm($"embedding").as("nrm"))
     coarse
       .join(full, Seq("n_id"))
-      .join(broadcast(queries.getOrElse(queryRelation(s, d))
-        .select($"q_id", $"q_emb", $"q_nrm")), Seq("q_id"))
+      .join(broadcast(queries.select($"q_id", $"q_emb", $"q_nrm")),
+        Seq("q_id"))
       .select($"q_id", $"n_id",
         round(VectorFunctions.cosineFrom(
           VectorFunctions.dot($"q_emb", $"embedding"), $"q_nrm", $"nrm"),
@@ -921,20 +876,22 @@ object Pq {
     */
   def topkPq(s: SparkSession, d: String, k: Int = Similarity.TopK,
       candidates: Int = PqCandidates,
-      codewords: Int = PqCodewords): DataFrame =
-    pqProbe(s, d, pqIndex(s, d, codewords), k, candidates)
+      codewords: Int = PqCodewords): DataFrame = {
+    val q = queryRelation(s, d)
+    pqProbe(s, d, pqIndex(s, d, codewords), k, candidates, q, q)
+  }
 
   /** The PQ probe against a GIVEN index — shared by the session-cached
     * path ([[topkPq]]) and the stored path ([[topkPqStored]]) so the
     * two can never drift (the lshProbe/ivfProbe convention).
     */
   private def pqProbe(s: SparkSession, d: String, idx: PqIndex, k: Int,
-      candidates: Int, queries: Option[DataFrame] = None,
-      rerankQueries: Option[DataFrame] = None): DataFrame = {
+      candidates: Int, queries: DataFrame,
+      rerankQueries: DataFrame): DataFrame = {
     // `queries` feeds the coarse LUTs (codebook space — PERMUTED for
     // OPQ); the exact re-rank dots ORIGINAL coordinates, so a caller
     // probing in a transformed space passes the untransformed relation
-    // here (defaults to `queries`: for raw PQ the two coincide)
+    // as `rerankQueries` (for raw PQ the two coincide)
     import s.implicits._
     // The FAISS ADC trick done relationally: per query, the dot of
     // its sub-slices against every codeword is precomputed ONCE into
@@ -948,8 +905,7 @@ object Pq {
     // subspace order, so scores are bit-identical; per-partition
     // TopBuf winnowing under the rank window's exact comparator keeps
     // the output invariant (the coarseScanTopC argument).
-    val qRows = queries.getOrElse(queryRelation(s, d))
-      .select($"q_id", $"q_emb")
+    val qRows = queries.select($"q_id", $"q_emb")
       .as[(Long, Array[Float])].collect().sortBy(_._1)
     val cb = idx.codebooks
     val luts: Array[Array[Array[Double]]] = qRows.map { case (_, q) =>
@@ -1015,7 +971,7 @@ object Pq {
         Window.partitionBy($"q_id").orderBy($"adc".desc, $"n_id".asc)))
       .filter($"crank" <= candidates)
       .select($"q_id", $"n_id")
-    fineRerank(s, d, coarse, k, rerankQueries.orElse(queries))
+    fineRerank(s, d, coarse, k, rerankQueries)
   }
 
   /** IVF-PQ composition — the FAISS deployment shape: the IVF coarse
@@ -1029,29 +985,23 @@ object Pq {
     */
   def topkIvfPq(s: SparkSession, d: String, k: Int = Similarity.TopK,
       candidates: Int = PqCandidates): DataFrame =
-    ivfPqProbe(s, d, Similarity.ivfIndex(s, d), pqIndex(s, d), k, candidates)
+    ivfPqProbe(s, d, Similarity.ivfIndex(s, d), pqIndex(s, d), k, candidates,
+      queryRelation(s, d))
 
   /** The composed probe against GIVEN indexes — shared by the
     * session-cached path ([[topkIvfPq]]) and the stored-index path
-    * ([[topkIvfPqStored]], the actual FAISS deployment shape: both
+    * ([[topkIvfPqStoredFor]], the actual FAISS deployment shape: both
     * index halves written by one build job, read + composed by any
     * later query job).
     */
-  def topkIvfPqStored(s: SparkSession, d: String, ivfDir: String,
-      pqDir: String, k: Int = Similarity.TopK,
-      candidates: Int = PqCandidates): DataFrame =
-    ivfPqProbe(s, d, Similarity.readIvfIndex(s, ivfDir),
-      readPqIndex(s, pqDir), k, candidates)
-
   private def ivfPqProbe(s: SparkSession, d: String,
       ivf: Similarity.IvfIndex, pq: PqIndex, k: Int,
-      candidates: Int, queries: Option[DataFrame] = None): DataFrame = {
+      candidates: Int, queries: DataFrame): DataFrame = {
     import s.implicits._
     val np = Similarity.defaultNProbe(ivf.cents.length, ivf.cellCounts)
     val adc = adcScore(pq.codebooks) _
-    val qCells = queries.getOrElse(queryRelation(s, d))
-      .select($"q_id", $"q_emb",
-        explode(Similarity.nearestCellsCol(ivf.cents, np)($"q_emb")).as("cell"))
+    val qCells = queries.select($"q_id", $"q_emb",
+      explode(Similarity.nearestCellsCol(ivf.cents, np)($"q_emb")).as("cell"))
     // the stored IVF-PQ relation: cell + codes, no vectors
     val members = ivf.assigned.select($"vec_id", $"cell")
       .join(pq.codes, Seq("vec_id"))
@@ -1219,25 +1169,17 @@ object Pq {
     */
   def topkIvfPqRes(s: SparkSession, d: String, k: Int = Similarity.TopK,
       candidates: Int = PqCandidates): DataFrame =
-    resProbe(s, d, Similarity.ivfIndex(s, d), resPqIndex(s, d), k, candidates)
-
-  /** The composed stored path (the topkIvfPqStored convention): both
-    * halves written by one build job, read + composed by a later one.
-    */
-  def topkIvfPqResStored(s: SparkSession, d: String, ivfDir: String,
-      resDir: String, k: Int = Similarity.TopK,
-      candidates: Int = PqCandidates): DataFrame =
-    resProbe(s, d, Similarity.readIvfIndex(s, ivfDir),
-      readResPqIndex(s, resDir), k, candidates)
+    resProbe(s, d, Similarity.ivfIndex(s, d), resPqIndex(s, d), k, candidates,
+      queryRelation(s, d))
 
   private def resProbe(s: SparkSession, d: String,
       ivf: Similarity.IvfIndex, idx: ResPqIndex, k: Int,
-      candidates: Int, queries: Option[DataFrame] = None): DataFrame = {
+      candidates: Int, queries: DataFrame): DataFrame = {
     import s.implicits._
     import graft.functions.VectorFunctions
     val np = Similarity.defaultNProbe(ivf.cents.length, ivf.cellCounts)
     val adc = adcScore(idx.codebooks) _
-    val qCells = queries.getOrElse(queryRelation(s, d))
+    val qCells = queries
       .select($"q_id", $"q_emb",
         explode(Similarity.nearestCellsCol(ivf.cents, np)($"q_emb")).as("cell"))
       .join(broadcast(meansDf(s, idx.means)), Seq("cell"))
@@ -1255,22 +1197,23 @@ object Pq {
 
   /** Serving entry points (the topkLshStoredFor convention): probe a
     * stored composition with an ARBITRARY (q_id, q_emb, q_nrm) query
-    * relation — a streaming micro-batch of live queries is exactly
-    * this shape ([[graft.streaming.VecStream]]). `d` stays the corpus
-    * the exact re-rank pages full vectors from.
+    * relation — the declared [[queryRelation]], or a streaming
+    * micro-batch of live queries ([[graft.streaming.MicroBatch.start]]
+    * over this kernel). `d` stays the corpus the exact re-rank pages
+    * full vectors from.
     */
   def topkIvfPqStoredFor(s: SparkSession, queries: DataFrame, d: String,
       ivfDir: String, pqDir: String, k: Int = Similarity.TopK,
       candidates: Int = PqCandidates): DataFrame =
     ivfPqProbe(s, d, Similarity.readIvfIndex(s, ivfDir),
-      readPqIndex(s, pqDir), k, candidates, Some(queries))
+      readPqIndex(s, pqDir), k, candidates, queries)
 
   /** [[topkIvfPqStoredFor]] for the residual composition. */
   def topkIvfPqResStoredFor(s: SparkSession, queries: DataFrame, d: String,
       ivfDir: String, resDir: String, k: Int = Similarity.TopK,
       candidates: Int = PqCandidates): DataFrame =
     resProbe(s, d, Similarity.readIvfIndex(s, ivfDir),
-      readResPqIndex(s, resDir), k, candidates, Some(queries))
+      readResPqIndex(s, resDir), k, candidates, queries)
 
   /** Write the built PQ index — the stored-index half of the
     * build-once contract (see Similarity.writeIvfIndex): the codes
@@ -1337,8 +1280,10 @@ object Pq {
     * same probe core as the session-cached path.
     */
   def topkPqStored(s: SparkSession, d: String, indexDir: String,
-      k: Int = Similarity.TopK, candidates: Int = PqCandidates): DataFrame =
-    pqProbe(s, d, readPqIndex(s, indexDir), k, candidates)
+      k: Int = Similarity.TopK, candidates: Int = PqCandidates): DataFrame = {
+    val q = queryRelation(s, d)
+    pqProbe(s, d, readPqIndex(s, indexDir), k, candidates, q, q)
+  }
 
   /** Append NEW vectors' codes to a STORED PQ index WITHOUT
     * retraining — the appendToIvfIndex convention for the compressed

@@ -692,7 +692,8 @@ object Relational {
     // persisted relation (see writeQuantileHist), the probe walks it
     // driver-side and touches the raw table only for its chosen bins'
     // rows — same answers by construction, oracle shared verbatim;
-    // EventStream.quantileHistStream maintains it under live ingest
+    // MicroBatch.start over mergeIntoQuantileHist maintains it under
+    // live ingest
     "evt_value_quantiles_stored" -> { (s, d) =>
       import s.implicits._
       val dir = graft.operators.Similarity.storedQueryDir("qhist", d)

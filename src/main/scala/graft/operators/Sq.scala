@@ -225,7 +225,7 @@ object Sq {
         Window.partitionBy($"q_id").orderBy($"sq".desc, $"n_id".asc)))
       .filter($"crank" <= candidates)
       .select($"q_id", $"n_id")
-    Pq.fineRerank(s, d, coarse, k)
+    Pq.fineRerank(s, d, coarse, k, Pq.queryRelation(s, d))
   }
 
   /** Coarse-to-fine SQ8 ANN: byte-decode scan picks top-C per query,
@@ -296,19 +296,8 @@ object Sq {
     */
   def topkIvfSq(s: SparkSession, d: String, k: Int = Similarity.TopK,
       candidates: Int = SqCandidates): DataFrame =
-    ivfSqProbe(s, d, Similarity.ivfIndex(s, d), sqIndex(s, d), k, candidates)
-
-  /** The composed probe against STORED index halves (the
-    * topkIvfPqStored convention: both written by one build job, read
-    * and composed by any later query job) — parquet round-trips the
-    * params/norm doubles exactly, so this is bit-identical to
-    * [[topkIvfSq]] on the same corpus (IndexStoreSpec pins it).
-    */
-  def topkIvfSqStored(s: SparkSession, d: String, ivfDir: String,
-      sqDir: String, k: Int = Similarity.TopK,
-      candidates: Int = SqCandidates): DataFrame =
-    ivfSqProbe(s, d, Similarity.readIvfIndex(s, ivfDir),
-      readSqIndex(s, sqDir), k, candidates)
+    ivfSqProbe(s, d, Similarity.ivfIndex(s, d), sqIndex(s, d), k, candidates,
+      Pq.queryRelation(s, d))
 
   /** The composed probe against GIVEN indexes (the ivfPqProbe
     * convention — one body so a session/stored split could never
@@ -317,13 +306,12 @@ object Sq {
     */
   private def ivfSqProbe(s: SparkSession, d: String,
       ivf: Similarity.IvfIndex, sq: SqIndex, k: Int,
-      candidates: Int, queries: Option[DataFrame] = None): DataFrame = {
+      candidates: Int, queries: DataFrame): DataFrame = {
     import s.implicits._
     val np = Similarity.defaultNProbe(ivf.cents.length, ivf.cellCounts)
     val dd = sqDecodeDot(sq.decodeTable) _
-    val qCells = queries.getOrElse(Pq.queryRelation(s, d))
-      .select($"q_id", $"q_emb", $"q_nrm",
-        explode(Similarity.nearestCellsCol(ivf.cents, np)($"q_emb")).as("cell"))
+    val qCells = queries.select($"q_id", $"q_emb", $"q_nrm",
+      explode(Similarity.nearestCellsCol(ivf.cents, np)($"q_emb")).as("cell"))
     // the stored IVF-SQ relation: cell + codes + decoded norm, no vectors
     val members = ivf.assigned.select($"vec_id", $"cell")
       .join(sq.codes, Seq("vec_id"))
@@ -340,14 +328,18 @@ object Sq {
 
   /** Serving entry point (the topkLshStoredFor convention): probe the
     * stored IVF-SQ composition with an ARBITRARY (q_id, q_emb, q_nrm)
-    * query relation — a streaming micro-batch of live queries is
-    * exactly this shape ([[graft.streaming.VecStream]]).
+    * query relation — the declared [[Pq.queryRelation]], or a streaming
+    * micro-batch of live queries ([[graft.streaming.MicroBatch.start]]
+    * over this kernel). Both index halves are written by one build job
+    * and composed by any later query job; parquet round-trips the
+    * params/norm doubles exactly, so over the declared query set this
+    * is bit-identical to [[topkIvfSq]] (IndexStoreSpec pins it).
     */
   def topkIvfSqStoredFor(s: SparkSession, queries: DataFrame, d: String,
       ivfDir: String, sqDir: String, k: Int = Similarity.TopK,
       candidates: Int = SqCandidates): DataFrame =
     ivfSqProbe(s, d, Similarity.readIvfIndex(s, ivfDir),
-      readSqIndex(s, sqDir), k, candidates, Some(queries))
+      readSqIndex(s, sqDir), k, candidates, queries)
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // the codes relation as exploded scalar rows (the pq_build

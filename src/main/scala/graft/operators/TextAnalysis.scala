@@ -527,7 +527,7 @@ object TextAnalysis {
     // the sparse cell relation, read it back, cull+verify from the
     // STORED sketch — the nightly-ingest deployment shape
     // (mergeIntoCmsSketch keeps the same relation current batch by
-    // batch; streamed by DocStream.heavyHittersStream). Exact output
+    // batch; streamed as MicroBatch.start over it). Exact output
     // ⇒ shares the session oracle string verbatim.
     "txt_heavy_hitters_stored" -> { (s, d) =>
       val dir = Similarity.storedQueryDir("cms", d)

@@ -293,22 +293,6 @@ object ClusteredLayout {
     }
   }
 
-  /** Continuous clustered ingestion: each micro-batch goes through the
-    * batch append path (same z-sort, same stage-rename-manifest
-    * order), so a layout under live ingest answers box queries
-    * correctly at every trigger — streaming adds scheduling, not a
-    * second writer that could drift (the VecStream convention).
-    * Per-trigger file growth is the append's; [[compactLayout]] is
-    * the periodic defrag. Single-writer per layout, as all
-    * maintenance ops here.
-    */
-  def ingestStream(rows: DataFrame, dir: String, c1: String, c2: String,
-      files: Int = 4): org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        appendToLayout(batch.toDF(), dir, c1, c2, files)
-      }.start()
-
   /** Per-file BLOOM sidecar — equality-lookup skipping for a column
     * the clustering does NOT cover (Delta's bloom index mechanism):
     * min/max manifests prune range boxes on the clustered columns;

@@ -2,8 +2,9 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.operators.TextAnalysis
+import graft.operators.{Dedup, TextAnalysis}
 
 /** Streaming document curation — the batch `pipe_curate` stages
   * (quality gate → content-hash dedup → train-split filter →
@@ -94,78 +95,23 @@ object DocStream {
   /** Score a stream of documents with a STORED NB quality model
     * (written by [[TextAnalysis.writeNbModel]]) — the classifier's
     * serving mode: train once in batch, then every arriving document
-    * gets its quality score as it lands. `foreachBatch` over the
-    * shared batch kernel ([[TextAnalysis.scoreDocsWithNbModel]]), the
-    * [[VecStream]] convention: a micro-batch of independent documents
-    * is exactly the batch that kernel was built for, so streaming adds
-    * scheduling, not a second scorer that could drift. The model is
-    * read ONCE at stream start (the curateStream evalGrams
-    * convention — the model version is pinned for the stream's
-    * lifetime; a retrain is a new stream). Per-trigger cost: tokenize
-    * the batch + the tok-keyed join against the vocabulary-sized
-    * weight relation — batch-proportional, never corpus-proportional.
+    * gets its quality score as it lands. [[MicroBatch.start]] over the
+    * shared batch kernel ([[TextAnalysis.scoreDocsWithNbModel]]): a
+    * micro-batch of independent documents is exactly the batch that
+    * kernel was built for, so streaming adds scheduling, not a second
+    * scorer that could drift. The model is read ONCE at stream start
+    * (the curateStream evalGrams convention — the model version is
+    * pinned for the stream's lifetime; a retrain is a new stream).
+    * Per-trigger cost: tokenize the batch + the tok-keyed join against
+    * the vocabulary-sized weight relation — batch-proportional, never
+    * corpus-proportional.
     */
   def scoreStream(docs: DataFrame, modelDir: String)(
-      sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    val s = docs.sparkSession
-    val (w, prior) = TextAnalysis.readNbModel(s, modelDir)
-    docs.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        sink(TextAnalysis.scoreDocsWithNbModel(batch.toDF(), w, prior))
-      }.start()
+      sink: DataFrame => Unit): StreamingQuery = {
+    val (w, prior) = TextAnalysis.readNbModel(docs.sparkSession, modelDir)
+    MicroBatch.start(docs.writeStream)(b =>
+      sink(TextAnalysis.scoreDocsWithNbModel(b, w, prior)))
   }
-
-  /** Maintain a STORED KMV sketch (written by
-    * [[TextAnalysis.writeKmvSketch]]) from a document stream —
-    * continuously-current corpus stats: each micro-batch pays ONE
-    * sketch pass over the batch plus a sketch-sized reread/merge
-    * ([[TextAnalysis.mergeIntoKmvSketch]] — exact by the KMV merge
-    * algebra, order-independent, crash-safe swap). State lives in the
-    * stored relation, not the stream: the query restarts with nothing
-    * to rebuild. Single-writer per sketch dir, as every stored-index
-    * maintainer here.
-    */
-  def distinctStream(docs: DataFrame,
-      sketchDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        TextAnalysis.mergeIntoKmvSketch(batch.sparkSession, sketchDir,
-          batch.toDF())
-      }.start()
-
-  /** Streamed heavy-hitter sketch maintenance — the CMS twin of
-    * [[distinctStream]]: each micro-batch pays one sketch pass over
-    * the batch plus a sketch-sized reread and element-wise add
-    * ([[TextAnalysis.mergeIntoCmsSketch]] — exact by CMS linearity,
-    * order-independent, crash-safe swap). State lives in the stored
-    * cell relation; txt_heavy_hitters_stored's cull+verify reads the
-    * continuously-current sketch.
-    */
-  def heavyHittersStream(docs: DataFrame,
-      sketchDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        TextAnalysis.mergeIntoCmsSketch(batch.sparkSession, sketchDir,
-          batch.toDF())
-      }.start()
-
-  /** Serve a stream of (query_id, term) search requests from the
-    * stored lexical index (the VecStream.probeStream convention on
-    * the lexical side): each micro-batch runs [[graft.operators
-    * .Lexical.bm25For]] — one partition-pruned postings scan for the
-    * batch's term set, shared df, winnowed per-query top-k — and
-    * hands the result relation to `sink`. Queries are independent
-    * rows, so any batching of them answers identically (union
-    * parity, spec-pinned); per-trigger cost ∝ the batch's matching
-    * postings, never index size.
-    */
-  def bm25ServeStream(queries: DataFrame, indexDir: String)(
-      sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    queries.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        sink(graft.operators.Lexical.bm25For(batch.sparkSession,
-          indexDir, batch.toDF()))
-      }.start()
 
   /** Streamed sub-document dedup — the CDC chunk-index lifecycle at
     * micro-batch cadence: each batch of (doc_id, text) documents is
@@ -185,78 +131,9 @@ object DocStream {
     * batch's chunking plus an index-sized hash join.
     */
   def cdcMassStream(docs: DataFrame, indexDir: String)(
-      sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val s = batch.sparkSession
-        sink(graft.operators.Dedup.cdcMassFor(s, indexDir, batch.toDF()))
-        graft.operators.Dedup.appendChunkHashesFor(s, indexDir, batch.toDF())
-      }.start()
-
-  /** Apply a stream of takedown documents (doc_id, text) to a stored
-    * CDC chunk index — the [[graft.streaming.VecStream.deleteStream]]
-    * convention on the sub-document side: each micro-batch re-chunks
-    * ONLY the deleted docs and appends their carrier counts negated
-    * ([[graft.operators.Dedup.deleteChunkHashesFor]]), so from the
-    * next trigger on a chunk whose only carriers are deleted stops
-    * counting as historical mass — batch and stream takedowns share
-    * one kernel and cannot drift. Physical purge stays the periodic
-    * [[graft.operators.Dedup.compactCdcIndex]].
-    */
-  def cdcDeleteStream(docs: DataFrame,
-      indexDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        graft.operators.Dedup.deleteChunkHashesFor(batch.sparkSession,
-          indexDir, batch.toDF())
-      }.start()
-
-  /** Apply a stream of document takedown ids to a stored lexical
-    * index: each micro-batch appends id-sized tombstones
-    * ([[graft.operators.Lexical.deleteFromLexIndex]]), so every probe
-    * from the next trigger on stops returning the deleted documents —
-    * Lucene-delete semantics (stats stay build-time until
-    * compaction), the stored-index takedown convention.
-    */
-  def bm25DeleteStream(ids: DataFrame,
-      indexDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    ids.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        graft.operators.Lexical.deleteFromLexIndex(batch.sparkSession,
-          indexDir, batch.toDF())
-      }.start()
-
-  /** Apply a stream of training-document TAKEDOWNS to a stored NB
-    * quality model: each micro-batch of deleted docs lands its
-    * negated count contributions
-    * ([[graft.operators.TextAnalysis.deleteFromNbModel]] — labeled
-    * against the frozen stored thresholds), so scoring from the next
-    * trigger on uses the unlearned model — the takedown half the
-    * model's streamed surface was missing next to [[scoreStream]]
-    * (r17 verdict item 6). Batch and stream erasure share one kernel
-    * and cannot drift; physical fold stays the periodic
-    * [[graft.operators.TextAnalysis.compactNbModel]].
-    */
-  def nbDeleteStream(docs: DataFrame,
-      modelDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        TextAnalysis.deleteFromNbModel(batch.sparkSession, modelDir,
-          batch.toDF())
-      }.start()
-
-  /** Ingest a stream of NEW training documents into a stored NB
-    * model: each micro-batch appends its positive count
-    * contributions labeled against the frozen thresholds
-    * ([[graft.operators.TextAnalysis.appendToNbModel]]) — the
-    * streamed form of the nightly counts-add ingest, with the same
-    * at-most-once-per-doc contract.
-    */
-  def nbIngestStream(docs: DataFrame,
-      modelDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        TextAnalysis.appendToNbModel(batch.sparkSession, modelDir,
-          batch.toDF())
-      }.start()
+      sink: DataFrame => Unit): StreamingQuery =
+    MicroBatch.start(docs.writeStream) { b =>
+      sink(Dedup.cdcMassFor(b.sparkSession, indexDir, b))
+      Dedup.appendChunkHashesFor(b.sparkSession, indexDir, b)
+    }
 }

@@ -4,7 +4,8 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
+  StreamingQuery}
 
 /** Event-time streaming operators over the `events` schema
   * (event_id, user_id, event_type, value, ts). The reference only has
@@ -310,24 +311,6 @@ object EventStream {
       .withWatermark("ts", watermark)
       .dropDuplicatesWithinWatermark(keys.head, keys.tail: _*)
 
-  /** Maintain the stored level-1 quantile histogram
-    * ([[graft.operators.Relational.writeQuantileHist]]) from a stream
-    * of (event_type, value) rows — continuously-current exact
-    * quantiles: each micro-batch pays one batch-sized histogram pass
-    * plus a bounded (types × bins) reread/merge, exact by the
-    * counts-add / min-min / max-max merge algebra against the FROZEN
-    * bin edges (out-of-range values clamp into the edge bins — the
-    * bins stay a value-ordered partition, so probes stay exact).
-    * State lives in the stored relation, not the stream (the
-    * distinctStream convention); single-writer per histogram dir.
-    */
-  def quantileHistStream(rows: DataFrame,
-      histDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        graft.operators.Relational.mergeIntoQuantileHist(batch.toDF(), histDir)
-      }.start()
-
   /** Maintain the stored concurrency layout
     * ([[graft.operators.Relational.writeConcurrencyLayout]]) from a
     * live event stream: each micro-batch appends its events to the
@@ -339,32 +322,9 @@ object EventStream {
     * stream; single-writer per layout dir.
     */
   def concurrencyLayoutStream(events: DataFrame,
-      layoutDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val s = batch.sparkSession
-        import org.apache.spark.sql.functions._
-        graft.operators.Relational.appendToConcurrencyLayout(s,
-          batch.toDF().select(col("user_id"),
-            expr("unix_micros(ts) div 1000").as("ts_ms")),
-          layoutDir)
-      }.start()
-
-  /** Apply a stream of user-erasure requests (user_id rows) to a
-    * stored concurrency layout — each micro-batch runs the full
-    * takedown ([[graft.operators.Relational
-    * .deleteFromConcurrencyLayout]]: tombstones for the edge legs,
-    * sidecar count subtraction for the interior legs), so from the
-    * next trigger on the deleted users' events count toward nobody's
-    * concurrency. Same single-writer-per-layout contract as the
-    * append stream; physical purge stays the periodic
-    * [[graft.operators.Relational.compactConcurrencyLayout]].
-    */
-  def concurrencyDeleteStream(userIds: DataFrame,
-      layoutDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    userIds.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        graft.operators.Relational.deleteFromConcurrencyLayout(
-          batch.sparkSession, layoutDir, batch.toDF())
-      }.start()
+      layoutDir: String): StreamingQuery =
+    MicroBatch.start(events.writeStream)(b =>
+      graft.operators.Relational.appendToConcurrencyLayout(b.sparkSession,
+        b.select(col("user_id"), expr("unix_micros(ts) div 1000").as("ts_ms")),
+        layoutDir))
 }

@@ -3,6 +3,10 @@ package graft.streaming
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+import scala.util.Using
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -118,13 +122,17 @@ object FilePipeline {
     * same ordering the reference relies on (`dags/dag.py:452-474`).
     */
   final case class ParquetTracking(dir: String) extends TrackingStore {
-    def knownHashes(spark: SparkSession): DataFrame =
-      // schema stated: inferring it runs a footer-reading job per batch
-      if (Files.exists(Paths.get(dir)))
+    def knownHashes(spark: SparkSession): DataFrame = {
+      // existence through Hadoop's FileSystem, so a `file:` or `hdfs://`
+      // URI resolves like a plain path does
+      val p = new Path(dir)
+      if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
+        // schema stated: inferring it runs a footer-reading job per batch
         spark.read.schema("file_hash STRING, file_path STRING, file_size BIGINT, " +
           "processed_at TIMESTAMP, output_file STRING, status STRING")
           .parquet(dir).select("file_hash")
       else spark.emptyDataset(Encoders.STRING).toDF("file_hash")
+    }
     def upsert(spark: SparkSession, rows: DataFrame): Unit =
       // one file per status and batch: every later batch reads them all
       rows.coalesce(1).select(col("file_hash"), col("file_path"), col("file_size"),
@@ -154,8 +162,8 @@ object FilePipeline {
     */
   def bootstrapSampleInput(inputDir: String): Boolean = {
     Files.createDirectories(Paths.get(inputDir))
-    val hasTxt = Files.list(Paths.get(inputDir)).toArray
-      .exists(_.toString.endsWith(".txt"))
+    val hasTxt = Using.resource(Files.list(Paths.get(inputDir)))(
+      _.iterator.asScala.exists(_.toString.endsWith(".txt")))
     if (hasTxt) false
     else {
       val lorem =
@@ -368,13 +376,9 @@ object FilePipeline {
   def run(spark: SparkSession, dirs: Dirs, cfg: Config = Config(),
       trigger: Trigger = Trigger.AvailableNow(),
       store: Option[TrackingStore] = None): StreamingQuery =
-    readFiles(spark, dirs.input).writeStream
+    MicroBatch.start(readFiles(spark, dirs.input).writeStream
       .option("checkpointLocation", dirs.checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        processBatch(spark, batch, dirs, cfg, store)
-      }
-      .start()
+      .trigger(trigger))(processBatch(spark, _, dirs, cfg, store))
 
   /** Batch entry point: same body, one pass (the reference's DAG run). */
   def runBatch(spark: SparkSession, dirs: Dirs, cfg: Config = Config()): Unit =

@@ -115,42 +115,4 @@ object MediaStream {
         }
       }.toDF("media_id", "dkey")
   }
-
-  /** Apply a stream of media takedown ids to a stored pHash band
-    * index — the [[graft.streaming.VecStream.deleteStream]] convention
-    * on the perceptual side: each micro-batch appends id-sized
-    * tombstones ([[Multimodal.deleteFromPhashIndex]]), so deleted
-    * media stop appearing as historical neighbors from the next
-    * trigger on while the multi-TB band layout stays untouched;
-    * physical purge stays the periodic
-    * [[Multimodal.compactPhashIndex]].
-    */
-  def phashDeleteStream(ids: DataFrame,
-      indexDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    ids.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        Multimodal.deleteFromPhashIndex(batch.sparkSession, indexDir,
-          batch.toDF())
-      }.start()
-
-  /** The takedown stream for the COLLAPSED group index — each
-    * micro-batch of media ids runs the batch re-election kernel
-    * ([[Multimodal.deleteFromPhashGroupsIndex]]), so the post-erasure
-    * probe keeps the distinct-hash shape at every trigger.
-    *
-    * COST NOTE: unlike [[phashDeleteStream]] (id-sized tombstone
-    * append per trigger), re-election rewrites the distinct-hash-
-    * sized groups relation PER TRIGGER — the price of keeping probes
-    * free of member resolution. Right for the low-rate legal-takedown
-    * feeds erasure requests actually arrive on; a high-rate feed
-    * should coalesce (a long trigger interval) or route through the
-    * per-media index's tombstone stream and collapse on schedule.
-    */
-  def phashGroupsDeleteStream(ids: DataFrame,
-      indexDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    ids.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        Multimodal.deleteFromPhashGroupsIndex(batch.sparkSession, indexDir,
-          batch.toDF())
-      }.start()
 }

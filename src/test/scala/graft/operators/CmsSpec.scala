@@ -115,7 +115,8 @@ class CmsSpec extends AnyFunSuite {
     TextAnalysis.writeCmsSketch(spark, emptyDir, sketchDir)
 
     val mem = MemoryStream[CmsDoc]
-    val q = graft.streaming.DocStream.heavyHittersStream(mem.toDF(), sketchDir)
+    val q = graft.streaming.MicroBatch.start(mem.toDF().writeStream)(b =>
+      TextAnalysis.mergeIntoCmsSketch(b.sparkSession, sketchDir, b))
     try {
       val (b1, b2) = docs.splitAt(docs.length / 2)
       mem.addData(b1: _*)

@@ -425,7 +425,8 @@ class IndexStoreSpec extends AnyFunSuite {
     assert(expect.nonEmpty)
 
     val s2 = spark.newSession()
-    val stored = Pq.topkIvfPqStored(s2, sf, ivfDir, pqDir)
+    val stored = Pq.topkIvfPqStoredFor(s2, Pq.queryRelation(s2, sf), sf,
+      ivfDir, pqDir)
     assert(rows(stored) == expect,
       "stored IVF-PQ composition diverged from the build-session probe")
   }
@@ -443,7 +444,8 @@ class IndexStoreSpec extends AnyFunSuite {
     assert(expect.nonEmpty)
 
     val s2 = spark.newSession()
-    val stored = Sq.topkIvfSqStored(s2, sf, ivfDir, sqDir)
+    val stored = Sq.topkIvfSqStoredFor(s2, Pq.queryRelation(s2, sf), sf,
+      ivfDir, sqDir)
     assert(rows(stored) == expect,
       "stored IVF-SQ composition diverged from the build-session probe")
   }
@@ -528,7 +530,8 @@ class IndexStoreSpec extends AnyFunSuite {
     assert(expect.nonEmpty)
 
     val s2 = spark.newSession()
-    val stored = Pq.topkIvfPqResStored(s2, sf, ivfDir, resDir)
+    val stored = Pq.topkIvfPqResStoredFor(s2, Pq.queryRelation(s2, sf), sf,
+      ivfDir, resDir)
     assert(rows(stored) == expect,
       "stored residual IVF-PQ composition diverged from the build-session probe")
   }
@@ -560,7 +563,8 @@ class IndexStoreSpec extends AnyFunSuite {
     graft.Tables.embeddings(spark, sf).select("vec_id", "embedding")
       .union(batch.select("vec_id", "embedding"))
       .write.parquet(s"$corpus/embeddings.parquet")
-    val probed = Pq.topkIvfPqResStored(spark, corpus, ivfDir, resDir)
+    val probed = Pq.topkIvfPqResStoredFor(spark,
+        Pq.queryRelation(spark, corpus), corpus, ivfDir, resDir)
       .as[(Long, Long, Double, Int)].collect()
     (0L until 20L).filter(_ % Similarity.QueryStride == 0).foreach { q =>
       val hit = probed.find(r => r._1 == q && r._2 == q + 1000000L)

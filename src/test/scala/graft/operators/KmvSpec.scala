@@ -185,7 +185,8 @@ class KmvSpec extends AnyFunSuite {
     TextAnalysis.writeKmvSketch(spark, emptyDir, sketchDir)
 
     val mem = MemoryStream[KmvDoc]
-    val q = graft.streaming.DocStream.distinctStream(mem.toDF(), sketchDir)
+    val q = graft.streaming.MicroBatch.start(mem.toDF().writeStream)(b =>
+      TextAnalysis.mergeIntoKmvSketch(b.sparkSession, sketchDir, b))
     try {
       val (b1, b2) = docs.splitAt(docs.length / 2)
       mem.addData(b1: _*)

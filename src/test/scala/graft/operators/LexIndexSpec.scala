@@ -522,9 +522,10 @@ class LexIndexSpec extends AnyFunSuite {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val mem = MemoryStream[(Long, String)]
     val got = scala.collection.mutable.Set.empty[(Long, Long, Double, Long)]
-    val q = graft.streaming.DocStream.bm25ServeStream(
-      mem.toDF().toDF("query_id", "term"), dir) { out =>
-      got ++= out.as[(Long, Long, Double, Long)].collect()
+    val q = graft.streaming.MicroBatch.start(
+      mem.toDF().toDF("query_id", "term").writeStream) { b =>
+      got ++= Lexical.bm25For(b.sparkSession, dir, b)
+        .as[(Long, Long, Double, Long)].collect()
     }
     val (b1, b2) = Lexical.ServeQueries.partition(_._1 <= 2)
     mem.addData(b1: _*); q.processAllAvailable()

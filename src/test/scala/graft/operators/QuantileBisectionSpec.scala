@@ -100,8 +100,9 @@ class QuantileBisectionSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("qstream").toString + "/h"
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val mem = MemoryStream[(String, Double)]
-    val q = graft.streaming.EventStream.quantileHistStream(
-      mem.toDF().toDF("event_type", "value"), dir)
+    val q = graft.streaming.MicroBatch.start(
+      mem.toDF().toDF("event_type", "value").writeStream)(b =>
+      Relational.mergeIntoQuantileHist(b, dir))
     mem.addData(b1: _*); q.processAllAvailable()
     mem.addData(b2: _*); q.processAllAvailable()
     q.stop()

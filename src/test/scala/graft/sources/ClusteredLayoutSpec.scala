@@ -158,8 +158,9 @@ class ClusteredLayoutSpec extends AnyFunSuite {
       .as[(Long, Long, Long)].collect().toSeq
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val mem = MemoryStream[(Long, Long, Long)]
-    val q = ClusteredLayout.ingestStream(
-      mem.toDF().toDF("event_id", "user_id", "ts_ms"), dir, "user_id", "ts_ms")
+    val q = graft.streaming.MicroBatch.start(
+      mem.toDF().toDF("event_id", "user_id", "ts_ms").writeStream)(b =>
+      ClusteredLayout.appendToLayout(b, dir, "user_id", "ts_ms"))
     val (b1, b2) = rows.partition(_._1 % 2 == 0)
     mem.addData(b1: _*); q.processAllAvailable()
     mem.addData(b2: _*); q.processAllAvailable()

@@ -223,7 +223,8 @@ class DocStreamSpec extends AnyFunSuite {
     val base = model()
 
     val mem = MemoryStream[IngestDoc]
-    val q = DocStream.nbIngestStream(mem.toDF(), modelDir)
+    val q = MicroBatch.start(mem.toDF().writeStream)(b =>
+      TextAnalysis.appendToNbModel(b.sparkSession, modelDir, b))
     try {
       val (b1, b2) = batchDocs.splitAt(batchDocs.length / 2)
       mem.addData(b1: _*); q.processAllAvailable()
@@ -246,7 +247,8 @@ class DocStreamSpec extends AnyFunSuite {
 
     // streamed takedown of the same docs restores the base model
     val mem2 = MemoryStream[IngestDoc]
-    val q2 = DocStream.nbDeleteStream(mem2.toDF(), modelDir)
+    val q2 = MicroBatch.start(mem2.toDF().writeStream)(b =>
+      TextAnalysis.deleteFromNbModel(b.sparkSession, modelDir, b))
     try {
       val (b1, b2) = batchDocs.splitAt(batchDocs.length / 3)
       mem2.addData(b1: _*); q2.processAllAvailable()
@@ -331,7 +333,8 @@ class DocStreamSpec extends AnyFunSuite {
     Dedup.deleteFromCdcIndex(spark, tmp, batch, col("doc_id") === 3L)
     Dedup.deleteFromCdcIndex(spark, tmp, batch, col("doc_id") === 1L)
     val mem = MemoryStream[IngestDoc]
-    val q = DocStream.cdcDeleteStream(mem.toDF(), streamed)
+    val q = MicroBatch.start(mem.toDF().writeStream)(b =>
+      Dedup.deleteChunkHashesFor(b.sparkSession, streamed, b))
     try {
       mem.addData(IngestDoc(3L, b, "en", "spec", b.length.toLong, ts(0)))
       q.processAllAvailable()
@@ -359,7 +362,8 @@ class DocStreamSpec extends AnyFunSuite {
       .select($"doc_id").as[Long].collect().toSeq
     assert(before.size >= 2, "fixture probe returned too few docs")
     val mem = MemoryStream[Long]
-    val q = DocStream.bm25DeleteStream(mem.toDF(), dir)
+    val q = MicroBatch.start(mem.toDF().writeStream)(b =>
+      Lexical.deleteFromLexIndex(b.sparkSession, dir, b))
     try {
       mem.addData(before.head)
       q.processAllAvailable()

@@ -652,7 +652,8 @@ class EventStreamSpec extends AnyFunSuite {
     Relational.deleteFromConcurrencyLayout(spark, batch,
       delIds.toSeq.toDF("user_id"))
     val mem = MemoryStream[Long]
-    val q = EventStream.concurrencyDeleteStream(mem.toDF(), streamed)
+    val q = MicroBatch.start(mem.toDF().writeStream)(b =>
+      Relational.deleteFromConcurrencyLayout(b.sparkSession, streamed, b))
     try {
       val (h1, h2) = delIds.splitAt(delIds.length / 2)
       mem.addData(h1.toSeq: _*)

@@ -119,6 +119,22 @@ class FilePipelineSpec extends AnyFunSuite {
     assert(Files.exists(Paths.get(dirs.output, "processed_brand_new.txt")))
   }
 
+  test("a tracking dir given as a file: URI keeps its history across runs") {
+    val plain = freshDirs()
+    val dirs = plain.copy(tracking = s"file:${plain.tracking}")
+    Files.createDirectories(Paths.get(dirs.input))
+    Files.write(Paths.get(dirs.input, "a.txt"), "alpha".getBytes)
+    Files.write(Paths.get(dirs.input, "b.txt"), "beta".getBytes)
+    def rows(): (Long, Long) = (spark.read.json(dirs.reports).count(),
+      spark.read.parquet(dirs.tracking).count())
+    FilePipeline.runBatch(spark, dirs)
+    assert(rows() == ((2L, 2L)))
+    // the second run must see the first run's hashes: no new report or
+    // tracking row
+    FilePipeline.runBatch(spark, dirs)
+    assert(rows() == ((2L, 2L)))
+  }
+
   test("oversize files route to the dead-letter sink with error metadata") {
     val dirs = freshDirs()
     Files.createDirectories(Paths.get(dirs.input))

@@ -176,7 +176,8 @@ class MediaStreamSpec extends AnyFunSuite {
         .select($"new_id", $"old_id").as[(Long, Long)].collect().toSet
     assert(pairs().exists(_._2 == 3L), "fixture must pair with media 3")
     val mem = MemoryStream[Long]
-    val q = MediaStream.phashDeleteStream(mem.toDF(), dir)
+    val q = MicroBatch.start(mem.toDF().writeStream)(b =>
+      Multimodal.deleteFromPhashIndex(b.sparkSession, dir, b))
     try {
       mem.addData(3L)
       q.processAllAvailable()
@@ -268,7 +269,8 @@ class MediaStreamSpec extends AnyFunSuite {
     assert(rows().exists(r => r._2 == 1L && r._5 == 2L),
       "fixture: the shared hash answers as (rep 1, n 2)")
     val mem = MemoryStream[Long]
-    val q = MediaStream.phashGroupsDeleteStream(mem.toDF(), dir)
+    val q = MicroBatch.start(mem.toDF().writeStream)(b =>
+      Multimodal.deleteFromPhashGroupsIndex(b.sparkSession, dir, b))
     try {
       mem.addData(1L) // the stored rep: forces re-election
       q.processAllAvailable()

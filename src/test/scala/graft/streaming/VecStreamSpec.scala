@@ -6,15 +6,16 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{Pq, Similarity}
 
-/** Live-query row for [[VecStream.probeStream]] tests. */
+/** Live-query row for the streamed-probe tests. */
 case class QVec(q_id: Long, q_emb: Array[Float])
 
-/** New-vector row for [[VecStream.appendStream]] tests. */
+/** New-vector row for the streamed-append tests. */
 case class NVec(vec_id: Long, embedding: Array[Float])
 
-/** [[VecStream]] — the streamed halves of the stored-LSH lifecycle:
-  * micro-batched probes union to the declared stored-probe answer,
-  * and appended vectors become visible to subsequent probes.
+/** The streamed halves of the stored-index lifecycle, each
+  * [[MicroBatch.start]] over its batch kernel: micro-batched probes
+  * union to the declared stored-probe answer, and appended vectors
+  * become visible to subsequent probes.
   */
 class VecStreamSpec extends AnyFunSuite {
 
@@ -58,9 +59,9 @@ class VecStreamSpec extends AnyFunSuite {
     val results =
       new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long, Double, Int)]
     val mem = MemoryStream[QVec]
-    val q = VecStream.probeStream(withNorm(mem.toDF()), dir) { batchTopk =>
-      batchTopk.as[(Long, Long, Double, Int)].collect()
-        .foreach(results.add)
+    val q = MicroBatch.start(withNorm(mem.toDF()).writeStream) { b =>
+      Similarity.topkLshStoredFor(b.sparkSession, b, dir)
+        .as[(Long, Long, Double, Int)].collect().foreach(results.add)
     }
     try {
       val qs = fixtureQueries
@@ -88,9 +89,9 @@ class VecStreamSpec extends AnyFunSuite {
     val results =
       new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long, Double, Int)]
     val mem = MemoryStream[QVec]
-    val q = VecStream.probeStreamIvf(withNorm(mem.toDF()), dir) { batchTopk =>
-      batchTopk.as[(Long, Long, Double, Int)].collect()
-        .foreach(results.add)
+    val q = MicroBatch.start(withNorm(mem.toDF()).writeStream) { b =>
+      Similarity.topkIvfStoredFor(b.sparkSession, b, dir)
+        .as[(Long, Long, Double, Int)].collect().foreach(results.add)
     }
     try {
       val qs = fixtureQueries
@@ -121,7 +122,8 @@ class VecStreamSpec extends AnyFunSuite {
     assert(!hits().contains(1000000L))
 
     val mem = MemoryStream[NVec]
-    val q = VecStream.appendStreamIvf(mem.toDF(), dir)
+    val q = MicroBatch.start(mem.toDF().writeStream)(b =>
+      Similarity.appendToIvfIndex(b.sparkSession, dir, b))
     try {
       mem.addData(NVec(1000001L, seed.q_emb.map(v => -v)))
       q.processAllAvailable()
@@ -152,7 +154,8 @@ class VecStreamSpec extends AnyFunSuite {
     assert(!hits().contains(1000000L))
 
     val mem = MemoryStream[NVec]
-    val q = VecStream.appendStream(mem.toDF(), dir)
+    val q = MicroBatch.start(mem.toDF().writeStream)(b =>
+      Similarity.appendToLshIndex(b.sparkSession, dir, b))
     try {
       // batch 1: an unrelated new vector; batch 2: an exact clone of
       // the probe target — both must land in the stored index
@@ -181,8 +184,9 @@ class VecStreamSpec extends AnyFunSuite {
 
     val mem = MemoryStream[QVec]
     val got = scala.collection.mutable.Set.empty[(Long, Long, Double, Int)]
-    val q = VecStream.probeStreamOpq(withNorm(mem.toDF()), fixture, dir) {
-      batch => got ++= batch.as[(Long, Long, Double, Int)].collect()
+    val q = MicroBatch.start(withNorm(mem.toDF()).writeStream) { b =>
+      got ++= Pq.topkOpqStoredFor(b.sparkSession, b, fixture, dir)
+        .as[(Long, Long, Double, Int)].collect()
     }
     try {
       val qs = fixtureQueries
@@ -211,7 +215,8 @@ class VecStreamSpec extends AnyFunSuite {
     assert(before.size >= 2, "fixture probe returned too few neighbors")
 
     val mem = MemoryStream[Long]
-    val q = VecStream.deleteStream(mem.toDF(), dir)
+    val q = MicroBatch.start(mem.toDF().writeStream)(b =>
+      Similarity.deleteFromIndex(b.sparkSession, dir, b))
     try {
       // two micro-batches, one takedown each — both must be folded
       mem.addData(before.head)
@@ -239,16 +244,16 @@ class VecStreamSpec extends AnyFunSuite {
     Sq.writeSqIndex(spark, fixture, sqDir)
 
     def run(label: String,
-        start: org.apache.spark.sql.DataFrame => (
-          org.apache.spark.sql.DataFrame => Unit) =>
-          org.apache.spark.sql.streaming.StreamingQuery,
+        probe: (SparkSession, org.apache.spark.sql.DataFrame) =>
+          org.apache.spark.sql.DataFrame,
         expected: Set[(Long, Long, Double, Int)]): Unit = {
       assert(expected.nonEmpty, s"$label: empty expectation")
       val results =
         new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long, Double, Int)]
       val mem = MemoryStream[QVec]
-      val q = start(withNorm(mem.toDF())) { batchTopk =>
-        batchTopk.as[(Long, Long, Double, Int)].collect().foreach(results.add)
+      val q = MicroBatch.start(withNorm(mem.toDF()).writeStream) { b =>
+        probe(b.sparkSession, b)
+          .as[(Long, Long, Double, Int)].collect().foreach(results.add)
       }
       try {
         val qs = fixtureQueries
@@ -265,20 +270,21 @@ class VecStreamSpec extends AnyFunSuite {
 
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.as[(Long, Long, Double, Int)].collect().toSet
+    val declared = Pq.queryRelation(spark, fixture)
     run("ivfpq",
-      qs => VecStream.probeStreamIvfPq(qs, fixture, ivfDir, pqDir),
-      rows(Pq.topkIvfPqStored(spark, fixture, ivfDir, pqDir)))
+      (s, qs) => Pq.topkIvfPqStoredFor(s, qs, fixture, ivfDir, pqDir),
+      rows(Pq.topkIvfPqStoredFor(spark, declared, fixture, ivfDir, pqDir)))
     run("ivfpq_res",
-      qs => VecStream.probeStreamIvfPqRes(qs, fixture, ivfDir, resDir),
-      rows(Pq.topkIvfPqResStored(spark, fixture, ivfDir, resDir)))
+      (s, qs) => Pq.topkIvfPqResStoredFor(s, qs, fixture, ivfDir, resDir),
+      rows(Pq.topkIvfPqResStoredFor(spark, declared, fixture, ivfDir, resDir)))
     run("ivfsq",
-      qs => VecStream.probeStreamIvfSq(qs, fixture, ivfDir, sqDir),
-      rows(Sq.topkIvfSqStored(spark, fixture, ivfDir, sqDir)))
+      (s, qs) => Sq.topkIvfSqStoredFor(s, qs, fixture, ivfDir, sqDir),
+      rows(Sq.topkIvfSqStoredFor(spark, declared, fixture, ivfDir, sqDir)))
 
     val bqDir = s"$base/bq"
     graft.operators.Bq.writeBqIndex(spark, fixture, bqDir)
     run("bq",
-      qs => VecStream.probeStreamBq(qs, fixture, bqDir),
+      (s, qs) => graft.operators.Bq.topkBqStoredFor(s, qs, fixture, bqDir),
       rows(graft.operators.Bq.topkBqStored(spark, fixture, bqDir)))
   }
 
@@ -296,7 +302,8 @@ class VecStreamSpec extends AnyFunSuite {
       .select($"vec_id", $"embedding")
       .as[(Long, Array[Float])].collect()
     val mem = MemoryStream[NVec]
-    val q = VecStream.appendStreamRes(mem.toDF(), ivfDir, resDir)
+    val q = MicroBatch.start(mem.toDF().writeStream)(b =>
+      Pq.appendToResPqIndex(b.sparkSession, ivfDir, resDir, b))
     try {
       val (a, b) = clones.splitAt(clones.length / 2)
       mem.addData(a.map { case (id, e) => NVec(id + 1000000L, e) }.toSeq: _*)
@@ -325,8 +332,9 @@ class VecStreamSpec extends AnyFunSuite {
     assert(expect.nonEmpty)
     val got = scala.collection.mutable.Set.empty[(Long, Long, Double, Int)]
     val mem = MemoryStream[QVec]
-    val q = VecStream.probeStreamOpqRot(withNorm(mem.toDF()), fixture, dir) {
-      batch => got ++= batch.as[(Long, Long, Double, Int)].collect()
+    val q = MicroBatch.start(withNorm(mem.toDF()).writeStream) { b =>
+      got ++= Pq.topkOpqRotStoredFor(b.sparkSession, b, fixture, dir)
+        .as[(Long, Long, Double, Int)].collect()
     }
     try {
       val qs = fixtureQueries
@@ -359,8 +367,9 @@ class VecStreamSpec extends AnyFunSuite {
     val withN = mem.toDF().toDF("q_id", "q_emb", "q_label")
       .select($"q_id", $"q_emb",
         graft.functions.VectorFunctions.norm($"q_emb").as("q_nrm"), $"q_label")
-    val q = VecStream.mineStream(withN, fixture, dir) { batch =>
-      got ++= batch.as[(Long, Int, Long, Int, Double, Int)].collect()
+    val q = MicroBatch.start(withN.writeStream) { b =>
+      got ++= Similarity.hardNegativesAnnFor(b.sparkSession, fixture, dir, b)
+        .as[(Long, Int, Long, Int, Double, Int)].collect()
     }
     try {
       val (b1, b2) = anchors.splitAt(anchors.length / 2)
@@ -375,8 +384,9 @@ class VecStreamSpec extends AnyFunSuite {
     // a unique label becomes a minable negative from the next trigger
     val (cid, cemb, _) = anchors.head
     val memA = MemoryStream[(Long, Array[Float], Int)]
-    val qa = VecStream.appendStreamHardNeg(
-      memA.toDF().toDF("vec_id", "embedding", "label"), dir)
+    val qa = MicroBatch.start(
+      memA.toDF().toDF("vec_id", "embedding", "label").writeStream)(b =>
+      Similarity.appendToHardNegIndex(b.sparkSession, dir, b))
     try {
       memA.addData((cid + 5000000L, cemb, 999))
       qa.processAllAvailable()
