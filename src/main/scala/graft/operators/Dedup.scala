@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.sources.StoredRoot
 
 /** Deduplication operators for a training-data pipeline (builder
   * brief): exact content dedup (the scale generalization of the
@@ -495,25 +496,20 @@ object Dedup {
     * dropped — so takedown tombstone rows stop occupying scan space
     * and append fragmentation defrags, without changing any probe's
     * answer (the probe already sums; CdcLifecycleSpec pins
-    * compacted ≡ uncompacted). Staging + atomic-ish dir swap (the
-    * Similarity convention): a crash before the swap leaves the old
-    * layout fully intact.
+    * compacted ≡ uncompacted). Committed by [[StoredRoot.replace]]: a
+    * crash before the swap leaves the old layout fully intact.
     */
   def compactCdcIndex(s: SparkSession, indexDir: String): Unit = {
     import s.implicits._
     requireCountedCdcLayout(s, indexDir)
-    val folded = s.read.schema(cdcChunksSchema).parquet(s"$indexDir/chunks")
-      .groupBy($"bkt", $"h").agg(sum($"cnt").as("cnt"))
-      .filter($"cnt" > 0)
-      .repartition($"bkt")
-      .sortWithinPartitions($"bkt", $"h")
-    val fs = new org.apache.hadoop.fs.Path(indexDir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val staging = new org.apache.hadoop.fs.Path(s"$indexDir/chunks_staging")
-    fs.delete(staging, true)
-    folded.write.partitionBy("bkt").parquet(staging.toString)
-    graft.operators.Similarity.swapDirInto(s, staging,
-      new org.apache.hadoop.fs.Path(s"$indexDir/chunks"))
+    StoredRoot.replace(s, s"$indexDir/chunks") { staging =>
+      s.read.schema(cdcChunksSchema).parquet(s"$indexDir/chunks")
+        .groupBy($"bkt", $"h").agg(sum($"cnt").as("cnt"))
+        .filter($"cnt" > 0)
+        .repartition($"bkt")
+        .sortWithinPartitions($"bkt", $"h")
+        .write.partitionBy("bkt").parquet(staging)
+    }
   }
 
   /** The stored chunk relation's schema, pinned (partition-column
@@ -2322,42 +2318,40 @@ object Dedup {
         org.apache.spark.sql.types.IntegerType)))
     val sizesRel = s.read.parquet(s"$work/shingles")
       .select($"doc_id", $"n_shingles")
-    val staging = new org.apache.hadoop.fs.Path(s"${outDir}_staging")
-    fs.delete(staging, true)
-    for (f <- 0 until nFold) {
-      val folded = s.read.schema(partialSchema)
-        .parquet(s"$work/partial")
-        .filter(pmod($"shard", lit(nFold)) === f)
-        .groupBy($"p", $"shard").agg(sum($"n_common").as("n_common"))
-        .select(shiftrightunsigned($"p", 32).as("id_a"),
-          $"p".bitwiseAND(lit(0xffffffffL)).as("id_b"),
-          $"n_common", $"shard")
-        .join(sizesRel
-          // id_a determines the shard, so this join side prunes to
-          // the fold group's docs (row-local predicate)
-          .filter(pmod($"doc_id", lit(PairShards.toLong)) % nFold === f)
-          .select($"doc_id".as("id_a"), $"n_shingles".as("n_a")), "id_a")
-        .join(sizesRel
-          .select($"doc_id".as("id_b"), $"n_shingles".as("n_b")), "id_b")
-        .select($"id_a", $"id_b",
-          ($"n_common".cast("double") / ($"n_a" + $"n_b" - $"n_common"))
-            .as("jaccard"), $"shard")
-      folded
-        // RANGE-partition on (shard, id_a), never hash on shard alone:
-        // hash-on-shard makes each shard ONE task, and at the sf100
-        // fixture that task's dynamic-partition sort asks for a ~2 GB
-        // contiguous page (measured: UNABLE_TO_ACQUIRE_MEMORY aborts
-        // the fold write) — ranged tasks stay sampler-balanced while
-        // still clustering rows into their shard directory, the
-        // writeLexIndex lesson; files-per-shard ≈ tasks holding it
-        .repartitionByRange($"shard", $"id_a")
-        .sortWithinPartitions($"shard", $"id_a")
-        .write.mode("append").partitionBy("shard")
-        .parquet(staging.toString)
-      retire()
+    StoredRoot.replace(s, outDir) { staging =>
+      for (f <- 0 until nFold) {
+        val folded = s.read.schema(partialSchema)
+          .parquet(s"$work/partial")
+          .filter(pmod($"shard", lit(nFold)) === f)
+          .groupBy($"p", $"shard").agg(sum($"n_common").as("n_common"))
+          .select(shiftrightunsigned($"p", 32).as("id_a"),
+            $"p".bitwiseAND(lit(0xffffffffL)).as("id_b"),
+            $"n_common", $"shard")
+          .join(sizesRel
+            // id_a determines the shard, so this join side prunes to
+            // the fold group's docs (row-local predicate)
+            .filter(pmod($"doc_id", lit(PairShards.toLong)) % nFold === f)
+            .select($"doc_id".as("id_a"), $"n_shingles".as("n_a")), "id_a")
+          .join(sizesRel
+            .select($"doc_id".as("id_b"), $"n_shingles".as("n_b")), "id_b")
+          .select($"id_a", $"id_b",
+            ($"n_common".cast("double") / ($"n_a" + $"n_b" - $"n_common"))
+              .as("jaccard"), $"shard")
+        folded
+          // RANGE-partition on (shard, id_a), never hash on shard alone:
+          // hash-on-shard makes each shard ONE task, and at the sf100
+          // fixture that task's dynamic-partition sort asks for a ~2 GB
+          // contiguous page (measured: UNABLE_TO_ACQUIRE_MEMORY aborts
+          // the fold write) — ranged tasks stay sampler-balanced while
+          // still clustering rows into their shard directory, the
+          // writeLexIndex lesson; files-per-shard ≈ tasks holding it
+          .repartitionByRange($"shard", $"id_a")
+          .sortWithinPartitions($"shard", $"id_a")
+          .write.mode("append").partitionBy("shard")
+          .parquet(staging)
+        retire()
+      }
     }
-    graft.operators.Similarity.swapDirInto(s, staging,
-      new org.apache.hadoop.fs.Path(outDir))
     fs.delete(workPath, true)
   }
 
@@ -2488,7 +2482,7 @@ object Dedup {
 
   /** Physically purge tombstoned pairs from a stored pair relation:
     * rewrite the shards minus pairs touching a deleted endpoint
-    * (staging + dir swap — a crash before the swap leaves the old
+    * ([[StoredRoot.replace]] — a crash before the swap leaves the old
     * layout AND its tombstones intact, so the anti-join stays
     * correct; the swap replaces the whole dir, so the promote itself
     * retires the purged rows and their tombstones in one rename —
@@ -2501,26 +2495,21 @@ object Dedup {
     * silently (the explicit schema reads an absent column as null) —
     * self-describing beats a footgun default.
     */
-  def compactPairsDir(s: SparkSession, pairsDir: String): Unit = {
-    import s.implicits._
-    val storedCols = s.read.parquet(pairsDir).schema.fieldNames.toSet
-    val simCol = Seq("jaccard", "cos_sim").filter(storedCols.contains) match {
-      case Seq(one) => one
-      case other => sys.error(
-        s"$pairsDir is not a pair layout (score columns: $other; " +
-          s"stored: ${storedCols.mkString(",")})")
+  def compactPairsDir(s: SparkSession, pairsDir: String): Unit =
+    StoredRoot.replace(s, pairsDir) { staging =>
+      import s.implicits._
+      val storedCols = s.read.parquet(pairsDir).schema.fieldNames.toSet
+      val simCol = Seq("jaccard", "cos_sim").filter(storedCols.contains) match {
+        case Seq(one) => one
+        case other => sys.error(
+          s"$pairsDir is not a pair layout (score columns: $other; " +
+            s"stored: ${storedCols.mkString(",")})")
+      }
+      minusPairTombstones(s, pairsDir,
+        s.read.schema(pairSchema(simCol)).parquet(pairsDir))
+        .repartition($"shard")
+        .write.partitionBy("shard").parquet(staging)
     }
-    val survivors = minusPairTombstones(s, pairsDir,
-      s.read.schema(pairSchema(simCol)).parquet(pairsDir))
-      .repartition($"shard")
-    val fs = new org.apache.hadoop.fs.Path(pairsDir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val staging = new org.apache.hadoop.fs.Path(s"${pairsDir}_staging")
-    fs.delete(staging, true)
-    survivors.write.partitionBy("shard").parquet(staging.toString)
-    graft.operators.Similarity.swapDirInto(s, staging,
-      new org.apache.hadoop.fs.Path(pairsDir))
-  }
 
   /** One shard of a stored pair relation — the incremental/resumable
     * consumer's read; the filter is a static partition predicate, so
@@ -2641,24 +2630,22 @@ object Dedup {
       pairSchema("cos_sim").fields :+
         org.apache.spark.sql.types.StructField("pass",
           org.apache.spark.sql.types.IntegerType))
-    val staging = new org.apache.hadoop.fs.Path(s"${outDir}_staging")
-    fs.delete(staging, true)
-    val nFold = nPasses
-    for (f <- 0 until nFold) {
-      s.read.schema(partialSchema).parquet(s"$work/partial")
-        .filter(pmod($"shard", lit(nFold)) === f)
-        .dropDuplicates("id_a", "id_b")
-        .select($"id_a", $"id_b", $"cos_sim", $"shard")
-        // range, not hash-on-shard: the writeJaccardPairsSliced fold
-        // lesson (one-task-per-shard dynamic-partition sorts ask for
-        // multi-GB contiguous pages at the sf100 fixture)
-        .repartitionByRange($"shard", $"id_a")
-        .sortWithinPartitions($"shard", $"id_a")
-        .write.mode("append").partitionBy("shard").parquet(staging.toString)
-      retire()
+    StoredRoot.replace(s, outDir) { staging =>
+      val nFold = nPasses
+      for (f <- 0 until nFold) {
+        s.read.schema(partialSchema).parquet(s"$work/partial")
+          .filter(pmod($"shard", lit(nFold)) === f)
+          .dropDuplicates("id_a", "id_b")
+          .select($"id_a", $"id_b", $"cos_sim", $"shard")
+          // range, not hash-on-shard: the writeJaccardPairsSliced fold
+          // lesson (one-task-per-shard dynamic-partition sorts ask for
+          // multi-GB contiguous pages at the sf100 fixture)
+          .repartitionByRange($"shard", $"id_a")
+          .sortWithinPartitions($"shard", $"id_a")
+          .write.mode("append").partitionBy("shard").parquet(staging)
+        retire()
+      }
     }
-    graft.operators.Similarity.swapDirInto(s, staging,
-      new org.apache.hadoop.fs.Path(outDir))
     fs.delete(workPath, true)
   }
 

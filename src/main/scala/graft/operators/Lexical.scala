@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.sources.StoredRoot
 
 /** Stored lexical (postings) index — the BM25 side of the one-job-
   * builds / later-jobs-probe lifecycle the ANN families already have
@@ -31,8 +32,8 @@ import graft.Tables
   * from its own pruned postings (exact — the postings for a term are
   * all of that term's docs), so appends can never leave a stale df
   * sidecar behind. Writes stage into a sibling directory and promote
-  * via [[Similarity.swapDirInto]] (crash-safe, never a missing-index
-  * window); appends add files inside the bucket directories and
+  * via [[StoredRoot.replace]] (crash-safe, never a lost index);
+  * appends add files inside the bucket directories and
   * refresh `stats/` from the OLD stats + the batch aggregate (O(batch),
   * no corpus rescan), same single-writer contract as the ANN appends.
   *
@@ -74,50 +75,48 @@ object Lexical {
   }
 
   /** Build the stored index for the corpus under `d` at `outDir`. */
-  def writeLexIndex(s: SparkSession, d: String, outDir: String): Unit = {
-    import s.implicits._
-    val staging = new org.apache.hadoop.fs.Path(outDir + "_staging")
-    val fs = staging.getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.delete(staging, true)
-    val post = postingsOf(Tables.documents(s, d))
-      .withColumn("pbucket", bucketCol($"term"))
-    // RANGE-partition on (pbucket, term), never hash on pbucket alone:
-    // 64 distinct bucket values would cap the write at 64 tasks and
-    // make each bucket one straggler task at scale (measured at sf10:
-    // 84 s hash-on-bucket vs 73.5 s ranged for the full bm25_build —
-    // the residual is the tokenize pass, which is the honest floor).
-    // Every task covers a contiguous (bucket, term) slice, so files
-    // stay term-sorted AND range-disjoint — row-group pruning keeps
-    // its tight per-file term intervals, writes scale with the
-    // shuffle width.
-    post.repartitionByRange(col("pbucket"), col("term"))
-      .sortWithinPartitions($"term", $"doc_id")
-      .write.partitionBy("pbucket").parquet(s"$staging/postings")
-    // doclen is a SECOND tokenize pass on purpose: deriving it from
-    // the written postings instead (2-column scan + doc_id fold +
-    // zero-doc anti-join) was measured SLOWER at sf0.1 (4.8-5.1 s vs
-    // 4.3-4.7 s for the build) — the fold's shuffle of the
-    // postings-sized relation costs more than the shuffle-free map
-    // pass, and postings rows scale with token count, so the trade
-    // does not invert at corpus scale
-    Tables.documents(s, d)
-      .select($"doc_id", size(TextAnalysis.tokens($"text")).as("dl"))
-      .write.parquet(s"$staging/doclen")
-    // corpus stats from the doclen relation JUST WRITTEN — a 2-column
-    // parquet scan, not a third tokenize pass over the raw text
-    s.read.parquet(s"$staging/doclen")
-      .agg(count(lit(1)).as("n_docs"), avg($"dl").as("avgdl"))
-      .write.parquet(s"$staging/stats")
-    Similarity.swapDirInto(s, staging, new org.apache.hadoop.fs.Path(outDir))
-  }
+  def writeLexIndex(s: SparkSession, d: String, outDir: String): Unit =
+    StoredRoot.replace(s, outDir) { staging =>
+      import s.implicits._
+      val post = postingsOf(Tables.documents(s, d))
+        .withColumn("pbucket", bucketCol($"term"))
+      // RANGE-partition on (pbucket, term), never hash on pbucket alone:
+      // 64 distinct bucket values would cap the write at 64 tasks and
+      // make each bucket one straggler task at scale (measured at sf10:
+      // 84 s hash-on-bucket vs 73.5 s ranged for the full bm25_build —
+      // the residual is the tokenize pass, which is the honest floor).
+      // Every task covers a contiguous (bucket, term) slice, so files
+      // stay term-sorted AND range-disjoint — row-group pruning keeps
+      // its tight per-file term intervals, writes scale with the
+      // shuffle width.
+      post.repartitionByRange(col("pbucket"), col("term"))
+        .sortWithinPartitions($"term", $"doc_id")
+        .write.partitionBy("pbucket").parquet(s"$staging/postings")
+      // doclen is a SECOND tokenize pass on purpose: deriving it from
+      // the written postings instead (2-column scan + doc_id fold +
+      // zero-doc anti-join) was measured SLOWER at sf0.1 (4.8-5.1 s vs
+      // 4.3-4.7 s for the build) — the fold's shuffle of the
+      // postings-sized relation costs more than the shuffle-free map
+      // pass, and postings rows scale with token count, so the trade
+      // does not invert at corpus scale
+      Tables.documents(s, d)
+        .select($"doc_id", size(TextAnalysis.tokens($"text")).as("dl"))
+        .write.parquet(s"$staging/doclen")
+      // corpus stats from the doclen relation JUST WRITTEN — a 2-column
+      // parquet scan, not a third tokenize pass over the raw text
+      s.read.parquet(s"$staging/doclen")
+        .agg(count(lit(1)).as("n_docs"), avg($"dl").as("avgdl"))
+        .write.parquet(s"$staging/stats")
+    }
 
   /** Append a document batch to a stored index. Postings/doclen files
     * land inside the existing layout (files-per-bucket grows by one
     * per append task — periodic rebuild is the defragmentation, the
     * ANN-append convention); `stats/` is refreshed from the old row +
-    * the batch aggregate, O(batch), then swapped in crash-safe. Batch
-    * doc_ids must be disjoint from the stored ones (content-addressed
-    * upstream, the tracking-table convention). Single-writer.
+    * the batch aggregate, O(batch), then committed by
+    * [[StoredRoot.replace]]. Batch doc_ids must be disjoint from the
+    * stored ones (content-addressed upstream, the tracking-table
+    * convention). Single-writer.
     *
     * CRASH WINDOW — wrong scores, not missing rows: a crash after the
     * postings append but before the stats swap leaves the new
@@ -177,15 +176,13 @@ object Lexical {
       .agg(count(lit(1)), sum($"dl"))
       .as[(Long, Option[Long])].head()
     promoteDoclenPending(fs, indexDir)
-    val (n0, avg0) = s.read.parquet(s"$indexDir/stats")
-      .as[(Long, Double)].head()
-    val n1 = n0 + bn
-    val avg1 = if (n1 == 0) 0.0 else (n0 * avg0 + bsum.getOrElse(0L)) / n1
-    val tmp = new org.apache.hadoop.fs.Path(s"$indexDir/stats_updating")
-    Seq((n1, avg1)).toDF("n_docs", "avgdl")
-      .write.mode("overwrite").parquet(tmp.toString)
-    Similarity.swapDirInto(s, tmp,
-      new org.apache.hadoop.fs.Path(s"$indexDir/stats"))
+    StoredRoot.replace(s, s"$indexDir/stats") { staging =>
+      val (n0, avg0) = s.read.parquet(s"$indexDir/stats")
+        .as[(Long, Double)].head()
+      val n1 = n0 + bn
+      val avg1 = if (n1 == 0) 0.0 else (n0 * avg0 + bsum.getOrElse(0L)) / n1
+      Seq((n1, avg1)).toDF("n_docs", "avgdl").write.parquet(staging)
+    }
     fs.delete(marker, false)
   }
 
@@ -282,10 +279,10 @@ object Lexical {
     *     recoverable — they have no postings and no staging — and
     *     n_docs/avgdl settle on the recoverable corpus).
     *  2. stats ← doclen: recomputed the fresh-build way over the
-    *     doc-count-sized doclen relation and swapped crash-safe,
-    *     closing the stale-n_docs/avgdl window the append scaladoc
-    *     names; the marker is cleared LAST (a crash mid-repair leaves
-    *     it, and repair is idempotent).
+    *     doc-count-sized doclen relation and committed by
+    *     [[StoredRoot.replace]], closing the stale-n_docs/avgdl window
+    *     the append scaladoc names; the marker is cleared LAST (a crash
+    *     mid-repair leaves it, and repair is idempotent).
     *
     * `force = true` runs the full-corpus recovery scan regardless of
     * the marker — the belt-and-suspenders path for an index whose
@@ -361,12 +358,11 @@ object Lexical {
       if (!missing.isEmpty)
         missing.write.mode("append").parquet(s"$indexDir/doclen")
     }
-    val tmp = new org.apache.hadoop.fs.Path(s"$indexDir/stats_repairing")
-    s.read.parquet(s"$indexDir/doclen")
-      .agg(count(lit(1)).as("n_docs"), avg($"dl").as("avgdl"))
-      .write.parquet(tmp.toString)
-    Similarity.swapDirInto(s, tmp,
-      new org.apache.hadoop.fs.Path(s"$indexDir/stats"))
+    StoredRoot.replace(s, s"$indexDir/stats") { staging =>
+      s.read.parquet(s"$indexDir/doclen")
+        .agg(count(lit(1)).as("n_docs"), avg($"dl").as("avgdl"))
+        .write.parquet(staging)
+    }
     fs.delete(marker, false)
     recent.length.toLong
   }
@@ -398,37 +394,39 @@ object Lexical {
       Seq("doc_id"), "left_anti")
   }
 
-  /** Physically purge tombstoned documents: rewrite postings (bucket
-    * layout preserved) and doclen minus the tombstones, REFRESH stats
-    * from the surviving doclen (after compaction the index is
-    * byte-equivalent to a fresh build on the surviving corpus — the
-    * Lucene merge semantics, spec-pinned), clear tombstones LAST so a
-    * crash leaves them over already-purged rows, re-applied
-    * idempotently by the anti-join.
+  /** Physically purge tombstoned documents, in place:
+    * [[compactLexInto]] folds the index into a staging sibling and
+    * [[StoredRoot.replace]] swaps the whole dir, so postings, doclen and
+    * stats change in one swap and the tombstones retire with the old
+    * root (a crash before the swap leaves the old index and its
+    * tombstones intact). `StoredRoot.cut` over the same fold is the
+    * form for readers that must never see the swap: the 24/7 serve
+    * lines (txt_bm25_serve / bm25For batches).
     */
-  def compactLexIndex(s: SparkSession, indexDir: String): Unit = {
+  def compactLexIndex(s: SparkSession, indexDir: String): Unit =
+    StoredRoot.replace(s, indexDir)(compactLexInto(s, indexDir, _))
+
+  /** The lexical compaction fold, from the index at `srcDir` into a new
+    * layout at `outDir`: postings minus the tombstones with the
+    * builder's range-partition/sort discipline, doclen minus the
+    * tombstones, stats refreshed from the surviving doclen — the new
+    * layout is byte-equivalent to a fresh build on the surviving
+    * corpus (the Lucene merge semantics, spec-pinned). A crashed
+    * append is repaired first: its pending marker and staged doclen
+    * live in `srcDir` and would not reach the new layout.
+    */
+  def compactLexInto(s: SparkSession, srcDir: String, outDir: String): Unit = {
     import s.implicits._
-    val fs = new org.apache.hadoop.fs.Path(indexDir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val pTmp = new org.apache.hadoop.fs.Path(s"$indexDir/postings_compacting")
-    minusDocTombstones(s, indexDir, s.read.parquet(s"$indexDir/postings"))
+    repairLexIndex(s, srcDir)
+    minusDocTombstones(s, srcDir, s.read.parquet(s"$srcDir/postings"))
       .repartitionByRange(col("pbucket"), col("term"))
       .sortWithinPartitions($"term", $"doc_id")
-      .write.partitionBy("pbucket").parquet(pTmp.toString)
-    Similarity.swapDirInto(s, pTmp,
-      new org.apache.hadoop.fs.Path(s"$indexDir/postings"))
-    val dTmp = new org.apache.hadoop.fs.Path(s"$indexDir/doclen_compacting")
-    minusDocTombstones(s, indexDir, s.read.parquet(s"$indexDir/doclen"))
-      .write.parquet(dTmp.toString)
-    Similarity.swapDirInto(s, dTmp,
-      new org.apache.hadoop.fs.Path(s"$indexDir/doclen"))
-    val sTmp = new org.apache.hadoop.fs.Path(s"$indexDir/stats_compacting")
-    s.read.parquet(s"$indexDir/doclen")
+      .write.partitionBy("pbucket").parquet(s"$outDir/postings")
+    minusDocTombstones(s, srcDir, s.read.parquet(s"$srcDir/doclen"))
+      .write.parquet(s"$outDir/doclen")
+    s.read.parquet(s"$outDir/doclen")
       .agg(count(lit(1)).as("n_docs"), avg($"dl").as("avgdl"))
-      .write.parquet(sTmp.toString)
-    Similarity.swapDirInto(s, sTmp,
-      new org.apache.hadoop.fs.Path(s"$indexDir/stats"))
-    fs.delete(new org.apache.hadoop.fs.Path(docTombstonesPath(indexDir)), true)
+      .write.parquet(s"$outDir/stats")
   }
 
   /** Top-[[TextAnalysis.Bm25K]] BM25 over the STORED index: partition-
@@ -544,88 +542,6 @@ object Lexical {
     2L -> "spark",
     3L -> "join", 3L -> "filter",
     4L -> "spark", 4L -> "zz_absent_term_zz")
-
-  // ------------------------------------------------------------------
-  // Versioned lexical root — the manifest-pointer atomic cutover
-  // (Similarity's LSH/IVF template, r18 verdict item 6) applied to the
-  // family that needed it MOST: bm25 has live 24/7 serve lines
-  // (txt_bm25_serve / bm25For batches), and the in-place
-  // [[compactLexIndex]] performs THREE sequential swaps (postings,
-  // doclen, stats) — a concurrent reader can catch stats out of step
-  // with the folded postings, or transiently see a missing directory
-  // mid-swap. Under the versioned root the whole layout lives in
-  // immutable version dirs, a probe resolves `_graft_current` once
-  // (snapshot isolation for its lifetime), and compaction flips the
-  // pointer after the complete (postings, doclen, stats) triple is on
-  // disk — all three become visible ATOMICALLY. Pointer/retention
-  // machinery is [[Similarity.cutVersion]] / resolveCurrentVersion,
-  // family-agnostic; LexVersionedSpec races probes against cutover
-  // compactions and pins zero failures and stable answers.
-  // ------------------------------------------------------------------
-
-  /** Build the stored lexical index under a VERSIONED root: the
-    * layout lands in a fresh version dir, then the pointer cuts over
-    * — an existing serving root rebuilds in place with zero reader
-    * disruption.
-    */
-  def writeLexIndexVersioned(s: SparkSession, d: String,
-      root: String): Unit = {
-    val name = Similarity.freshVersionName()
-    writeLexIndex(s, d, s"$root/$name")
-    Similarity.cutVersion(s, root, name)
-  }
-
-  /** [[topkBm25Stored]] against the version resolved once at entry. */
-  def topkBm25Versioned(s: SparkSession, root: String,
-      terms: Seq[String] = TextAnalysis.Bm25QueryTerms): DataFrame =
-    topkBm25Stored(s, Similarity.resolveCurrentVersion(s, root), terms)
-
-  /** [[bm25For]] (the serve batch) against the version resolved once
-    * at entry — the 24/7 line the cutover protects.
-    */
-  def bm25ForVersioned(s: SparkSession, root: String, queries: DataFrame,
-      k: Int = TextAnalysis.Bm25K,
-      termCap: Int = ServeTermCap): DataFrame =
-    bm25For(s, Similarity.resolveCurrentVersion(s, root), queries, k,
-      termCap)
-
-  /** Tombstone doc ids in the live version (id-sized append).
-    * Single writer: a tombstone that races a
-    * [[compactLexIndexVersioned]] can be lost, because the compaction
-    * folds the version it resolved and cuts over to a new one that
-    * never sees a later append to the old. The versioned root makes
-    * readers atomic against a writer, not writers against each other.
-    */
-  def deleteFromLexIndexVersioned(s: SparkSession, root: String,
-      docIds: DataFrame): Unit =
-    deleteFromLexIndex(s, Similarity.resolveCurrentVersion(s, root), docIds)
-
-  /** Compact a versioned lexical root with zero reader disruption:
-    * the tombstone-folded postings land in a NEW version dir with the
-    * same range-partition/sort discipline as the builder, doclen
-    * minus the tombstones beside them, stats refreshed from the
-    * surviving doclen — and the pointer flips ONCE, where the
-    * in-place compactor's three sequential swaps expose partially-
-    * compacted state to a racing reader. After the cutover the live
-    * version is byte-equivalent to a fresh build on the surviving
-    * corpus (the Lucene merge semantics, as [[compactLexIndex]]).
-    */
-  def compactLexIndexVersioned(s: SparkSession, root: String): Unit = {
-    import s.implicits._
-    val cur = Similarity.resolveCurrentVersion(s, root)
-    val name = Similarity.freshVersionName()
-    val fresh = s"$root/$name"
-    minusDocTombstones(s, cur, s.read.parquet(s"$cur/postings"))
-      .repartitionByRange(col("pbucket"), col("term"))
-      .sortWithinPartitions($"term", $"doc_id")
-      .write.partitionBy("pbucket").parquet(s"$fresh/postings")
-    minusDocTombstones(s, cur, s.read.parquet(s"$cur/doclen"))
-      .write.parquet(s"$fresh/doclen")
-    s.read.parquet(s"$fresh/doclen")
-      .agg(count(lit(1)).as("n_docs"), avg($"dl").as("avgdl"))
-      .write.parquet(s"$fresh/stats")
-    Similarity.cutVersion(s, root, name)
-  }
 
   private def storedLexDir(d: String): String =
     Similarity.storedQueryDir("bm25", d)

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.sources.StoredRoot
 
 /** Multimodal-column operators (builder brief): treat image/audio/video
   * payloads as opaque `binary` columns with typed metadata, and run
@@ -1432,7 +1433,7 @@ object Multimodal {
 
   /** Physically purge tombstones and defrag append fragmentation from
     * a stored pHash index: rewrite the band rows minus the tombstoned
-    * ids (staging + dir swap — a crash before the swap leaves the old
+    * ids ([[StoredRoot.replace]] — a crash before the swap leaves the old
     * layout intact), then clear the tombstones LAST (the
     * compactIvfIndex crash discipline: a crash between swap and clear
     * leaves tombstones over already-purged rows — the anti-join is
@@ -1440,19 +1441,15 @@ object Multimodal {
     */
   def compactPhashIndex(s: SparkSession, indexDir: String): Unit = {
     import s.implicits._
-    val survivors = phashMinusTombstones(s, indexDir,
-      s.read.schema(phashBandsSchema).parquet(s"$indexDir/bands"))
-      .repartition($"band")
-      .sortWithinPartitions($"band", $"bval")
-    val fs = new org.apache.hadoop.fs.Path(indexDir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val staging = new org.apache.hadoop.fs.Path(s"$indexDir/bands_staging")
-    fs.delete(staging, true)
-    survivors.write.partitionBy("band").parquet(staging.toString)
-    graft.operators.Similarity.swapDirInto(s, staging,
-      new org.apache.hadoop.fs.Path(s"$indexDir/bands"))
-    fs.delete(new org.apache.hadoop.fs.Path(s"$indexDir/_graft_tombstones"),
-      true)
+    StoredRoot.replace(s, s"$indexDir/bands") { staging =>
+      phashMinusTombstones(s, indexDir,
+        s.read.schema(phashBandsSchema).parquet(s"$indexDir/bands"))
+        .repartition($"band")
+        .sortWithinPartitions($"band", $"bval")
+        .write.partitionBy("band").parquet(staging)
+    }
+    val tp = new org.apache.hadoop.fs.Path(s"$indexDir/_graft_tombstones")
+    tp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(tp, true)
   }
 
   /** The stored band relation's schema, pinned (partition-column
@@ -1663,7 +1660,7 @@ object Multimodal {
     *     media corpus — joined to the id batch);
     *  3. the groups relation is rewritten folded, with every affected
     *     hash's row REPLACED by the survivors' (min id, count) — or
-    *     dropped when no member survives — staging + dir swap.
+    *     dropped when no member survives — [[StoredRoot.replace]].
     *
     * Delete ≡ rebuild-over-survivors exactly (PhashLifecycleSpec pins
     * it, rep re-election included). Cost: one groups rewrite
@@ -1713,24 +1710,22 @@ object Multimodal {
     val recomputed = phashBandRows(surv.select($"rep".as("media_id"), $"phash"))
       .join(surv.select($"phash", $"rep", $"n"), Seq("phash"))
       .select($"band", $"bval", $"phash", $"rep", $"n")
-    val unaffected = s.read.schema(phashGroupsSchema)
-      .parquet(s"$indexDir/groups")
-      .groupBy($"band", $"bval", $"phash")
-      .agg(min($"rep").as("rep"), sum($"n").as("n"))
-      .join(affected, Seq("phash"), "left_anti")
-      .select($"band", $"bval", $"phash", $"rep", $"n")
-    val staging = new org.apache.hadoop.fs.Path(s"$indexDir/groups_deleting")
-    fs.delete(staging, true)
-    unaffected.union(recomputed)
-      .repartition($"band")
-      .sortWithinPartitions($"band", $"bval")
-      .write.partitionBy("band").parquet(staging.toString)
-    graft.operators.Similarity.swapDirInto(s, staging,
-      new org.apache.hadoop.fs.Path(s"$indexDir/groups"))
+    StoredRoot.replace(s, s"$indexDir/groups") { staging =>
+      s.read.schema(phashGroupsSchema)
+        .parquet(s"$indexDir/groups")
+        .groupBy($"band", $"bval", $"phash")
+        .agg(min($"rep").as("rep"), sum($"n").as("n"))
+        .join(affected, Seq("phash"), "left_anti")
+        .select($"band", $"bval", $"phash", $"rep", $"n")
+        .union(recomputed)
+        .repartition($"band")
+        .sortWithinPartitions($"band", $"bval")
+        .write.partitionBy("band").parquet(staging)
+    }
   }
 
   /** Fold a stored group index physically — one row per hash (rep =
-    * min, n = sum across append deltas), staging + dir swap. No
+    * min, n = sum across append deltas), [[StoredRoot.replace]]. No
     * probe's answer changes when every delete was applied (the probe
     * already folds; PhashLifecycleSpec pins compacted ≡ uncompacted);
     * with PENDING member tombstones (a delete crashed before its
@@ -1749,42 +1744,39 @@ object Multimodal {
     val membersPath = new org.apache.hadoop.fs.Path(s"$indexDir/members")
     val tombPath = new org.apache.hadoop.fs.Path(
       s"$indexDir/_graft_member_tombstones")
-    val folded =
-      if (!fs.exists(membersPath))
-        s.read.schema(phashGroupsSchema).parquet(s"$indexDir/groups")
-          .groupBy($"band", $"bval", $"phash")
-          .agg(min($"rep").as("rep"), sum($"n").as("n"))
-          .select($"band", $"bval", $"phash", $"rep", $"n")
-      else {
-        val raw = s.read.schema(phashMembersSchema)
-          .parquet(s"$indexDir/members")
-        val members =
-          if (!fs.exists(tombPath)) raw
-          else raw.join(s.read.schema("media_id BIGINT")
-            .parquet(tombPath.toString), Seq("media_id"), "left_anti")
-        val mStaging = new org.apache.hadoop.fs.Path(
-          s"$indexDir/members_compacting")
-        fs.delete(mStaging, true)
-        members.repartition($"mbkt")
-          .sortWithinPartitions($"mbkt", $"phash")
-          .write.partitionBy("mbkt").parquet(mStaging.toString)
-        graft.operators.Similarity.swapDirInto(s, mStaging, membersPath)
-        val surv = s.read.schema(phashMembersSchema)
-          .parquet(s"$indexDir/members")
-          .groupBy($"phash")
-          .agg(min($"media_id").as("rep"), count(lit(1)).as("n"))
-        phashBandRows(surv.select($"rep".as("media_id"), $"phash"))
-          .join(surv.select($"phash", $"rep", $"n"), Seq("phash"))
-          .select($"band", $"bval", $"phash", $"rep", $"n")
-      }
-    val staging = new org.apache.hadoop.fs.Path(s"$indexDir/groups_staging")
-    fs.delete(staging, true)
-    folded
-      .repartition($"band")
-      .sortWithinPartitions($"band", $"bval")
-      .write.partitionBy("band").parquet(staging.toString)
-    graft.operators.Similarity.swapDirInto(s, staging,
-      new org.apache.hadoop.fs.Path(s"$indexDir/groups"))
+    val withMembers = fs.exists(membersPath)
+    if (withMembers) StoredRoot.replace(s, membersPath.toString) { staging =>
+      val raw = s.read.schema(phashMembersSchema)
+        .parquet(s"$indexDir/members")
+      val members =
+        if (!fs.exists(tombPath)) raw
+        else raw.join(s.read.schema("media_id BIGINT")
+          .parquet(tombPath.toString), Seq("media_id"), "left_anti")
+      members.repartition($"mbkt")
+        .sortWithinPartitions($"mbkt", $"phash")
+        .write.partitionBy("mbkt").parquet(staging)
+    }
+    StoredRoot.replace(s, s"$indexDir/groups") { staging =>
+      val folded =
+        if (!withMembers)
+          s.read.schema(phashGroupsSchema).parquet(s"$indexDir/groups")
+            .groupBy($"band", $"bval", $"phash")
+            .agg(min($"rep").as("rep"), sum($"n").as("n"))
+            .select($"band", $"bval", $"phash", $"rep", $"n")
+        else {
+          val surv = s.read.schema(phashMembersSchema)
+            .parquet(s"$indexDir/members")
+            .groupBy($"phash")
+            .agg(min($"media_id").as("rep"), count(lit(1)).as("n"))
+          phashBandRows(surv.select($"rep".as("media_id"), $"phash"))
+            .join(surv.select($"phash", $"rep", $"n"), Seq("phash"))
+            .select($"band", $"bval", $"phash", $"rep", $"n")
+        }
+      folded
+        .repartition($"band")
+        .sortWithinPartitions($"band", $"bval")
+        .write.partitionBy("band").parquet(staging)
+    }
     fs.delete(tombPath, true)
   }
 
@@ -1972,23 +1964,21 @@ object Multimodal {
       Dedup.pairSchema("cos_sim").fields :+
         org.apache.spark.sql.types.StructField("pass",
           org.apache.spark.sql.types.IntegerType))
-    val staging = new org.apache.hadoop.fs.Path(s"${outDir}_staging")
-    fs.delete(staging, true)
-    for (f <- 0 until nPasses) {
-      s.read.schema(partialSchema).parquet(s"$work/partial")
-        .filter(pmod($"shard", lit(nPasses)) === f)
-        .dropDuplicates("id_a", "id_b")
-        .select($"id_a", $"id_b", $"cos_sim", $"shard")
-        // range, not hash-on-shard: the writeJaccardPairsSliced fold
-        // lesson (one-task-per-shard dynamic-partition sorts ask for
-        // multi-GB contiguous pages at the big fixtures)
-        .repartitionByRange($"shard", $"id_a")
-        .sortWithinPartitions($"shard", $"id_a")
-        .write.mode("append").partitionBy("shard").parquet(staging.toString)
-      retire()
+    StoredRoot.replace(s, outDir) { staging =>
+      for (f <- 0 until nPasses) {
+        s.read.schema(partialSchema).parquet(s"$work/partial")
+          .filter(pmod($"shard", lit(nPasses)) === f)
+          .dropDuplicates("id_a", "id_b")
+          .select($"id_a", $"id_b", $"cos_sim", $"shard")
+          // range, not hash-on-shard: the writeJaccardPairsSliced fold
+          // lesson (one-task-per-shard dynamic-partition sorts ask for
+          // multi-GB contiguous pages at the big fixtures)
+          .repartitionByRange($"shard", $"id_a")
+          .sortWithinPartitions($"shard", $"id_a")
+          .write.mode("append").partitionBy("shard").parquet(staging)
+        retire()
+      }
     }
-    graft.operators.Similarity.swapDirInto(s, staging,
-      new org.apache.hadoop.fs.Path(outDir))
     fs.delete(workPath, true)
   }
 

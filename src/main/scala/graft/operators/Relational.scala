@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
+import graft.sources.StoredRoot
 
 /** Relational operator surface (SURVEY.md §2.2–§2.8): projections,
   * filters, equi/semi/anti joins, aggregations, window functions,
@@ -864,8 +865,8 @@ object Relational {
     * exact); counts add, bmn/bmx min/max — the CMS/KMV merge-algebra
     * discipline, order-independent. New types freeze their own edges
     * on first sight. Both relations stage into one sibling dir and
-    * swap atomically (a crash can never leave stats counting rows the
-    * histogram does not).
+    * swap together through [[StoredRoot.replace]] (a crash can never
+    * leave stats counting rows the histogram does not).
     */
   def writeQuantileHist(ev0: DataFrame, dir: String): Unit =
     mergeIntoQuantileHist(ev0, dir)
@@ -874,54 +875,52 @@ object Relational {
     val s = batch0.sparkSession
     import s.implicits._
     val batch = batch0.toDF("event_type", "value").filter($"value".isNotNull)
-    val statsPath = new org.apache.hadoop.fs.Path(s"$dir/stats")
-    val fs = statsPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val stored: Map[String, (Long, Double, Double, Double, Double)] =
-      if (!fs.exists(statsPath)) Map.empty
-      else s.read.parquet(statsPath.toString)
-        .as[(String, Long, Double, Double, Double, Double)].collect()
-        .map(r => r._1 -> ((r._2, r._3, r._4, r._5, r._6))).toMap
-    val bStats = batch.groupBy($"event_type")
-      .agg(count(lit(1)).as("n"), min($"value").as("mn"),
-        max($"value").as("mx"))
-      .as[(String, Long, Double, Double)].collect()
-    val mergedStats = {
-      val m = scala.collection.mutable.Map(stored.toSeq: _*)
-      for ((tpe, n, mn, mx) <- bStats) m.get(tpe) match {
-        case Some((n0, mn0, mx0, emn, emx)) =>
-          m(tpe) = (n0 + n, math.min(mn0, mn), math.max(mx0, mx), emn, emx)
-        case None => m(tpe) = (n, mn, mx, mn, mx)
+    StoredRoot.replace(s, dir) { staging =>
+      val statsPath = new org.apache.hadoop.fs.Path(s"$dir/stats")
+      val fs = statsPath.getFileSystem(s.sparkContext.hadoopConfiguration)
+      val stored: Map[String, (Long, Double, Double, Double, Double)] =
+        if (!fs.exists(statsPath)) Map.empty
+        else s.read.parquet(statsPath.toString)
+          .as[(String, Long, Double, Double, Double, Double)].collect()
+          .map(r => r._1 -> ((r._2, r._3, r._4, r._5, r._6))).toMap
+      val bStats = batch.groupBy($"event_type")
+        .agg(count(lit(1)).as("n"), min($"value").as("mn"),
+          max($"value").as("mx"))
+        .as[(String, Long, Double, Double)].collect()
+      val mergedStats = {
+        val m = scala.collection.mutable.Map(stored.toSeq: _*)
+        for ((tpe, n, mn, mx) <- bStats) m.get(tpe) match {
+          case Some((n0, mn0, mx0, emn, emx)) =>
+            m(tpe) = (n0 + n, math.min(mn0, mn), math.max(mx0, mx), emn, emx)
+          case None => m(tpe) = (n, mn, mx, mn, mx)
+        }
+        m.toMap
       }
-      m.toMap
-    }
-    // batch histogram against the FROZEN edges, clamped both ends
-    val edges = broadcast(mergedStats.toSeq
-      .map { case (tpe, (_, _, _, emn, emx)) => (tpe, emn, emx) }
-      .toDF("tpe", "emn", "emx"))
-    val bHist = batch.join(edges, $"event_type" === $"tpe")
-      .withColumn("bin", least(greatest(floor(($"value" - $"emn") *
-        lit(QuantileBins.toDouble) /
-        greatest($"emx" - $"emn", lit(java.lang.Double.MIN_VALUE))),
-        lit(0.0)), lit((QuantileBins - 1).toDouble)).cast("long"))
-      .groupBy($"event_type", $"bin")
-      .agg(count(lit(1)).as("cnt"), min($"value").as("bmn"),
-        max($"value").as("bmx"))
-    val histPath = s"$dir/hist"
-    val merged =
-      if (!fs.exists(new org.apache.hadoop.fs.Path(histPath))) bHist
-      else s.read.parquet(histPath).unionByName(bHist)
+      // batch histogram against the FROZEN edges, clamped both ends
+      val edges = broadcast(mergedStats.toSeq
+        .map { case (tpe, (_, _, _, emn, emx)) => (tpe, emn, emx) }
+        .toDF("tpe", "emn", "emx"))
+      val bHist = batch.join(edges, $"event_type" === $"tpe")
+        .withColumn("bin", least(greatest(floor(($"value" - $"emn") *
+          lit(QuantileBins.toDouble) /
+          greatest($"emx" - $"emn", lit(java.lang.Double.MIN_VALUE))),
+          lit(0.0)), lit((QuantileBins - 1).toDouble)).cast("long"))
         .groupBy($"event_type", $"bin")
-        .agg(sum($"cnt").as("cnt"), min($"bmn").as("bmn"),
-          max($"bmx").as("bmx"))
-    val staging = new org.apache.hadoop.fs.Path(dir + "_staging")
-    fs.delete(staging, true)
-    merged.write.parquet(s"$staging/hist")
-    mergedStats.toSeq
-      .map { case (tpe, (n, mn, mx, emn, emx)) => (tpe, n, mn, mx, emn, emx) }
-      .toDF("event_type", "n", "mn", "mx", "emn", "emx")
-      .write.parquet(s"$staging/stats")
-    graft.operators.Similarity.swapDirInto(s, staging,
-      new org.apache.hadoop.fs.Path(dir))
+        .agg(count(lit(1)).as("cnt"), min($"value").as("bmn"),
+          max($"value").as("bmx"))
+      val histPath = s"$dir/hist"
+      val merged =
+        if (!fs.exists(new org.apache.hadoop.fs.Path(histPath))) bHist
+        else s.read.parquet(histPath).unionByName(bHist)
+          .groupBy($"event_type", $"bin")
+          .agg(sum($"cnt").as("cnt"), min($"bmn").as("bmn"),
+            max($"bmx").as("bmx"))
+      merged.write.parquet(s"$staging/hist")
+      mergedStats.toSeq
+        .map { case (tpe, (n, mn, mx, emn, emx)) => (tpe, n, mn, mx, emn, emx) }
+        .toDF("event_type", "n", "mn", "mx", "emn", "emx")
+        .write.parquet(s"$staging/stats")
+    }
   }
 
   /** Probe the stored histogram: walk the bounded stored bins to one
@@ -1061,8 +1060,8 @@ object Relational {
     * concurrency layout — the live-ingest half
     * ([[graft.streaming.EventStream.concurrencyLayoutStream]]):
     * events land FIRST (day-partitioned, bucket-sorted files), then
-    * the count sidecars merge by the counts-add algebra under a
-    * crash-safe staging swap. A crash BETWEEN the two leaves the
+    * the count sidecars merge by the counts-add algebra under
+    * [[StoredRoot.replace]]. A crash BETWEEN the two leaves the
     * sidecars stale-low for the appended buckets — interior legs
     * UNDERCOUNT until [[repairConcurrencyLayout]] recomputes counts
     * from the stored events (the repairLexIndex convention; the
@@ -1091,26 +1090,23 @@ object Relational {
   }
 
   private def mergeConcurrencyCounts(s: SparkSession, batch: DataFrame,
-      dir: String): Unit = {
-    import s.implicits._
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val countsPath = new org.apache.hadoop.fs.Path(s"$dir/counts")
-    val bcb = batch.groupBy($"bkt").agg(count(lit(1)).as("cb"))
-    val bcbu = batch.groupBy($"bkt", $"user_id").agg(count(lit(1)).as("cbu"))
-    val (mcb, mcbu) =
-      if (!fs.exists(countsPath)) (bcb, bcbu)
-      else (
-        s.read.parquet(s"$countsPath/cb").unionByName(bcb)
-          .groupBy($"bkt").agg(sum($"cb").as("cb")),
-        s.read.parquet(s"$countsPath/cbu").unionByName(bcbu)
-          .groupBy($"bkt", $"user_id").agg(sum($"cbu").as("cbu")))
-    val staging = new org.apache.hadoop.fs.Path(s"$dir/counts_staging")
-    fs.delete(staging, true)
-    mcb.write.parquet(s"$staging/cb")
-    mcbu.write.parquet(s"$staging/cbu")
-    graft.operators.Similarity.swapDirInto(s, staging, countsPath)
-  }
+      dir: String): Unit =
+    StoredRoot.replace(s, s"$dir/counts") { staging =>
+      import s.implicits._
+      val countsPath = new org.apache.hadoop.fs.Path(s"$dir/counts")
+      val bcb = batch.groupBy($"bkt").agg(count(lit(1)).as("cb"))
+      val bcbu = batch.groupBy($"bkt", $"user_id").agg(count(lit(1)).as("cbu"))
+      val (mcb, mcbu) =
+        if (!countsPath.getFileSystem(s.sparkContext.hadoopConfiguration)
+            .exists(countsPath)) (bcb, bcbu)
+        else (
+          s.read.parquet(s"$countsPath/cb").unionByName(bcb)
+            .groupBy($"bkt").agg(sum($"cb").as("cb")),
+          s.read.parquet(s"$countsPath/cbu").unionByName(bcbu)
+            .groupBy($"bkt", $"user_id").agg(sum($"cbu").as("cbu")))
+      mcb.write.parquet(s"$staging/cb")
+      mcbu.write.parquet(s"$staging/cbu")
+    }
 
   /** Rebuild the count sidecars FROM the stored events — restores
     * consistency after an append crash (stale-low counts), exactly as
@@ -1120,16 +1116,12 @@ object Relational {
   def repairConcurrencyLayout(s: SparkSession, dir: String): Unit = {
     import s.implicits._
     val ev = storedConcEvents(s, dir).select($"user_id", $"ts_ms", $"bkt")
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val staging = new org.apache.hadoop.fs.Path(s"$dir/counts_staging")
-    fs.delete(staging, true)
-    ev.groupBy($"bkt").agg(count(lit(1)).as("cb"))
-      .write.parquet(s"$staging/cb")
-    ev.groupBy($"bkt", $"user_id").agg(count(lit(1)).as("cbu"))
-      .write.parquet(s"$staging/cbu")
-    graft.operators.Similarity.swapDirInto(s, staging,
-      new org.apache.hadoop.fs.Path(s"$dir/counts"))
+    StoredRoot.replace(s, s"$dir/counts") { staging =>
+      ev.groupBy($"bkt").agg(count(lit(1)).as("cb"))
+        .write.parquet(s"$staging/cb")
+      ev.groupBy($"bkt", $"user_id").agg(count(lit(1)).as("cbu"))
+        .write.parquet(s"$staging/cbu")
+    }
   }
 
   /** The clustered event relation with its partition-column type
@@ -1172,7 +1164,8 @@ object Relational {
     * on, a deleted user's events count toward NOBODY's concurrency.
     *
     * Ordering + crash window: tombstones land FIRST (edge legs stop
-    * answering immediately), then both sidecars swap crash-safe. A
+    * answering immediately), then both sidecars swap in one
+    * [[StoredRoot.replace]]. A
     * crash between the two leaves interior legs stale-HIGH for the
     * deleted users' contributions; RE-RUNNING the delete converges
     * (the users' cbu rows are gone after the first completed swap, so
@@ -1199,28 +1192,24 @@ object Relational {
     try {
       ids.coalesce(1).write.mode("append")
         .parquet(concUserTombstonesPath(dir))
-      val fs = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      val cbu = s.read.parquet(s"$dir/counts/cbu")
-      val deleted = cbu.join(ids, Seq("user_id"), "left_semi")
-      val newCb = s.read.parquet(s"$dir/counts/cb")
-        .join(deleted.groupBy($"bkt").agg(sum($"cbu").as("dcnt")),
-          Seq("bkt"), "left")
-        .select($"bkt", ($"cb" - coalesce($"dcnt", lit(0L))).as("cb"))
-        .filter($"cb" > 0)
-      val newCbu = cbu.join(ids, Seq("user_id"), "left_anti")
-      val staging = new org.apache.hadoop.fs.Path(s"$dir/counts_staging")
-      fs.delete(staging, true)
-      newCb.write.parquet(s"$staging/cb")
-      newCbu.write.parquet(s"$staging/cbu")
-      graft.operators.Similarity.swapDirInto(s, staging,
-        new org.apache.hadoop.fs.Path(s"$dir/counts"))
+      StoredRoot.replace(s, s"$dir/counts") { staging =>
+        val cbu = s.read.parquet(s"$dir/counts/cbu")
+        val deleted = cbu.join(ids, Seq("user_id"), "left_semi")
+        s.read.parquet(s"$dir/counts/cb")
+          .join(deleted.groupBy($"bkt").agg(sum($"cbu").as("dcnt")),
+            Seq("bkt"), "left")
+          .select($"bkt", ($"cb" - coalesce($"dcnt", lit(0L))).as("cb"))
+          .filter($"cb" > 0)
+          .write.parquet(s"$staging/cb")
+        cbu.join(ids, Seq("user_id"), "left_anti")
+          .write.parquet(s"$staging/cbu")
+      }
     } finally ids.unpersist(blocking = false)
   }
 
   /** Physically purge tombstoned users' event rows from a stored
     * concurrency layout: rewrite the day-partitioned, bucket-sorted
-    * events minus the tombstones (staging + dir swap — a crash before
+    * events minus the tombstones ([[StoredRoot.replace]] — a crash before
     * the swap leaves the old layout intact; the tombstone anti-join
     * keeps answers right either way), then clear the tombstones LAST.
     * Sidecars are already post-delete ([[deleteFromConcurrencyLayout]]
@@ -1228,18 +1217,14 @@ object Relational {
     */
   def compactConcurrencyLayout(s: SparkSession, dir: String): Unit = {
     import s.implicits._
-    val survivors = storedConcEvents(s, dir)
-      .repartition($"day").sortWithinPartitions($"day", $"bkt")
-      .select($"user_id", $"ts_ms", $"bkt", $"day")
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val staging = new org.apache.hadoop.fs.Path(s"$dir/events_staging")
-    fs.delete(staging, true)
-    survivors.write.partitionBy("day").parquet(staging.toString)
-    graft.operators.Similarity.swapDirInto(s, staging,
-      new org.apache.hadoop.fs.Path(s"$dir/events"))
-    fs.delete(new org.apache.hadoop.fs.Path(concUserTombstonesPath(dir)),
-      true)
+    StoredRoot.replace(s, s"$dir/events") { staging =>
+      storedConcEvents(s, dir)
+        .repartition($"day").sortWithinPartitions($"day", $"bkt")
+        .select($"user_id", $"ts_ms", $"bkt", $"day")
+        .write.partitionBy("day").parquet(staging)
+    }
+    val tp = new org.apache.hadoop.fs.Path(concUserTombstonesPath(dir))
+    tp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(tp, true)
   }
 
   /** Serve a session slice's concurrency from the STORED layout:

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.sources.StoredRoot
 
 /** Approximate-nearest-neighbor search over the embeddings table
   * (builder brief): brute-force cosine top-k as the exact baseline,
@@ -405,73 +406,70 @@ object Similarity {
   /** Append NEW labeled vectors to a stored hard-negative index
     * WITHOUT retraining — the nightly-ingest half of its lifecycle,
     * the [[appendToIvfIndex]] contract verbatim (frozen coarse
-    * quantizer, appended cell files, occupancy refreshed crash-safe)
+    * quantizer, appended cell files, occupancy refreshed through
+    * [[StoredRoot.replace]])
     * with the label riding each assignment row. Batch schema:
     * (vec_id, embedding, label); ids disjoint from stored ones.
     */
   def appendToHardNegIndex(s: SparkSession, indexDir: String,
-      batch: DataFrame): Unit = {
-    import s.implicits._
-    val centRows = s.read.parquet(s"$indexDir/centroids")
-      .select($"cell", $"centroid", $"cnrm", $"occupancy")
-      .as[(Long, Seq[Float], Double, Long)].collect().sortBy(_._1)
-    val cents = centRows.map { case (cid, cv, cn, _) => (cid, cv.toArray, cn) }
-    val cells = nearestCellsCol(cents, 1) _
-    val assigned = batch
-      .select($"vec_id", $"embedding",
-        graft.functions.VectorFunctions.norm($"embedding").as("nrm"),
-        $"label".cast("int").as("label"))
-      .withColumn("cell", explode(cells($"embedding")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val delta = assigned.groupBy($"cell").agg(count(lit(1)).as("n"))
-        .as[(Long, Long)].collect().toMap
-      assigned.select($"vec_id", $"embedding", $"nrm", $"label", $"cell")
-        .repartition($"cell")
-        .write.mode("append").partitionBy("cell")
-        .parquet(s"$indexDir/assignments")
-      val tmp = new org.apache.hadoop.fs.Path(s"$indexDir/centroids_updating")
-      centRows.toSeq
-        .map { case (cid, cv, cn, occ) =>
-          (cid, cv, cn, occ + delta.getOrElse(cid, 0L)) }
-        .toDF("cell", "centroid", "cnrm", "occupancy")
-        .write.mode("overwrite").parquet(tmp.toString)
-      swapDirInto(s, tmp,
-        new org.apache.hadoop.fs.Path(s"$indexDir/centroids"))
-    } finally assigned.unpersist(blocking = false)
-  }
+      batch: DataFrame): Unit =
+    StoredRoot.replace(s, s"$indexDir/centroids") { staging =>
+      import s.implicits._
+      val centRows = s.read.parquet(s"$indexDir/centroids")
+        .select($"cell", $"centroid", $"cnrm", $"occupancy")
+        .as[(Long, Seq[Float], Double, Long)].collect().sortBy(_._1)
+      val cents = centRows.map { case (cid, cv, cn, _) => (cid, cv.toArray, cn) }
+      val cells = nearestCellsCol(cents, 1) _
+      val assigned = batch
+        .select($"vec_id", $"embedding",
+          graft.functions.VectorFunctions.norm($"embedding").as("nrm"),
+          $"label".cast("int").as("label"))
+        .withColumn("cell", explode(cells($"embedding")))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        val delta = assigned.groupBy($"cell").agg(count(lit(1)).as("n"))
+          .as[(Long, Long)].collect().toMap
+        assigned.select($"vec_id", $"embedding", $"nrm", $"label", $"cell")
+          .repartition($"cell")
+          .write.mode("append").partitionBy("cell")
+          .parquet(s"$indexDir/assignments")
+        centRows.toSeq
+          .map { case (cid, cv, cn, occ) =>
+            (cid, cv, cn, occ + delta.getOrElse(cid, 0L)) }
+          .toDF("cell", "centroid", "cnrm", "occupancy")
+          .write.parquet(staging)
+      } finally assigned.unpersist(blocking = false)
+    }
 
   /** Physically purge tombstoned ids from a stored hard-negative
-    * index — [[compactIvfIndex]]'s contract with the label column
-    * carried through the rewrite: distributed sibling rewrite minus
-    * tombstones, occupancy refreshed, trained centroids untouched,
-    * tombstones cleared LAST (idempotent under crash).
+    * index — [[compactIvfInto]]'s fold with the label column carried
+    * through the rewrite: assignments minus tombstones, then occupancy
+    * refreshed with the trained centroids untouched (one
+    * [[StoredRoot.replace]] each), tombstones cleared LAST (idempotent
+    * under crash).
     */
   def compactHardNegIndex(s: SparkSession, indexDir: String): Unit = {
     import s.implicits._
-    val src = new org.apache.hadoop.fs.Path(s"$indexDir/assignments")
-    val tmp = new org.apache.hadoop.fs.Path(s"$indexDir/assignments_compacting")
-    minusTombstones(s, indexDir,
-        s.read.schema(hardNegAssignmentsSchema)
-          .parquet(s"$indexDir/assignments"))
-      .select($"vec_id", $"embedding", $"nrm", $"label", $"cell")
-      .repartition($"cell")
-      .write.mode("overwrite").partitionBy("cell").parquet(tmp.toString)
+    StoredRoot.replace(s, s"$indexDir/assignments") { staging =>
+      minusTombstones(s, indexDir,
+          s.read.schema(hardNegAssignmentsSchema)
+            .parquet(s"$indexDir/assignments"))
+        .select($"vec_id", $"embedding", $"nrm", $"label", $"cell")
+        .repartition($"cell")
+        .write.partitionBy("cell").parquet(staging)
+    }
     val counts = s.read.schema(hardNegAssignmentsSchema)
-      .parquet(tmp.toString)
+      .parquet(s"$indexDir/assignments")
       .groupBy($"cell").agg(count(lit(1)).as("n"))
       .as[(Long, Long)].collect().toMap
-    val centRows = s.read.parquet(s"$indexDir/centroids")
-      .select($"cell", $"centroid", $"cnrm")
-      .as[(Long, Seq[Float], Double)].collect().sortBy(_._1)
-    swapDirInto(s, tmp, src)
-    val ctmp = new org.apache.hadoop.fs.Path(s"$indexDir/centroids_updating")
-    centRows.toSeq
-      .map { case (cid, cv, cn) => (cid, cv, cn, counts.getOrElse(cid, 0L)) }
-      .toDF("cell", "centroid", "cnrm", "occupancy")
-      .write.mode("overwrite").parquet(ctmp.toString)
-    swapDirInto(s, ctmp,
-      new org.apache.hadoop.fs.Path(s"$indexDir/centroids"))
+    StoredRoot.replace(s, s"$indexDir/centroids") { staging =>
+      s.read.parquet(s"$indexDir/centroids")
+        .select($"cell", $"centroid", $"cnrm")
+        .as[(Long, Seq[Float], Double)].collect().sortBy(_._1).toSeq
+        .map { case (cid, cv, cn) => (cid, cv, cn, counts.getOrElse(cid, 0L)) }
+        .toDF("cell", "centroid", "cnrm", "occupancy")
+        .write.parquet(staging)
+    }
     val tp = new org.apache.hadoop.fs.Path(tombstonesPath(indexDir))
     tp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(tp, true)
   }
@@ -1472,7 +1470,8 @@ object Similarity {
     * by the batch's tasks per append; periodic compaction or a rebuild
     * is the deployment's defragmentation, the FAISS convention that
     * retraining is a new index VERSION while appending is cheap). The
-    * occupancy table is rewritten (bounded: k rows) so the
+    * occupancy table is rewritten (bounded: k rows) through
+    * [[StoredRoot.replace]] so the
     * occupancy-aware probe policy prices the grown cells. Batch ids
     * must be disjoint from the stored ones (content-addressed
     * upstream, the tracking-table convention). Single-writer
@@ -1480,58 +1479,36 @@ object Similarity {
     * — a deployment needing atomic cutover versions the index dir.
     */
   def appendToIvfIndex(s: SparkSession, indexDir: String,
-      batch: DataFrame, assign: Int = IvfAssign): Unit = {
-    import s.implicits._
-    val centRows = s.read.parquet(s"$indexDir/centroids")
-      .select($"cell", $"centroid", $"cnrm", $"occupancy")
-      .as[(Long, Seq[Float], Double, Long)].collect().sortBy(_._1)
-    val cents = centRows.map { case (cid, cv, cn, _) => (cid, cv.toArray, cn) }
-    val cells = nearestCellsCol(cents, assign) _
-    val assigned = batch
-      .select($"vec_id", $"embedding",
-        graft.functions.VectorFunctions.norm($"embedding").as("nrm"))
-      .select($"vec_id", $"embedding", $"nrm",
-        explode(cells($"embedding")).as("cell"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val delta = assigned.groupBy($"cell").agg(count(lit(1)).as("n"))
-        .as[(Long, Long)].collect().toMap
-      assigned.repartition($"cell")
-        .write.mode("append").partitionBy("cell")
-        .parquet(s"$indexDir/assignments")
-      // NEVER overwrite the trained quantizer in place: a crash
-      // mid-overwrite would destroy the only copy of the centroids
-      // (irreplaceable without a retrain). Write a sibling, swap.
-      val tmp = new org.apache.hadoop.fs.Path(s"$indexDir/centroids_updating")
-      centRows.toSeq
-        .map { case (cid, cv, cn, occ) =>
-          (cid, cv, cn, occ + delta.getOrElse(cid, 0L)) }
-        .toDF("cell", "centroid", "cnrm", "occupancy")
-        .write.mode("overwrite").parquet(tmp.toString)
-      swapDirInto(s, tmp,
-        new org.apache.hadoop.fs.Path(s"$indexDir/centroids"))
-    } finally assigned.unpersist(blocking = false)
-  }
-
-  /** Swap a freshly-written sibling directory into place without a
-    * window where the target is missing: target → `_old`, fresh →
-    * target, drop `_old`. A crash between the renames leaves the fresh
-    * copy intact under one of the two names — recoverable by hand —
-    * never a deleted-only state. (Rename is atomic-cheap on HDFS/local;
-    * an object store without rename versions whole index dirs instead,
-    * the note on [[appendToIvfIndex]].)
-    */
-  private[graft] def swapDirInto(s: SparkSession,
-      fresh: org.apache.hadoop.fs.Path,
-      target: org.apache.hadoop.fs.Path): Unit = {
-    val fs = target.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val old = new org.apache.hadoop.fs.Path(target.toString + "_old")
-    fs.delete(old, true)
-    if (fs.exists(target))
-      require(fs.rename(target, old), s"swap: could not retire $target")
-    require(fs.rename(fresh, target), s"swap: could not promote $fresh")
-    fs.delete(old, true)
-  }
+      batch: DataFrame, assign: Int = IvfAssign): Unit =
+    // NEVER overwrite the trained quantizer in place: a crash
+    // mid-overwrite would destroy the only copy of the centroids
+    // (irreplaceable without a retrain)
+    StoredRoot.replace(s, s"$indexDir/centroids") { staging =>
+      import s.implicits._
+      val centRows = s.read.parquet(s"$indexDir/centroids")
+        .select($"cell", $"centroid", $"cnrm", $"occupancy")
+        .as[(Long, Seq[Float], Double, Long)].collect().sortBy(_._1)
+      val cents = centRows.map { case (cid, cv, cn, _) => (cid, cv.toArray, cn) }
+      val cells = nearestCellsCol(cents, assign) _
+      val assigned = batch
+        .select($"vec_id", $"embedding",
+          graft.functions.VectorFunctions.norm($"embedding").as("nrm"))
+        .select($"vec_id", $"embedding", $"nrm",
+          explode(cells($"embedding")).as("cell"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        val delta = assigned.groupBy($"cell").agg(count(lit(1)).as("n"))
+          .as[(Long, Long)].collect().toMap
+        assigned.repartition($"cell")
+          .write.mode("append").partitionBy("cell")
+          .parquet(s"$indexDir/assignments")
+        centRows.toSeq
+          .map { case (cid, cv, cn, occ) =>
+            (cid, cv, cn, occ + delta.getOrElse(cid, 0L)) }
+          .toDF("cell", "centroid", "cnrm", "occupancy")
+          .write.parquet(staging)
+      } finally assigned.unpersist(blocking = false)
+    }
 
   /** Byte-identical recursive snapshot of a stored layout —
     * [[graft.operators.Lexical.cloneLexIndex]]'s mechanism made
@@ -1677,73 +1654,63 @@ object Similarity {
     * keyed by vec_id, with trained state in sibling tables the purge
     * never touches): rewrite the data subdir minus tombstoned rows
     * (schema-agnostic — the reader's anti-join already defines the
-    * surviving set), swap, clear tombstones LAST (the compactIvfIndex
-    * crash discipline: a crash leaves tombstones over already-purged
+    * surviving set) through [[StoredRoot.replace]], then clear
+    * tombstones LAST (a crash leaves tombstones over already-purged
     * rows, re-applied idempotently).
     */
   def compactCodesIndex(s: SparkSession, indexDir: String,
       dataSubdir: String = "codes"): Unit = {
-    val src = new org.apache.hadoop.fs.Path(s"$indexDir/$dataSubdir")
-    val tmp = new org.apache.hadoop.fs.Path(
-      s"$indexDir/${dataSubdir}_compacting")
-    minusTombstones(s, indexDir, s.read.parquet(src.toString))
-      .write.mode("overwrite").parquet(tmp.toString)
-    swapDirInto(s, tmp, src)
+    StoredRoot.replace(s, s"$indexDir/$dataSubdir") { staging =>
+      minusTombstones(s, indexDir, s.read.parquet(s"$indexDir/$dataSubdir"))
+        .write.parquet(staging)
+    }
     val tp = new org.apache.hadoop.fs.Path(tombstonesPath(indexDir))
     tp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(tp, true)
   }
 
   /** Defragment a stored IVF index after appends AND physically purge
-    * tombstoned rows: rewrite the assignments one file per cell (each
-    * [[appendToIvfIndex]] batch adds files inside the cell
-    * directories; probes pay per-file footer/open cost, so periodic
-    * compaction is the deployment's maintenance job — the counterpart
-    * of a log-structured store's merge), minus any tombstoned ids
-    * (the read path already anti-joins them), then refresh the
-    * occupancy column from the compacted layout and clear the
-    * tombstones LAST — a crash anywhere leaves tombstones in place
-    * over already-purged rows, which the anti-join re-applies
-    * idempotently (deletes can never resurrect). Single-writer like
-    * the append (version the index dir for atomic cutover).
+    * tombstoned rows, in place: [[compactIvfInto]] folds the index into
+    * a staging sibling and [[StoredRoot.replace]] swaps the whole dir,
+    * so the folded assignments and their occupancy arrive in one swap
+    * and the tombstones retire with the old root (a crash before the
+    * swap leaves the old layout and its tombstones intact).
+    * Single-writer like the append; `StoredRoot.cut` over the same fold
+    * is the form for readers that must never see the swap.
     */
-  def compactIvfIndex(s: SparkSession, indexDir: String): Unit = {
+  def compactIvfIndex(s: SparkSession, indexDir: String): Unit =
+    StoredRoot.replace(s, indexDir)(compactIvfInto(s, indexDir, _))
+
+  /** The IVF compaction fold, from the index at `srcDir` into a new
+    * layout at `outDir`: the assignments minus tombstoned ids (the read
+    * path already anti-joins them), one file per cell (each
+    * [[appendToIvfIndex]] batch adds files inside the cell directories;
+    * probes pay per-file footer/open cost, so periodic compaction is
+    * the deployment's maintenance job — the counterpart of a
+    * log-structured store's merge), and the centroid vectors unchanged
+    * with occupancy refreshed from the folded rows. readIvfIndex
+    * already collects the centroid relation, and occupancy is counted
+    * from the persisted folded rows instead of re-listing the written
+    * assignments (the read-back paid per-file footer cost over the
+    * one-file-per-cell layout: measured 1.0 s vs ~0.2 s for the cached
+    * agg at sf0.1; the counted relation IS the written one).
+    */
+  def compactIvfInto(s: SparkSession, srcDir: String, outDir: String): Unit = {
     import s.implicits._
-    val src = new org.apache.hadoop.fs.Path(s"$indexDir/assignments")
-    val tmp = new org.apache.hadoop.fs.Path(s"$indexDir/assignments_compacting")
-    // distributed copy into a sibling dir, then swap — never a driver
-    // collect, never a read-while-overwrite of the same directory,
-    // never a window with no assignments on disk. readIvfIndex already
-    // collects the centroid relation — reuse it below instead of a
-    // second read+collect, and refresh occupancy from the persisted
-    // folded rows instead of re-listing the freshly written sibling
-    // (per-file footer cost over one-file-per-cell; the counted
-    // relation IS the written one) — the compactIvfIndexVersioned
-    // measurement.
-    val idx = readIvfIndex(s, indexDir)
+    val idx = readIvfIndex(s, srcDir)
     val folded = idx.assigned
       .select($"vec_id", $"embedding", $"nrm", $"cell")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val counts = try {
+    try {
       folded.repartition($"cell")
-        .write.mode("overwrite").partitionBy("cell").parquet(tmp.toString)
-      // occupancy (k rows) refreshed so probe pricing reflects folded
-      // deletes; centroid VECTORS are untouched (never overwrite the
-      // trained quantizer in place — sibling+swap, the
-      // appendToIvfIndex discipline)
-      folded.groupBy($"cell").agg(count(lit(1)).as("n"))
+        .write.partitionBy("cell").parquet(s"$outDir/assignments")
+      val counts = folded.groupBy($"cell").agg(count(lit(1)).as("n"))
         .as[(Long, Long)].collect().toMap
+      idx.cents.toSeq
+        .map { case (cid, cv, cn) =>
+          (cid, cv.toSeq, cn, counts.getOrElse(cid, 0L)) }
+        .toDF("cell", "centroid", "cnrm", "occupancy")
+        .write.parquet(s"$outDir/centroids")
     } finally folded.unpersist(blocking = false)
-    swapDirInto(s, tmp, src)
-    val ctmp = new org.apache.hadoop.fs.Path(s"$indexDir/centroids_updating")
-    idx.cents.toSeq
-      .map { case (cid, cv, cn) =>
-        (cid, cv.toSeq, cn, counts.getOrElse(cid, 0L)) }
-      .toDF("cell", "centroid", "cnrm", "occupancy")
-      .write.mode("overwrite").parquet(ctmp.toString)
-    swapDirInto(s, ctmp,
-      new org.apache.hadoop.fs.Path(s"$indexDir/centroids"))
-    val tp = new org.apache.hadoop.fs.Path(tombstonesPath(indexDir))
-    tp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(tp, true)
   }
 
   /** Write the built LSH index partitioned by table, each table's
@@ -1821,272 +1788,42 @@ object Similarity {
   }
 
   /** Defragment a stored LSH index after appends — the LSH
-    * counterpart of [[compactIvfIndex]] (r12 verdict item 2): each
-    * [[appendToLshIndex]] batch adds one bucket-sorted file per
-    * touched table directory, and while every file stays individually
-    * bucket-ordered, probes pay per-file footer/open cost and
-    * per-file row-group pruning degrades as files shrink — the exact
-    * overhead the table-partitioned bucket-SORTED layout exists to
-    * avoid. One distributed rewrite restores one bucket-ordered file
-    * per table (same `repartition($"table")` +
+    * counterpart of [[compactIvfIndex]] (r12 verdict item 2), in place:
+    * [[compactLshInto]] folds the index into a staging sibling and
+    * [[StoredRoot.replace]] swaps the whole dir in. Tombstoned rows are
+    * physically purged by the fold and the tombstone relation vanishes
+    * WITH the retired root — the whole-dir swap is what makes
+    * compaction fold deletes with no extra step; otherwise content is
+    * unchanged. Single-writer maintenance op like the append;
+    * `StoredRoot.cut` over the same fold is the form for readers that
+    * must never see the swap (`sim_ann_lsh_versioned`).
+    */
+  def compactLshIndex(s: SparkSession, indexDir: String): Unit =
+    StoredRoot.replace(s, indexDir)(compactLshInto(s, indexDir, _))
+
+  /** The LSH compaction fold, from the index at `srcDir` into a new
+    * layout at `outDir`. Each [[appendToLshIndex]] batch adds one
+    * bucket-sorted file per touched table directory, and while every
+    * file stays individually bucket-ordered, probes pay per-file
+    * footer/open cost and per-file row-group pruning degrades as files
+    * shrink — the exact overhead the table-partitioned bucket-SORTED
+    * layout exists to avoid. One distributed rewrite minus the
+    * tombstones (readLshIndex anti-joins them) restores one
+    * bucket-ordered file per table (same `repartition($"table")` +
     * `sortWithinPartitions(table, bucket)` discipline as the writer —
     * the dynamic-partition writer's required ordering, see
-    * [[writeLshIndex]]), with the plane-count sidecar re-written into
-    * the fresh layout BEFORE promotion so no reader ever sees a
-    * sidecar-less index. Crash-safe via the same [[swapDirInto]]
-    * two-rename (target → `_old`, fresh → target): a crash leaves a
-    * complete copy under one of the two names, never a
-    * deleted-only state. Tombstoned rows are physically purged by the
-    * rewrite (readLshIndex anti-joins them) and the tombstone
-    * relation vanishes WITH the retired root — the whole-dir swap is
-    * what makes LSH compaction fold deletes with no extra step;
-    * otherwise content is unchanged. Single-writer maintenance op
-    * like the append (version the index dir for atomic cutover).
+    * [[writeLshIndex]]), with the plane-count sidecar written into the
+    * new layout before it is committed, so no reader ever sees a
+    * sidecar-less index.
     */
-  def compactLshIndex(s: SparkSession, indexDir: String): Unit = {
+  def compactLshInto(s: SparkSession, srcDir: String, outDir: String): Unit = {
     import s.implicits._
-    val src = new org.apache.hadoop.fs.Path(indexDir)
-    val tmp = new org.apache.hadoop.fs.Path(indexDir + "_compacting")
-    val planes = readLshPlanes(s, indexDir)
-    readLshIndex(s, indexDir)
+    val planes = readLshPlanes(s, srcDir)
+    readLshIndex(s, srcDir)
       .select($"vec_id", $"embedding", $"nrm", $"bucket", $"table")
       .repartition($"table").sortWithinPartitions($"table", $"bucket")
-      .write.mode("overwrite").partitionBy("table").parquet(tmp.toString)
-    val p = new org.apache.hadoop.fs.Path(tmp, "_graft_lsh_planes")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    try out.write(planes.toString.getBytes("UTF-8")) finally out.close()
-    swapDirInto(s, tmp, src)
-  }
-
-  // ------------------------------------------------------------------
-  // Versioned index root — manifest-pointer atomic cutover (r17
-  // verdict item 5), templated on the LSH family. The in-place
-  // [[swapDirInto]] maintenance ops carry a stated single-writer
-  // contract, but a CONCURRENT READER mid-swap can transiently see a
-  // missing directory — and deployments run probes 24/7. Under a
-  // versioned root, the layout lives in immutable version dirs and
-  // `<root>/_graft_current` names the live one: a probe resolves the
-  // pointer ONCE and reads that version for its whole lifetime
-  // (snapshot isolation), while compaction builds a NEW version and
-  // repoints the manifest with one atomic rename. The pointer file is
-  // tiny, so the cutover is atomic on any store with atomic rename;
-  // object stores without one version the POINTER via their
-  // conditional-put instead — the layout itself never needs renames.
-  // Outgoing versions are retired two cutovers later (the two most
-  // recent RETIRED generations stay on disk), so a reader that
-  // resolved just before a cutover finishes its scan against intact
-  // files; the gap this leaves — a reader slower than THREE
-  // consecutive compactions — is the stated residual, same as every
-  // MVCC store's vacuum horizon, and the retention depth is the
-  // cutover call's parameter.
-  // ------------------------------------------------------------------
-
-  private def currentPointer(root: String): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(root, "_graft_current")
-
-  /** Resolve a versioned root's live version directory — called once
-    * per probe/maintenance entry, never per file.
-    */
-  def resolveCurrentVersion(s: SparkSession, root: String): String = {
-    val p = currentPointer(root)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val in = fs.open(p)
-    val name =
-      try new String(org.apache.commons.io.IOUtils.toByteArray(in),
-        "UTF-8").trim
-      finally in.close()
-    s"$root/$name"
-  }
-
-  /** Atomically repoint `<root>/_graft_current` at `version`, then
-    * retire every version directory beyond the live one and the
-    * `keepRetired` most recent retired generations. The pointer lands
-    * via write-temp + atomic rename-overwrite, so a concurrent
-    * resolve sees either the old or the new name, never a torn file.
-    */
-  private[operators] def cutVersion(s: SparkSession, root: String,
-      version: String, keepRetired: Int = 2): Unit = {
-    val conf = s.sparkContext.hadoopConfiguration
-    val ptr = currentPointer(root)
-    val fs = ptr.getFileSystem(conf)
-    if (fs.isInstanceOf[org.apache.hadoop.fs.LocalFileSystem] ||
-        fs.isInstanceOf[org.apache.hadoop.fs.RawLocalFileSystem]) {
-      // On the local CHECKSUMMED fs the crc sidecar turns the pointer
-      // flip into TWO renames (data file, then `.crc`) — a reader
-      // between them fails with ChecksumException (caught once by
-      // LshVersionedSpec's cutover race). The pointer is a ~12-byte
-      // version name: write it RAW (no sidecar — absent crc files are
-      // not verified on read) and flip with one ATOMIC_MOVE; retire
-      // any sidecar a pre-fix checksummed writer left so readers never
-      // verify the new pointer against a stale crc. One-time
-      // transitional race, accepted (r18 advice): a reader that opened
-      // a stale PRE-FIX .crc before the deleteIfExists below and reads
-      // the pointer after the move can still hit one ChecksumException
-      // at the upgrade boundary — benign afterward, since no new crc
-      // is ever written for the pointer.
-      val rootP = java.nio.file.Paths.get(
-        new org.apache.hadoop.fs.Path(root).toUri.getPath)
-      java.nio.file.Files.createDirectories(rootP)
-      val tmpP = rootP.resolve(
-        s"_graft_current_tmp_${java.util.UUID.randomUUID().toString.take(8)}")
-      java.nio.file.Files.write(tmpP, version.getBytes("UTF-8"))
-      java.nio.file.Files.deleteIfExists(
-        rootP.resolve("." + ptr.getName + ".crc"))
-      java.nio.file.Files.move(tmpP, rootP.resolve(ptr.getName),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    } else {
-      val tmp = new org.apache.hadoop.fs.Path(root,
-        s"_graft_current_tmp_${java.util.UUID.randomUUID().toString.take(8)}")
-      val out = fs.create(tmp, true)
-      try out.write(version.getBytes("UTF-8")) finally out.close()
-      val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-        tmp.toUri, conf)
-      fc.rename(tmp, ptr, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-    }
-    // retired versions are immutable, so recency by modification time
-    // orders generations; the live version is kept unconditionally.
-    // Only a full version name counts: a builder's `v_…_staging` dir
-    // takes no keep slot. A staging dir older than every kept version
-    // is a crashed builder's leftover (one writer at a time, so no
-    // build is staging while this cutover runs) and goes with the
-    // retired versions.
-    val dirs = fs.listStatus(new org.apache.hadoop.fs.Path(root))
-      .filter(_.isDirectory)
-    val vers = dirs.filter(st => VersionName.matches(st.getPath.getName))
-    val keep = vers.sortBy(-_.getModificationTime)
-      .take(keepRetired + 1).map(_.getPath.getName).toSet + version
-    val (kept, retired) = vers.partition(st => keep.contains(st.getPath.getName))
-    val horizon = kept.map(_.getModificationTime).minOption
-    val leftovers = dirs.filter(st => StagingName.matches(st.getPath.getName) &&
-      horizon.exists(st.getModificationTime < _))
-    (retired ++ leftovers).foreach(st => fs.delete(st.getPath, true))
-  }
-
-  private[operators] def freshVersionName(): String =
-    s"v_${java.util.UUID.randomUUID().toString.replace("-", "").take(12)}"
-
-  /** The names [[freshVersionName]] makes, and nothing else. */
-  private val VersionName = "v_[0-9a-f]{12}".r
-  private val StagingName = "v_[0-9a-f]{12}_staging".r
-
-  /** Build an LSH index under a VERSIONED root: the layout lands in a
-    * fresh version dir, then the pointer cuts over — an existing
-    * serving root is rebuilt in place with zero reader disruption.
-    */
-  def writeLshIndexVersioned(s: SparkSession, d: String,
-      root: String): Unit = {
-    val name = freshVersionName()
-    writeLshIndex(s, d, s"$root/$name")
-    cutVersion(s, root, name)
-  }
-
-  /** Probe a versioned LSH root — [[topkLshStored]] against the
-    * version resolved ONCE at entry.
-    */
-  def topkLshVersioned(s: SparkSession, d: String, root: String,
-      k: Int = TopK, multiprobe: Boolean = true,
-      pushdownCap: Int = LshProbePushdownCap): DataFrame =
-    topkLshStored(s, d, resolveCurrentVersion(s, root), k, multiprobe,
-      pushdownCap)
-
-  /** Tombstone ids in the LIVE version (id-sized append — the
-    * [[deleteFromIndex]] contract; a reader that listed the tombstone
-    * relation before the append is snapshot-stale for its lifetime).
-    * Single writer: a tombstone that races a versioned compaction can
-    * be lost, because the compaction folds the version it resolved and
-    * cuts over to a new one that never sees a later append to the old.
-    * The versioned root makes readers atomic against a writer, not
-    * writers against each other.
-    */
-  def deleteFromIndexVersioned(s: SparkSession, root: String,
-      ids: DataFrame): Unit =
-    deleteFromIndex(s, resolveCurrentVersion(s, root), ids)
-
-  /** Compact a versioned LSH root with zero reader disruption: the
-    * folded, tombstone-purged layout is built as a NEW version dir
-    * (planes sidecar first, the compactLshIndex discipline), then the
-    * pointer cuts over atomically and generations past the retention
-    * horizon retire. In-flight probes keep reading the version they
-    * resolved; the next probe resolves the fresh one.
-    * LshVersionedSpec drives probes CONCURRENTLY with this and pins
-    * zero failures and stable answers.
-    */
-  def compactLshIndexVersioned(s: SparkSession, root: String): Unit = {
-    import s.implicits._
-    val cur = resolveCurrentVersion(s, root)
-    val name = freshVersionName()
-    val fresh = s"$root/$name"
-    val planes = readLshPlanes(s, cur)
-    readLshIndex(s, cur)
-      .select($"vec_id", $"embedding", $"nrm", $"bucket", $"table")
-      .repartition($"table").sortWithinPartitions($"table", $"bucket")
-      .write.mode("overwrite").partitionBy("table").parquet(fresh)
-    writePlanesSidecar(s, fresh, planes)
-    cutVersion(s, root, name)
-  }
-
-  /** The versioned-root template applied to the IVF family — the
-    * same pointer/retention machinery ([[cutVersion]] /
-    * [[resolveCurrentVersion]] are family-agnostic), and the family
-    * where the atomic cutover matters MOST: in-place
-    * [[compactIvfIndex]] performs TWO sequential swaps (assignments,
-    * then centroids), so a concurrent reader can catch occupancy out
-    * of step with the folded rows even when each swap alone is clean
-    * — the versioned cutover replaces both with one pointer flip.
-    */
-  def writeIvfIndexVersioned(s: SparkSession, d: String, root: String,
-      assign: Int = IvfAssign): Unit = {
-    val name = freshVersionName()
-    writeIvfIndex(s, d, s"$root/$name", assign)
-    cutVersion(s, root, name)
-  }
-
-  /** Probe a versioned IVF root — [[topkIvfStored]] against the
-    * version resolved once at entry.
-    */
-  def topkIvfVersioned(s: SparkSession, d: String, root: String,
-      k: Int = TopK, nprobe: Int = -1, assign: Int = IvfAssign): DataFrame =
-    topkIvfStored(s, d, resolveCurrentVersion(s, root), k, nprobe, assign)
-
-  /** Compact a versioned IVF root with zero reader disruption: the
-    * tombstone-folded assignments land in a NEW version dir, its
-    * occupancy is computed from the folded rows, the centroid vectors
-    * carry over unchanged, and the pointer flips once — assignments
-    * and occupancy become visible ATOMICALLY, where the in-place
-    * compactor's two swaps expose an inconsistent pair to a racing
-    * reader. [[deleteFromIndexVersioned]] is shared with the LSH root
-    * (the tombstone relation is the family-agnostic one).
-    */
-  def compactIvfIndexVersioned(s: SparkSession, root: String): Unit = {
-    import s.implicits._
-    val cur = resolveCurrentVersion(s, root)
-    val name = freshVersionName()
-    val fresh = s"$root/$name"
-    // readIvfIndex already collects the centroid relation (sorted by
-    // cell) — reuse it for the occupancy rewrite instead of a second
-    // read+collect of `$cur/centroids`, and count occupancy from the
-    // persisted folded rows instead of re-listing the freshly written
-    // assignments (the read-back paid per-file footer cost over the
-    // one-file-per-cell layout: measured 1.0 s vs ~0.2 s for the
-    // cached agg at sf0.1; the counted relation IS the written one).
-    val idx = readIvfIndex(s, cur)
-    val folded = idx.assigned
-      .select($"vec_id", $"embedding", $"nrm", $"cell")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      folded.repartition($"cell")
-        .write.partitionBy("cell").parquet(s"$fresh/assignments")
-      val counts = folded.groupBy($"cell").agg(count(lit(1)).as("n"))
-        .as[(Long, Long)].collect().toMap
-      idx.cents.toSeq
-        .map { case (cid, cv, cn) =>
-          (cid, cv.toSeq, cn, counts.getOrElse(cid, 0L)) }
-        .toDF("cell", "centroid", "cnrm", "occupancy")
-        .write.parquet(s"$fresh/centroids")
-    } finally folded.unpersist(blocking = false)
-    cutVersion(s, root, name)
+      .write.partitionBy("table").parquet(outDir)
+    writePlanesSidecar(s, outDir, planes)
   }
 
   /** The plane count a stored LSH index was built with (sidecar
@@ -2327,16 +2064,15 @@ object Similarity {
     // sim_ann_lsh by construction — shared oracle.
     "sim_ann_lsh_versioned" -> { (s, d) =>
       // first version = snapshot-clone of the shared base layout
-      // (byte-identical to writeLshIndexVersioned's fresh build —
-      // the write is deterministic), so this line measures the
-      // lifecycle it declares: cutover + compaction + probe
+      // (byte-identical to a fresh writeLshIndex build — the write is
+      // deterministic), so this line measures the lifecycle it
+      // declares: cutover + compaction (StoredRoot.cut over the shared
+      // compactLshInto fold) + probe
       val root = storedQueryDir("lshver", d)
-      val name = freshVersionName()
-      cloneIndexDir(s, writeLshIndexOnce(s, d), s"$root/$name",
-        Seq("_graft_tombstones"))
-      cutVersion(s, root, name)
-      compactLshIndexVersioned(s, root)
-      topkLshVersioned(s, d, root)
+      val base = StoredRoot.cut(s, root)(cloneIndexDir(s,
+        writeLshIndexOnce(s, d), _, Seq("_graft_tombstones")))
+      StoredRoot.cut(s, root)(compactLshInto(s, base, _))
+      topkLshStored(s, d, StoredRoot.resolve(s, root))
     },
     "lsh_build" -> { (s, d) =>
       import s.implicits._
@@ -2375,20 +2111,18 @@ object Similarity {
     // sim_ann_lsh_versioned template ported — r18): build a version,
     // compact into a second one (assignments + occupancy become
     // visible atomically via the pointer flip, where the in-place
-    // compactor's two swaps can expose an inconsistent pair to a
-    // racing reader), probe the live version. Same answers as
+    // compactor's whole-dir swap has a missing-directory instant),
+    // probe the live version. Same answers as
     // sim_ann_ivf by construction — shared dynamic oracle.
     "sim_ann_ivf_versioned" -> { (s, d) =>
       // first version = snapshot-clone of the shared base (the
       // sim_ann_lsh_versioned convention): the line measures
       // cutover + compaction + probe, not a repeat corpus build
       val root = storedQueryDir("ivfver", d)
-      val name = freshVersionName()
-      cloneIndexDir(s, writeIvfIndexOnce(s, d), s"$root/$name",
-        Seq("_graft_tombstones"))
-      cutVersion(s, root, name)
-      compactIvfIndexVersioned(s, root)
-      topkIvfVersioned(s, d, root)
+      val base = StoredRoot.cut(s, root)(cloneIndexDir(s,
+        writeIvfIndexOnce(s, d), _, Seq("_graft_tombstones")))
+      StoredRoot.cut(s, root)(compactIvfInto(s, base, _))
+      topkIvfStored(s, d, StoredRoot.resolve(s, root))
     },
     // IVF twin of sim_ann_lsh_purged: same tombstone relation, same
     // reader-side anti-join, cell pruning preserved. Occupancy (and

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.sources.StoredRoot
 
 /** Text-analysis operators for a large-scale training-data pipeline
   * (builder brief; generalizes the reference's text handling,
@@ -278,21 +279,20 @@ object TextAnalysis {
     * sketch pass), rereads the sketch-sized stored relation, union-
     * merges by the aggregator algebra (sketch(A ∪ B) = sketch(
     * sketch(A) ∪ sketch(B)) — exact, order-independent), and promotes
-    * the rewrite with the crash-safe two-rename swap. Single-writer
+    * the rewrite with [[StoredRoot.replace]]. Single-writer
     * per sketch dir, the stored-index discipline.
     */
   def mergeIntoKmvSketch(s: SparkSession, sketchDir: String,
-      batch: DataFrame): Unit = {
-    import s.implicits._
-    val stored = s.read.parquet(sketchDir).select($"scope", $"sketch")
-    val merged = kmvSketches(stored
-      .unionByName(kmvSketches(kmvHashes(batch)))
-      .select($"scope", explode($"sketch").as("h"))
-      .as[(String, Long)])
-    val tmp = new org.apache.hadoop.fs.Path(sketchDir + "_fresh")
-    merged.write.mode("overwrite").parquet(tmp.toString)
-    Similarity.swapDirInto(s, tmp, new org.apache.hadoop.fs.Path(sketchDir))
-  }
+      batch: DataFrame): Unit =
+    StoredRoot.replace(s, sketchDir) { staging =>
+      import s.implicits._
+      val stored = s.read.parquet(sketchDir).select($"scope", $"sketch")
+      kmvSketches(stored
+        .unionByName(kmvSketches(kmvHashes(batch)))
+        .select($"scope", explode($"sketch").as("h"))
+        .as[(String, Long)])
+        .write.parquet(staging)
+    }
 
   /** Count-min sketch geometry (Cormode & Muthukrishnan, J.Alg'05).
     * Per-query overcount ≤ (e/width)·N with prob 1−e^−depth; at width
@@ -441,7 +441,7 @@ object TextAnalysis {
   /** Merge a document batch into a STORED CMS — incremental corpus
     * stats: one sketch pass over the BATCH, a sketch-sized reread,
     * element-wise ADD (linearity makes the merge exact and order-
-    * independent), crash-safe two-rename promotion. Single-writer per
+    * independent), promoted by [[StoredRoot.replace]]. Single-writer per
     * sketch dir, the stored-index discipline.
     */
   def mergeIntoCmsSketch(s: SparkSession, sketchDir: String,
@@ -452,8 +452,8 @@ object TextAnalysis {
     * CMS linearity buys for free (KMV, by contrast, cannot unmerge —
     * its takedown is a rebuild, stated on [[writeKmvSketch]]): one
     * sketch pass over the DELETED docs, element-wise subtract, same
-    * crash-safe swap. Exact, not approximate: subtracting the batch's
-    * own cell counts leaves the table bit-identical to a fresh sketch
+    * [[StoredRoot.replace]]. Exact, not approximate: subtracting the
+    * batch's own cell counts leaves the table bit-identical to a fresh sketch
     * over the surviving docs, by linearity. Contract: subtract only
     * batches previously merged (the counts-add layouts' takedown
     * contract — negative cells would otherwise under-count forever).
@@ -463,15 +463,14 @@ object TextAnalysis {
     applyToCmsSketch(s, sketchDir, batch, sign = -1L)
 
   private def applyToCmsSketch(s: SparkSession, sketchDir: String,
-      batch: DataFrame, sign: Long): Unit = {
-    val (stored, _) = readCms(s, sketchDir)
-    val (fresh, _) = buildCms(hhTokens(batch))
-    var i = 0
-    while (i < fresh.length) { fresh(i) = stored(i) + sign * fresh(i); i += 1 }
-    val tmp = new org.apache.hadoop.fs.Path(sketchDir + "_fresh")
-    cmsCells(s, fresh).write.mode("overwrite").parquet(tmp.toString)
-    Similarity.swapDirInto(s, tmp, new org.apache.hadoop.fs.Path(sketchDir))
-  }
+      batch: DataFrame, sign: Long): Unit =
+    StoredRoot.replace(s, sketchDir) { staging =>
+      val (stored, _) = readCms(s, sketchDir)
+      val (fresh, _) = buildCms(hhTokens(batch))
+      var i = 0
+      while (i < fresh.length) { fresh(i) = stored(i) + sign * fresh(i); i += 1 }
+      cmsCells(s, fresh).write.parquet(staging)
+    }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // KMV (k-minimum-values) distinct-count sketch (Bar-Yossef et al.,
@@ -2340,28 +2339,23 @@ object TextAnalysis {
   /** Fold the stored count algebra physically: one row per token,
     * all-zero rows dropped, one scalar row — no reader's answer
     * changes (readers already fold; NbLifecycleSpec pins it), this is
-    * the takedown/append defrag. Staging + dir swap, crash-safe.
+    * the takedown/append defrag. One [[StoredRoot.replace]] per
+    * relation.
     */
   def compactNbModel(s: SparkSession, indexDir: String): Unit = {
     import s.implicits._
-    val fs = new org.apache.hadoop.fs.Path(indexDir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val cTmp = new org.apache.hadoop.fs.Path(s"$indexDir/counts_compacting")
-    fs.delete(cTmp, true)
-    s.read.parquet(s"$indexDir/counts")
-      .groupBy($"tok")
-      .agg(sum($"c_pos").as("c_pos"), sum($"c_neg").as("c_neg"))
-      .filter($"c_pos" + $"c_neg" > 0)
-      .write.parquet(cTmp.toString)
-    Similarity.swapDirInto(s, cTmp,
-      new org.apache.hadoop.fs.Path(s"$indexDir/counts"))
-    val sTmp = new org.apache.hadoop.fs.Path(s"$indexDir/scalars_compacting")
-    fs.delete(sTmp, true)
-    s.read.parquet(s"$indexDir/scalars")
-      .agg(sum($"pd").as("pd"), sum($"nd").as("nd"))
-      .write.parquet(sTmp.toString)
-    Similarity.swapDirInto(s, sTmp,
-      new org.apache.hadoop.fs.Path(s"$indexDir/scalars"))
+    StoredRoot.replace(s, s"$indexDir/counts") { staging =>
+      s.read.parquet(s"$indexDir/counts")
+        .groupBy($"tok")
+        .agg(sum($"c_pos").as("c_pos"), sum($"c_neg").as("c_neg"))
+        .filter($"c_pos" + $"c_neg" > 0)
+        .write.parquet(staging)
+    }
+    StoredRoot.replace(s, s"$indexDir/scalars") { staging =>
+      s.read.parquet(s"$indexDir/scalars")
+        .agg(sum($"pd").as("pd"), sum($"nd").as("nd"))
+        .write.parquet(staging)
+    }
   }
 
   /** The NB classifier restated over a TRAINING-ROW predicate:

@@ -31,7 +31,7 @@ import graft.operators.Similarity
   * The manifest is derived FROM the written files (`_metadata
   * .file_path` group-by), never from the writer's intent, so it cannot
   * desynchronize from the data; writes stage into a sibling and
-  * promote via [[Similarity.swapDirInto]] (crash-safe). Pruning is
+  * promote via [[StoredRoot.replace]] (crash-safe). Pruning is
   * EXACT by construction: a file is kept iff its [min,max] interval
   * overlaps the query box on every queried column, and the residual
   * predicate re-applies the box to the kept rows — a wrong manifest
@@ -89,37 +89,35 @@ object ClusteredLayout {
   def writeClustered(df: DataFrame, dir: String, c1: String, c2: String,
       files: Int = LayoutFiles, zorder: Boolean = true): Unit = {
     val s = df.sparkSession
-    val staging = new org.apache.hadoop.fs.Path(dir + "_staging")
-    val fs = staging.getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.delete(staging, true)
-    val cols = df.columns.map(col)
-    val clustered =
-      if (zorder) {
-        val stats = df.agg(
-          min(col(c1)).as("__mn1"), max(col(c1)).as("__mx1"),
-          min(col(c2)).as("__mn2"), max(col(c2)).as("__mx2"))
-        df.crossJoin(broadcast(stats))
-          .withColumn("__z", zval(
-            n16(col(c1), col("__mn1"), col("__mx1")),
-            n16(col(c2), col("__mn2"), col("__mx2"))))
-          .repartitionByRange(files, col("__z"))
-          .sortWithinPartitions("__z")
-          .select(cols.toIndexedSeq: _*)
-      } else {
-        df.repartitionByRange(files, col(c1), col(c2))
-          .sortWithinPartitions(c1, c2)
-      }
-    clustered.write.parquet(staging.toString)
-    s.read.parquet(staging.toString)
-      .groupBy(col("_metadata.file_path").as("file"))
-      .agg(min(col(c1)).as("mn1"), max(col(c1)).as("mx1"),
-        min(col(c2)).as("mn2"), max(col(c2)).as("mx2"),
-        count(lit(1)).as("rows"))
-      // rewrite to layout-relative names so the manifest survives the
-      // staging→final rename (and any future dir move)
-      .withColumn("file", element_at(split(col("file"), "/"), -1))
-      .write.parquet(s"$staging/_graft_manifest")
-    Similarity.swapDirInto(s, staging, new org.apache.hadoop.fs.Path(dir))
+    StoredRoot.replace(s, dir) { staging =>
+      val cols = df.columns.map(col)
+      val clustered =
+        if (zorder) {
+          val stats = df.agg(
+            min(col(c1)).as("__mn1"), max(col(c1)).as("__mx1"),
+            min(col(c2)).as("__mn2"), max(col(c2)).as("__mx2"))
+          df.crossJoin(broadcast(stats))
+            .withColumn("__z", zval(
+              n16(col(c1), col("__mn1"), col("__mx1")),
+              n16(col(c2), col("__mn2"), col("__mx2"))))
+            .repartitionByRange(files, col("__z"))
+            .sortWithinPartitions("__z")
+            .select(cols.toIndexedSeq: _*)
+        } else {
+          df.repartitionByRange(files, col(c1), col(c2))
+            .sortWithinPartitions(c1, c2)
+        }
+      clustered.write.parquet(staging)
+      s.read.parquet(staging)
+        .groupBy(col("_metadata.file_path").as("file"))
+        .agg(min(col(c1)).as("mn1"), max(col(c1)).as("mx1"),
+          min(col(c2)).as("mn2"), max(col(c2)).as("mx2"),
+          count(lit(1)).as("rows"))
+        // rewrite to layout-relative names so the manifest survives the
+        // staging→final rename (and any future dir move)
+        .withColumn("file", element_at(split(col("file"), "/"), -1))
+        .write.parquet(s"$staging/_graft_manifest")
+    }
   }
 
   /** Append a batch to an existing layout: the batch is z-sorted
@@ -185,20 +183,19 @@ object ClusteredLayout {
     */
   def repairLayout(s: SparkSession, dir: String,
       c1: String, c2: String): Unit = {
-    val tmp = new org.apache.hadoop.fs.Path(s"$dir/_graft_manifest_repair")
-    s.read.parquet(dir)
-      .groupBy(element_at(split(col("_metadata.file_path"), "/"), -1).as("file"))
-      .agg(min(col(c1)).as("mn1"), max(col(c1)).as("mx1"),
-        min(col(c2)).as("mn2"), max(col(c2)).as("mx2"),
-        count(lit(1)).as("rows"))
-      .write.parquet(tmp.toString)
-    graft.operators.Similarity.swapDirInto(s, tmp,
-      new org.apache.hadoop.fs.Path(s"$dir/_graft_manifest"))
+    StoredRoot.replace(s, s"$dir/_graft_manifest") { staging =>
+      s.read.parquet(dir)
+        .groupBy(element_at(split(col("_metadata.file_path"), "/"), -1).as("file"))
+        .agg(min(col(c1)).as("mn1"), max(col(c1)).as("mx1"),
+          min(col(c2)).as("mn2"), max(col(c2)).as("mx2"),
+          count(lit(1)).as("rows"))
+        .write.parquet(staging)
+    }
   }
 
   /** Re-cluster the whole layout (reads the current root minus any
-    * tombstoned keys, rewrites it z-sorted through the staging+swap
-    * path) — the periodic defrag that restores build-quality skip
+    * tombstoned keys, rewrites it z-sorted through
+    * [[StoredRoot.replace]]) — the periodic defrag that restores build-quality skip
     * ratios after appends, and the PHYSICAL purge half of the
     * takedown lifecycle: tombstoned rows are dropped from the
     * rewrite, the manifest and bloom sidecar are rebuilt over the
@@ -342,14 +339,13 @@ object ClusteredLayout {
       .agg(max(col("rows"))).as[Long].head()
     val agg = udaf(new BloomAgg(math.max(1024L, maxRows)),
       org.apache.spark.sql.Encoders.scalaLong)
-    val tmp = new org.apache.hadoop.fs.Path(s"$dir/_graft_blooms_building")
-    s.read.parquet(dir)
-      .groupBy(element_at(split(col("_metadata.file_path"), "/"), -1).as("file"))
-      .agg(agg(col(keyCol).cast("long")).as("bloom"))
-      .withColumn("key_col", lit(keyCol))
-      .write.parquet(tmp.toString)
-    graft.operators.Similarity.swapDirInto(s, tmp,
-      new org.apache.hadoop.fs.Path(s"$dir/_graft_blooms"))
+    StoredRoot.replace(s, s"$dir/_graft_blooms") { staging =>
+      s.read.parquet(dir)
+        .groupBy(element_at(split(col("_metadata.file_path"), "/"), -1).as("file"))
+        .agg(agg(col(keyCol).cast("long")).as("bloom"))
+        .withColumn("key_col", lit(keyCol))
+        .write.parquet(staging)
+    }
   }
 
   /** The bloom cut: files whose bloom might contain ANY probed key,

@@ -222,6 +222,22 @@ object FilePipeline {
     }
   }
 
+  /** The output dir as the local path the executors' `java.nio` writer
+    * needs: a `file:` URI is reduced to its path, and any other scheme
+    * is refused rather than written as a relative directory named after
+    * it.
+    */
+  private def localOutputDir(dir: String): String = {
+    val uri = new Path(dir).toUri
+    uri.getScheme match {
+      case null => dir
+      case "file" => uri.getPath
+      case other => throw new IllegalArgumentException(
+        s"output dir $dir: scheme '$other' is not supported, the per-file " +
+          "writer needs a local path or a file: URI")
+    }
+  }
+
   /** One micro-batch: dedup → process → fan-out. Also the per-run body
     * of the batch entry point. Sink order and the empty-batch gate are
     * set out on [[FilePipeline]].
@@ -230,6 +246,7 @@ object FilePipeline {
       cfg: Config = Config(), store: Option[TrackingStore] = None): Unit = {
     import spark.implicits._
 
+    val outDir = localOutputDir(dirs.output)
     val tracking = store.getOrElse(ParquetTracking(dirs.tracking))
 
     // J1/T2: anti-join on content hash against the tracking table.
@@ -277,7 +294,6 @@ object FilePipeline {
       // which is F4's empty-input gate (`dags/dag.py:816-821`).
       val completedAcc = spark.sparkContext.longAccumulator
       val failedAcc = spark.sparkContext.longAccumulator
-      val outDir = dirs.output
       phase(spark, "filepipeline.build") {
         processed.select($"filename",
           when($"status" === "completed", $"content").as("content"))

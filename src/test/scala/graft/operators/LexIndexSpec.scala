@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.sources.StoredRoot
+
 /** The stored lexical (postings) index contract: a fresh session
   * probing the written layout answers exactly like the raw-text scan,
   * the probe's postings read is partition-pruned to the query terms'
@@ -217,16 +219,14 @@ class LexIndexSpec extends AnyFunSuite {
     Lexical.appendToLexIndex(spark, dir, docs.filter($"doc_id" % 2 === 1))
     // simulate the crash window: postings landed, doclen/stats did not
     // (rewrite both back to their pre-append contents)
-    val dlTmp = new org.apache.hadoop.fs.Path(s"$dir/doclen_rewind")
-    spark.createDataFrame(java.util.Arrays.asList(preDoclen: _*),
-        spark.read.parquet(s"$dir/doclen").schema)
-      .write.parquet(dlTmp.toString)
-    Similarity.swapDirInto(spark, dlTmp,
-      new org.apache.hadoop.fs.Path(s"$dir/doclen"))
-    val stTmp = new org.apache.hadoop.fs.Path(s"$dir/stats_rewind")
-    Seq(preStats).toDF("n_docs", "avgdl").write.parquet(stTmp.toString)
-    Similarity.swapDirInto(spark, stTmp,
-      new org.apache.hadoop.fs.Path(s"$dir/stats"))
+    StoredRoot.replace(spark, s"$dir/doclen") { staging =>
+      spark.createDataFrame(java.util.Arrays.asList(preDoclen: _*),
+          spark.read.parquet(s"$dir/doclen").schema)
+        .write.parquet(staging)
+    }
+    StoredRoot.replace(spark, s"$dir/stats") { staging =>
+      Seq(preStats).toDF("n_docs", "avgdl").write.parquet(staging)
+    }
     // a crashed append leaves its pending marker (the successful
     // append above deleted it): re-create it carrying the PRE-batch
     // file manifest, exactly as the real append writes it before its
@@ -275,16 +275,14 @@ class LexIndexSpec extends AnyFunSuite {
     val preList = relPostings(dir)
     // batch 1 appends, then "crashes": doclen/stats rewound, marker left
     Lexical.appendToLexIndex(spark, dir, docs.filter($"doc_id" % 3 === 1))
-    val dlTmp = new org.apache.hadoop.fs.Path(s"$dir/doclen_rewind")
-    spark.createDataFrame(java.util.Arrays.asList(preDoclen: _*),
-        spark.read.parquet(s"$dir/doclen").schema)
-      .write.parquet(dlTmp.toString)
-    Similarity.swapDirInto(spark, dlTmp,
-      new org.apache.hadoop.fs.Path(s"$dir/doclen"))
-    val stTmp = new org.apache.hadoop.fs.Path(s"$dir/stats_rewind")
-    Seq(preStats).toDF("n_docs", "avgdl").write.parquet(stTmp.toString)
-    Similarity.swapDirInto(spark, stTmp,
-      new org.apache.hadoop.fs.Path(s"$dir/stats"))
+    StoredRoot.replace(spark, s"$dir/doclen") { staging =>
+      spark.createDataFrame(java.util.Arrays.asList(preDoclen: _*),
+          spark.read.parquet(s"$dir/doclen").schema)
+        .write.parquet(staging)
+    }
+    StoredRoot.replace(spark, s"$dir/stats") { staging =>
+      Seq(preStats).toDF("n_docs", "avgdl").write.parquet(staging)
+    }
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val marker = new org.apache.hadoop.fs.Path(s"$dir/_graft_append_pending")
@@ -355,16 +353,14 @@ class LexIndexSpec extends AnyFunSuite {
     // crash simulation: doclen/stats rewound, marker re-forged with
     // the pre-batch manifest, the staged dl re-created (as the real
     // crash between the postings append and the promote leaves it)
-    val dlTmp = new org.apache.hadoop.fs.Path(s"$dir/doclen_rewind")
-    spark.createDataFrame(java.util.Arrays.asList(preDoclen: _*),
-        spark.read.parquet(s"$dir/doclen").schema)
-      .write.parquet(dlTmp.toString)
-    Similarity.swapDirInto(spark, dlTmp,
-      new org.apache.hadoop.fs.Path(s"$dir/doclen"))
-    val stTmp = new org.apache.hadoop.fs.Path(s"$dir/stats_rewind")
-    Seq(preStats).toDF("n_docs", "avgdl").write.parquet(stTmp.toString)
-    Similarity.swapDirInto(spark, stTmp,
-      new org.apache.hadoop.fs.Path(s"$dir/stats"))
+    StoredRoot.replace(spark, s"$dir/doclen") { staging =>
+      spark.createDataFrame(java.util.Arrays.asList(preDoclen: _*),
+          spark.read.parquet(s"$dir/doclen").schema)
+        .write.parquet(staging)
+    }
+    StoredRoot.replace(spark, s"$dir/stats") { staging =>
+      Seq(preStats).toDF("n_docs", "avgdl").write.parquet(staging)
+    }
     writeMarker(dir, preList)
     graft.Tables.documents(spark, tmp).filter($"doc_id" =!= 1L)
       .select($"doc_id", org.apache.spark.sql.functions
@@ -458,16 +454,14 @@ class LexIndexSpec extends AnyFunSuite {
     Lexical.appendToLexIndex(spark, dir, docs.filter($"doc_id" % 2 === 1))
     val postList = relPostings(dir)
     // rewind doclen/stats to the pre-append state (the crash window)
-    val dlTmp = new org.apache.hadoop.fs.Path(s"$dir/doclen_rewind")
-    spark.createDataFrame(java.util.Arrays.asList(preDoclen: _*),
-        spark.read.parquet(s"$dir/doclen").schema)
-      .write.parquet(dlTmp.toString)
-    Similarity.swapDirInto(spark, dlTmp,
-      new org.apache.hadoop.fs.Path(s"$dir/doclen"))
-    val stTmp = new org.apache.hadoop.fs.Path(s"$dir/stats_rewind")
-    Seq(preStats).toDF("n_docs", "avgdl").write.parquet(stTmp.toString)
-    Similarity.swapDirInto(spark, stTmp,
-      new org.apache.hadoop.fs.Path(s"$dir/stats"))
+    StoredRoot.replace(spark, s"$dir/doclen") { staging =>
+      spark.createDataFrame(java.util.Arrays.asList(preDoclen: _*),
+          spark.read.parquet(s"$dir/doclen").schema)
+        .write.parquet(staging)
+    }
+    StoredRoot.replace(spark, s"$dir/stats") { staging =>
+      Seq(preStats).toDF("n_docs", "avgdl").write.parquet(staging)
+    }
     writeMarker(dir, preList)
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)

@@ -3,16 +3,18 @@ package graft.operators
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.sources.StoredRoot
+
 /** The versioned-root manifest-pointer cutover applied to the lexical
   * (bm25) family — r18 verdict item 6: the in-place
-  * [[Lexical.compactLexIndex]] performs THREE sequential directory
-  * swaps (postings, doclen, stats), so a probe concurrent with
-  * compaction can catch stats out of step with the folded postings or
-  * a transiently missing directory; bm25 has live 24/7 serve lines,
-  * so this family needed the atomic cutover most. Pinned like
-  * LshVersionedSpec: equality with the plain stored index on every
-  * lifecycle op, then an actual probe loop raced against repeated
-  * cutover compactions.
+  * [[Lexical.compactLexIndex]] commits through
+  * [[graft.sources.StoredRoot.replace]], whose whole-dir swap leaves a
+  * probe concurrent with compaction an instant with no index at all;
+  * bm25 has live 24/7 serve lines, so this family needs
+  * [[graft.sources.StoredRoot.cut]] over the same
+  * [[Lexical.compactLexInto]] fold. Pinned like LshVersionedSpec:
+  * equality with the plain stored index on every lifecycle op, then an
+  * actual probe loop raced against repeated cutover compactions.
   */
 class LexVersionedSpec extends AnyFunSuite {
 
@@ -28,22 +30,27 @@ class LexVersionedSpec extends AnyFunSuite {
 
   private def probe(root: String): Set[(Long, Double)] = {
     import spark.implicits._
-    Lexical.topkBm25Versioned(spark, root)
+    Lexical.topkBm25Stored(spark, StoredRoot.resolve(spark, root))
       .select($"doc_id", $"score").as[(Long, Double)].collect().toSet
   }
 
   private def serve(root: String): Set[(Long, Long, Double, Long)] = {
     import spark.implicits._
-    Lexical.bm25ForVersioned(spark, root,
+    Lexical.bm25For(spark, StoredRoot.resolve(spark, root),
         Lexical.ServeQueries.toDF("query_id", "term"))
       .as[(Long, Long, Double, Long)].collect().toSet
   }
+
+  /** Versioned compaction: the shared lexical fold cut into a new version. */
+  private def compact(root: String): Unit =
+    StoredRoot.cut(spark, root)(
+      Lexical.compactLexInto(spark, StoredRoot.resolve(spark, root), _))
 
   test("versioned build/delete/compact answer exactly like the plain stored index") {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("lexver").toString
     val root = s"$tmp/root"
-    Lexical.writeLexIndexVersioned(spark, sf, root)
+    StoredRoot.cut(spark, root)(Lexical.writeLexIndex(spark, sf, _))
     val plain = s"$tmp/plain"
     Lexical.writeLexIndex(spark, sf, plain)
     val expected = Lexical.topkBm25Stored(spark, plain)
@@ -64,7 +71,7 @@ class LexVersionedSpec extends AnyFunSuite {
       .filter(st => st.isDirectory && st.getPath.getName.startsWith("v_"))
       .map(_.getPath.getName).toSet
     val v0 = versions()
-    Lexical.compactLexIndexVersioned(spark, root)
+    compact(root)
     assert(probe(root) == expected, "compaction must not change answers")
     assert(versions() != v0 || versions().size > 1,
       "compaction must have produced a new version")
@@ -73,12 +80,13 @@ class LexVersionedSpec extends AnyFunSuite {
     // immediately, and the next cutover folds it physically with
     // postings/doclen/stats becoming visible in ONE flip
     val someDoc = expected.maxBy(_._2)._1
-    Lexical.deleteFromLexIndexVersioned(spark, root, Seq(someDoc).toDF("doc_id"))
+    Lexical.deleteFromLexIndex(spark, StoredRoot.resolve(spark, root),
+      Seq(someDoc).toDF("doc_id"))
     val afterDel = probe(root)
     assert(!afterDel.exists(_._1 == someDoc),
       "a tombstoned doc must stop answering on the live version")
-    Lexical.compactLexIndexVersioned(spark, root)
-    val live = Similarity.resolveCurrentVersion(spark, root)
+    compact(root)
+    val live = StoredRoot.resolve(spark, root)
     assert(spark.read.parquet(s"$live/postings")
       .filter($"doc_id" === someDoc).count() == 0,
       "the cutover compaction must purge tombstoned postings physically")
@@ -93,8 +101,8 @@ class LexVersionedSpec extends AnyFunSuite {
     // survivor SET at the fold is what the contract fixes
     assert(!probe(root).exists(_._1 == someDoc))
     // retention horizon: repeated compactions keep live + 2 retired
-    Lexical.compactLexIndexVersioned(spark, root)
-    Lexical.compactLexIndexVersioned(spark, root)
+    compact(root)
+    compact(root)
     assert(versions().size <= 3,
       s"retention must bound version count: ${versions()}")
   }
@@ -102,7 +110,7 @@ class LexVersionedSpec extends AnyFunSuite {
   test("probes race concurrent cutover compactions with zero failures and stable answers") {
     val tmp = java.nio.file.Files.createTempDirectory("lexverrace").toString
     val root = s"$tmp/root"
-    Lexical.writeLexIndexVersioned(spark, sf, root)
+    StoredRoot.cut(spark, root)(Lexical.writeLexIndex(spark, sf, _))
     val expected = probe(root)
     assert(expected.nonEmpty)
     @volatile var failure: Option[Throwable] = None
@@ -128,7 +136,7 @@ class LexVersionedSpec extends AnyFunSuite {
       // three: retention keeps the live version and two retired ones,
       // so a third cutover may sweep the version a slow probe resolved
       // before the first (the stated residual, not what this pins)
-      for (_ <- 0 until 2) Lexical.compactLexIndexVersioned(spark, root)
+      for (_ <- 0 until 2) compact(root)
     } finally {
       stop.set(true)
       reader.join(120000)

@@ -3,15 +3,17 @@ package graft.operators
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.sources.StoredRoot
+
 /** The versioned index root's manifest-pointer cutover (r17 verdict
-  * item 5): probes resolve `_graft_current` once and read an
+  * item 5), [[graft.sources.StoredRoot.cut]] over each family's
+  * compaction fold: probes resolve `_graft_current` once and read an
   * immutable version directory, compaction builds a new version and
   * repoints atomically — so a reader concurrent with compaction never
-  * sees the in-place swap's missing-directory window. Pinned here by
-  * actually racing a probe loop against repeated compactions, on
-  * BOTH template instantiations (LSH, and IVF — whose in-place
-  * compactor performs two sequential swaps that can expose
-  * assignments and occupancy out of step to a racing reader).
+  * sees the missing-directory instant of the in-place
+  * [[graft.sources.StoredRoot.replace]] swap. Pinned here by actually
+  * racing a probe loop against repeated compactions, on both the LSH
+  * and the IVF folds.
   */
 class LshVersionedSpec extends AnyFunSuite {
 
@@ -27,15 +29,20 @@ class LshVersionedSpec extends AnyFunSuite {
 
   private def probe(root: String): Set[(Long, Long)] = {
     import spark.implicits._
-    Similarity.topkLshVersioned(spark, sf, root)
+    Similarity.topkLshStored(spark, sf, StoredRoot.resolve(spark, root))
       .select($"q_id", $"n_id").as[(Long, Long)].collect().toSet
   }
+
+  /** Versioned compaction: the shared LSH fold cut into a new version. */
+  private def compactLsh(root: String): Unit =
+    StoredRoot.cut(spark, root)(
+      Similarity.compactLshInto(spark, StoredRoot.resolve(spark, root), _))
 
   test("versioned build/compact/delete answer exactly like the plain stored index") {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("lshver").toString
     val root = s"$tmp/root"
-    Similarity.writeLshIndexVersioned(spark, sf, root)
+    StoredRoot.cut(spark, root)(Similarity.writeLshIndex(spark, sf, _))
     val plain = s"$tmp/plain"
     Similarity.writeLshIndex(spark, sf, plain)
     val expected = Similarity.topkLshStored(spark, sf, plain)
@@ -50,24 +57,24 @@ class LshVersionedSpec extends AnyFunSuite {
       .filter(st => st.isDirectory && st.getPath.getName.startsWith("v_"))
       .map(_.getPath.getName).toSet
     val v0 = versions()
-    Similarity.compactLshIndexVersioned(spark, root)
+    compactLsh(root)
     assert(probe(root) == expected, "compaction must not change answers")
     assert(versions() != v0 || versions().size > 1,
       "compaction must have produced a new version")
     // tombstones apply to the live version and survive the cutover
     // physically purged (the compact rewrite folds them)
     val someVec = expected.head._2
-    Similarity.deleteFromIndexVersioned(spark, root,
+    Similarity.deleteFromIndex(spark, StoredRoot.resolve(spark, root),
       Seq(someVec).toDF("vec_id"))
     val afterDel = probe(root)
     assert(!afterDel.exists(_._2 == someVec),
       "a tombstoned vector must stop answering on the live version")
-    Similarity.compactLshIndexVersioned(spark, root)
+    compactLsh(root)
     assert(probe(root) == afterDel,
       "compacting the tombstones must not change answers")
     // retention horizon: repeated compactions keep live + 2 retired
-    Similarity.compactLshIndexVersioned(spark, root)
-    Similarity.compactLshIndexVersioned(spark, root)
+    compactLsh(root)
+    compactLsh(root)
     assert(versions().size <= 3,
       s"retention must bound version count: ${versions()}")
   }
@@ -75,7 +82,7 @@ class LshVersionedSpec extends AnyFunSuite {
   test("probes race concurrent compactions with zero failures and stable answers") {
     val tmp = java.nio.file.Files.createTempDirectory("lshverrace").toString
     val root = s"$tmp/root"
-    Similarity.writeLshIndexVersioned(spark, sf, root)
+    StoredRoot.cut(spark, root)(Similarity.writeLshIndex(spark, sf, _))
     val expected = probe(root)
     assert(expected.nonEmpty)
     @volatile var failure: Option[Throwable] = None
@@ -97,7 +104,7 @@ class LshVersionedSpec extends AnyFunSuite {
       // three full compaction cutovers while the reader loops — under
       // the in-place swap this window transiently 404s the directory;
       // under the versioned root every resolve serves a live snapshot
-      for (_ <- 0 until 3) Similarity.compactLshIndexVersioned(spark, root)
+      for (_ <- 0 until 3) compactLsh(root)
     } finally {
       stop.set(true)
       reader.join(120000)
@@ -110,32 +117,38 @@ class LshVersionedSpec extends AnyFunSuite {
 
   private def probeIvf(root: String): Set[(Long, Long)] = {
     import spark.implicits._
-    Similarity.topkIvfVersioned(spark, sf, root)
+    Similarity.topkIvfStored(spark, sf, StoredRoot.resolve(spark, root))
       .select($"q_id", $"n_id").as[(Long, Long)].collect().toSet
   }
+
+  /** Versioned compaction: the shared IVF fold cut into a new version. */
+  private def compactIvf(root: String): Unit =
+    StoredRoot.cut(spark, root)(
+      Similarity.compactIvfInto(spark, StoredRoot.resolve(spark, root), _))
 
   test("IVF instantiation: versioned build/compact/delete equal the plain stored index") {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("ivfver").toString
     val root = s"$tmp/root"
-    Similarity.writeIvfIndexVersioned(spark, sf, root)
+    StoredRoot.cut(spark, root)(Similarity.writeIvfIndex(spark, sf, _))
     val plain = s"$tmp/plain"
     Similarity.writeIvfIndex(spark, sf, plain)
     val expected = Similarity.topkIvfStored(spark, sf, plain)
       .select($"q_id", $"n_id").as[(Long, Long)].collect().toSet
     assert(probeIvf(root) == expected)
-    Similarity.compactIvfIndexVersioned(spark, root)
+    compactIvf(root)
     assert(probeIvf(root) == expected, "cutover compaction must not change answers")
     // the shared tombstone mechanism routes to the live version, and
     // the next cutover folds it physically WITH occupancy refreshed
     // in the same atomic flip
     val someVec = expected.head._2
-    Similarity.deleteFromIndexVersioned(spark, root, Seq(someVec).toDF("vec_id"))
+    Similarity.deleteFromIndex(spark, StoredRoot.resolve(spark, root),
+      Seq(someVec).toDF("vec_id"))
     val afterDel = probeIvf(root)
     assert(!afterDel.exists(_._2 == someVec))
-    Similarity.compactIvfIndexVersioned(spark, root)
+    compactIvf(root)
     assert(probeIvf(root) == afterDel)
-    val live = Similarity.resolveCurrentVersion(spark, root)
+    val live = StoredRoot.resolve(spark, root)
     assert(spark.read.parquet(s"$live/assignments")
       .filter($"vec_id" === someVec).count() == 0,
       "the cutover compaction must purge tombstoned rows physically")
@@ -152,7 +165,7 @@ class LshVersionedSpec extends AnyFunSuite {
   test("IVF probes race concurrent cutover compactions") {
     val tmp = java.nio.file.Files.createTempDirectory("ivfverrace").toString
     val root = s"$tmp/root"
-    Similarity.writeIvfIndexVersioned(spark, sf, root)
+    StoredRoot.cut(spark, root)(Similarity.writeIvfIndex(spark, sf, _))
     val expected = probeIvf(root)
     assert(expected.nonEmpty)
     @volatile var failure: Option[Throwable] = None
@@ -171,7 +184,7 @@ class LshVersionedSpec extends AnyFunSuite {
     }, "ivf-versioned-reader")
     reader.start()
     try {
-      for (_ <- 0 until 3) Similarity.compactIvfIndexVersioned(spark, root)
+      for (_ <- 0 until 3) compactIvf(root)
     } finally {
       stop.set(true)
       reader.join(120000)
@@ -194,10 +207,9 @@ class LshVersionedSpec extends AnyFunSuite {
         java.nio.file.attribute.FileTime.fromMillis(clock))
     }
     def cut(): String = {
-      val name = Similarity.freshVersionName()
-      stamp(Files.createDirectories(root.resolve(name)))
-      Similarity.cutVersion(spark, root.toString, name)
-      name
+      val dir = StoredRoot.cut(spark, root.toString)(v =>
+        stamp(Files.createDirectories(java.nio.file.Paths.get(v))))
+      java.nio.file.Paths.get(dir).getFileName.toString
     }
     def staging(name: String): java.nio.file.Path = {
       val dir = root.resolve(name)
@@ -214,7 +226,7 @@ class LshVersionedSpec extends AnyFunSuite {
     // a builder still staging: newer than the oldest kept version
     val fresh = staging("v_ba9876543210_staging")
     val last = cut()
-    assert(Similarity.resolveCurrentVersion(spark, root.toString) ==
+    assert(StoredRoot.resolve(spark, root.toString) ==
       s"$root/$last")
     val dirs = Files.list(root).toArray.map(_.asInstanceOf[java.nio.file.Path])
       .filter(Files.isDirectory(_)).map(_.getFileName.toString).toSet

@@ -135,6 +135,22 @@ class FilePipelineSpec extends AnyFunSuite {
     assert(rows() == ((2L, 2L)))
   }
 
+  test("an output dir given as a file: URI receives the processed files") {
+    val plain = freshDirs()
+    val dirs = plain.copy(output = s"file:${plain.output}")
+    Files.createDirectories(Paths.get(dirs.input))
+    Files.write(Paths.get(dirs.input, "a.txt"), "alpha".getBytes)
+    FilePipeline.runBatch(spark, dirs)
+    val out = Paths.get(plain.output, "processed_a.txt")
+    assert(Files.exists(out), s"missing $out")
+    assert(new String(Files.readAllBytes(out), StandardCharsets.UTF_8) == "alpha")
+    // a scheme the executors' local writer cannot honour is refused
+    // up front, naming the dir
+    val e = intercept[IllegalArgumentException](
+      FilePipeline.runBatch(spark, plain.copy(output = "hdfs:///out")))
+    assert(e.getMessage.contains("hdfs:///out"))
+  }
+
   test("oversize files route to the dead-letter sink with error metadata") {
     val dirs = freshDirs()
     Files.createDirectories(Paths.get(dirs.input))
