@@ -50,6 +50,15 @@ import graft.functions.DnaFunctions
   * counts no fresh row touches no sink, and a sink whose branch has no
   * row is skipped. Every job of a batch carries its phase name in the
   * [[PhaseProperty]] local property and in its job description.
+  *
+  * A streamed batch is re-homed into the caller's session before any
+  * of this. Each [[run]] starts a query, and the query clones the
+  * session; executors build one class loader per session, and Spark's
+  * generated-code cache is keyed by class loader. Left in the clone,
+  * every drain would compile its generated classes afresh. In the
+  * caller's session a later drain compiles only its sinks'
+  * `current_timestamp()` projections, whose instant is inlined as a
+  * literal.
   */
 object FilePipeline {
 
@@ -249,8 +258,14 @@ object FilePipeline {
     val outDir = localOutputDir(dirs.output)
     val tracking = store.getOrElse(ParquetTracking(dirs.tracking))
 
+    // a streamed batch belongs to the query's clone of `spark`; re-homed,
+    // it reuses `spark`'s generated classes (see [[FilePipeline]])
+    val batch =
+      if (files.sparkSession eq spark) files
+      else spark.createDataFrame(files.rdd, files.schema)
+
     // J1/T2: anti-join on content hash against the tracking table.
-    val fresh = files
+    val fresh = batch
       .dropDuplicates("file_hash") // first occurrence within the batch wins
       .join(tracking.knownHashes(spark), Seq("file_hash"), "left_anti")
 
@@ -262,14 +277,9 @@ object FilePipeline {
     // dead-letter branch needs a deterministic trigger in tests too).
     val processed = fresh
       .withColumn("oversize", $"file_size" > cfg.maxFileBytes)
-      // register on the BATCH's session: inside foreachBatch the
-      // micro-batch DataFrame belongs to a cloned session whose
-      // function registry was snapshotted at query start — registering
-      // on the outer session would leave `dna_process` unresolved on
-      // the first-ever streaming batch of a fresh session
       .withColumn("r",
         when(!$"oversize",
-          DnaFunctions.dnaProcessNative(files.sparkSession, cfg.chunkSize,
+          DnaFunctions.dnaProcessNative(spark, cfg.chunkSize,
             cfg.errorCorrectionSymbols)($"content")))
       .withColumn("chunks", $"r.chunks")
       .withColumn("r", $"r".dropFields("chunks"))
@@ -322,6 +332,7 @@ object FilePipeline {
             lit(cfg.chunkSize).as("chunk_size"),
             lit(cfg.errorCorrectionSymbols).as("error_correction_symbols"),
             current_timestamp().as("processed_at"))
+            .coalesce(1) // a few hundred bytes a file: one file per batch
             .write.mode("append").json(dirs.reports)
         }
 
@@ -346,6 +357,7 @@ object FilePipeline {
             date_format(current_timestamp(), "yyyyMMdd_HHmmss"), $"filename")
             .as("dead_letter_file"),
           current_timestamp().as("failed_at"))
+          .coalesce(1)
           .write.mode("append").json(dirs.deadLetter)
       }
 

@@ -354,6 +354,27 @@ class FilePipelineSpec extends AnyFunSuite {
     assert(dupJobs.flatMap(_._1).distinct == Seq("filepipeline.build"), dupJobs)
   }
 
+  test("a later drain reuses the generated classes of the first") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import org.apache.spark.sql.streaming.Trigger
+    val dirs = chunkDirs()
+    val cfg = FilePipeline.Config(chunkSize = 64, errorCorrectionSymbols = 4)
+    def drain(seed: Int): Unit = {
+      mixedUtf8Wave(dirs.input, seed)
+      FilePipeline.run(spark, dirs, cfg, Trigger.AvailableNow()).awaitTermination()
+    }
+    // the first drain has no tracking table; the second is the first
+    // to plan the anti-join over one
+    drain(31)
+    drain(32)
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME
+    val before = compiles.getCount
+    drain(33)
+    val n = compiles.getCount - before
+    // only the sinks' timestamp projections, whose instant is a literal
+    assert(n <= 8, s"$n classes compiled by the third drain")
+  }
+
   test("every tracked file of a later batch gets its status event") {
     // batch 2's sinks must read the cached batch, not a re-planned one
     // whose anti-join already sees batch 2's own tracking rows
