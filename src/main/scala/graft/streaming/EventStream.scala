@@ -294,7 +294,7 @@ object EventStream {
   }
 
   /** Streaming exact dedup with BOUNDED state: the streaming analogue
-    * of `dedup_exact` / the file pipeline's content-hash anti-join.
+    * of `dedup_exact` / the file pipeline's content-hash dedup.
     * `dropDuplicatesWithinWatermark` keeps a key in the state store
     * only until the watermark passes its event time, so a forever
     * stream holds O(events-per-watermark-window) state — plain

@@ -8,8 +8,12 @@ import scala.util.Using
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.InSet
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
+import org.apache.spark.sql.graftbridge.DatasetBridge
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.unsafe.types.UTF8String
 import graft.functions.DnaFunctions
 
 /** The reference pipeline end-to-end (SURVEY.md §2.9/§3.1) as a
@@ -24,9 +28,9 @@ import graft.functions.DnaFunctions
   *    `Trigger.AvailableNow` per run (or `ProcessingTime` for a
   *    long-lived daemon). The checkpoint replaces Airflow's metadata.
   *  - Content-hash exactly-once (`dags/dag.py:452-474`): Spark's file
-  *    source dedups by PATH only, so the md5 anti-join against the
-  *    tracking table stays — a rename can't re-process content, and the
-  *    append-only tracking write keeps `ON CONFLICT DO NOTHING`
+  *    source dedups by PATH only, so each batch is checked by md5
+  *    against the tracking table — a rename can't re-process content,
+  *    and the append-only tracking write keeps `ON CONFLICT DO NOTHING`
   *    semantics (`dags/dag.py:743`) because membership is checked
   *    before every insert.
   *  - Dead-letter routing (`dags/dag.py:285-318`): failed branch of the
@@ -35,21 +39,26 @@ import graft.functions.DnaFunctions
   *    latest-wins view — fixes the reference's lost-UPDATE quirk
   *    (SURVEY.md §7.4) while keeping the final-table contract.
   *
-  * A micro-batch ([[processBatch]]) persists its processed frame once
-  * and writes every sink from that cache, in this order: output files
-  * (the action that builds the cache and counts each branch), reports,
-  * chunks, dead letters, status events, and the tracking upsert LAST.
-  * The order matters twice. The processed frame's plan reads the
-  * tracking table (the anti-join), and a parquet append to a path makes
-  * Spark re-plan and drop every cached frame that reads that path
-  * (`recacheByPath`): a sink written after the upsert would recompute
-  * the whole batch, and its anti-join would then find every file
-  * already tracked and write nothing. And a batch that dies before its
-  * upsert is replayed whole, so no file is tracked without its other
-  * sinks. There is no separate emptiness probe: a batch whose build
-  * counts no fresh row touches no sink, and a sink whose branch has no
-  * row is skipped. Every job of a batch carries its phase name in the
-  * [[PhaseProperty]] local property and in its job description.
+  * A micro-batch ([[processBatch]]) first collects one key row per
+  * file, `(file_hash, file_path, tracked)`, where `tracked` comes from a
+  * left-outer join with [[TrackingStore.knownHashes]]; no file content
+  * is shuffled. The driver drops every path whose hash is tracked and,
+  * within the batch, every path but the smallest for each hash (the
+  * first landing wins, deterministically). A batch with nothing fresh
+  * stops there and touches no sink. Otherwise the batch minus the
+  * dropped paths is the processed frame: persisted once, it feeds every
+  * sink, in this order: output files (the action that builds the cache
+  * and counts each branch), reports, chunks, dead letters, status
+  * events, and the tracking upsert LAST, so that a batch that dies
+  * before its upsert is replayed whole and no file is tracked without
+  * its other sinks. A sink whose branch has no row is skipped. Every
+  * job of a batch carries its phase name in the [[PhaseProperty]]
+  * local property and in its job description.
+  *
+  * The batch is read twice, by the key pass and by the build. That
+  * relies on the file source's contract that a landed file is not
+  * changed afterwards: a file rewritten between the two reads would be
+  * processed with content whose hash was never checked.
   *
   * A streamed batch is re-homed into the caller's session before any
   * of this. Each [[run]] starts a query, and the query clones the
@@ -108,15 +117,16 @@ object FilePipeline {
     * deployment; [[JdbcTrackingStore]] is drop-in parity with the
     * reference's Postgres `processed_files` (`init-scripts.sql:5-14`),
     * executed for real against Derby in JdbcPipelineSpec. Both sides
-    * of the contract matter: [[knownHashes]] feeds the anti-join that
+    * of the contract matter: [[knownHashes]] feeds the key pass that
     * makes reprocessing impossible, [[upsert]] must itself be
     * idempotent on `file_hash` so a replayed micro-batch (foreachBatch
     * is at-least-once on failure) cannot double-insert.
     */
   sealed trait TrackingStore extends Serializable {
     /** `file_hash` of every tracked row. Not deduplicated: a hash
-      * repeats only if a store holds it twice, and the left-anti join
-      * that reads this needs no distinct build side.
+      * repeats only if a store holds it twice, and then it only repeats
+      * a key row of the batch's left-outer key pass, which the driver
+      * reads as a set.
       */
     def knownHashes(spark: SparkSession): DataFrame
     /** Idempotent append of
@@ -127,7 +137,7 @@ object FilePipeline {
 
   /** Default store: the status-partitioned parquet tracking table
     * (status-scoped sweeps prune partitions instead of scanning all
-    * history). Idempotence comes from the caller's anti-join — the
+    * history). Idempotence comes from the caller's key pass — the
     * same ordering the reference relies on (`dags/dag.py:452-474`).
     */
   final case class ParquetTracking(dir: String) extends TrackingStore {
@@ -153,7 +163,7 @@ object FilePipeline {
     * through `spark.read.jdbc`, writes through the executor-side
     * insert-if-absent batches of [[graft.sources.JdbcTracking.upsert]]
     * (Postgres `ON CONFLICT DO NOTHING` / Derby `MERGE`), which makes
-    * the upsert idempotent at the DATABASE, not just via the anti-join.
+    * the upsert idempotent at the DATABASE, not just via the key pass.
     */
   final case class JdbcTrackingStore(url: String, user: String,
       password: String, dialect: graft.sources.JdbcTracking.SqlDialect)
@@ -248,8 +258,8 @@ object FilePipeline {
   }
 
   /** One micro-batch: dedup → process → fan-out. Also the per-run body
-    * of the batch entry point. Sink order and the empty-batch gate are
-    * set out on [[FilePipeline]].
+    * of the batch entry point. The dedup rule, the empty-batch gate and
+    * the sink order are set out on [[FilePipeline]].
     */
   def processBatch(spark: SparkSession, files: DataFrame, dirs: Dirs,
       cfg: Config = Config(), store: Option[TrackingStore] = None): Unit = {
@@ -261,13 +271,28 @@ object FilePipeline {
     // a streamed batch belongs to the query's clone of `spark`; re-homed,
     // it reuses `spark`'s generated classes (see [[FilePipeline]])
     val batch =
-      if (files.sparkSession eq spark) files
-      else spark.createDataFrame(files.rdd, files.schema)
+      if (files.sparkSession eq spark) files else DatasetBridge.rehome(spark, files)
 
-    // J1/T2: anti-join on content hash against the tracking table.
-    val fresh = batch
-      .dropDuplicates("file_hash") // first occurrence within the batch wins
-      .join(tracking.knownHashes(spark), Seq("file_hash"), "left_anti")
+    // J1/T2: content-hash exactly-once from one narrow key pass. A path
+    // is dropped if its hash is tracked, or if a smaller path of the
+    // batch holds the same content: the first landing wins.
+    val keys = phase(spark, "filepipeline.build") {
+      batch.select("file_hash", "file_path")
+        .join(tracking.knownHashes(spark).withColumn("tracked", lit(true)),
+          Seq("file_hash"), "left_outer")
+        .select($"file_hash", $"file_path", $"tracked".isNotNull)
+        .as[(String, String, Boolean)].collect()
+    }
+    val keep = keys.filterNot(_._3)
+      .groupMapReduce(_._1)(_._2)(Ordering[String].min(_, _)).values.toSet
+    if (keep.isEmpty) return // F4's empty-input gate (`dags/dag.py:816-821`)
+    val drop = keys.map(_._2).toSet -- keep
+    // InSet holds its set as one reference object, so the generated
+    // filter is the same for every batch
+    val fresh =
+      if (drop.isEmpty) batch
+      else batch.filter(!column(InSet(expression($"file_path"),
+        drop.map[Any](UTF8String.fromString))))
 
     // Fused per-file pipeline (no shuffle): encode→validate→reconstruct.
     // The one encode of the batch: the chunk rows ride in the report
@@ -300,8 +325,8 @@ object FilePipeline {
       // S6: reconstructed text, one exact-named file per input
       // (`processed_{filename}`, dags/dag.py:577) — executor-side
       // writer; on a cluster this is a DFS client, locally java.nio.
-      // This action builds the cache; it also counts both branches,
-      // which is F4's empty-input gate (`dags/dag.py:816-821`).
+      // This action builds the cache; it also counts both branches, so
+      // a sink whose branch has no row is skipped.
       val completedAcc = spark.sparkContext.longAccumulator
       val failedAcc = spark.sparkContext.longAccumulator
       phase(spark, "filepipeline.build") {
@@ -361,26 +386,23 @@ object FilePipeline {
           .write.mode("append").json(dirs.deadLetter)
       }
 
-      if (nCompleted + nFailed > 0) {
-        // S11/T4: status events, append-only
-        phase(spark, "filepipeline.status") {
-          processed.select($"file_hash", $"status",
-            current_timestamp().as("event_time"))
-            .coalesce(1) // a few bytes a file: one parquet file per batch
-            .write.mode("append").parquet(dirs.statusEvents)
-        }
+      // S11/T4: status events, append-only
+      phase(spark, "filepipeline.status") {
+        processed.select($"file_hash", $"status",
+          current_timestamp().as("event_time"))
+          .coalesce(1) // a few bytes a file: one parquet file per batch
+          .write.mode("append").parquet(dirs.statusEvents)
+      }
 
-        // S9: tracking upsert (content-addressed; the anti-join above
-        // plus the store's own insert-if-absent keep ON CONFLICT DO
-        // NOTHING semantics) through the pluggable store. Last: its
-        // append re-plans every cached frame that reads the tracking
-        // table, `processed` included.
-        phase(spark, "filepipeline.tracking") {
-          tracking.upsert(spark,
-            processed.select($"file_hash", $"file_path", $"file_size", $"status",
-              when($"status" === "completed",
-                concat(lit("processed_"), $"filename")).as("output_file")))
-        }
+      // S9: tracking upsert (content-addressed; the key pass above plus
+      // the store's own insert-if-absent keep ON CONFLICT DO NOTHING
+      // semantics) through the pluggable store. Last, so that a batch
+      // that dies before it is replayed whole.
+      phase(spark, "filepipeline.tracking") {
+        tracking.upsert(spark,
+          processed.select($"file_hash", $"file_path", $"file_size", $"status",
+            when($"status" === "completed",
+              concat(lit("processed_"), $"filename")).as("output_file")))
       }
     } finally processed.unpersist()
   }

@@ -288,16 +288,22 @@ class FilePipelineSpec extends AnyFunSuite {
     }
   }
 
-  /** Jobs started while `body` runs, as (phase, description). Listener
-    * events arrive asynchronously, in order: a marker job is waited for,
-    * so every earlier job is in.
+  /** Jobs started while `body` runs, as (phase, description), and the
+    * shuffle bytes their tasks wrote. Listener events arrive
+    * asynchronously, in order: a marker job is waited for, so every
+    * earlier job and task is in.
     */
-  private def jobsDuring(body: => Unit): Seq[(Option[String], String)] = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+  private def jobsDuring(body: => Unit): (Seq[(Option[String], String)], Long) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+      SparkListenerTaskEnd}
     import scala.jdk.CollectionConverters._
     val jobs = new java.util.concurrent.ConcurrentLinkedQueue[java.util.Properties]()
+    val shuffled = new java.util.concurrent.atomic.AtomicLong
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = jobs.add(e.properties)
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m =>
+          shuffled.addAndGet(m.shuffleWriteMetrics.bytesWritten))
     }
     val sc = spark.sparkContext
     sc.addSparkListener(listener)
@@ -310,9 +316,10 @@ class FilePipelineSpec extends AnyFunSuite {
       while (!jobs.asScala.exists(_.getProperty("test.fence") != null) &&
           System.nanoTime() < deadline) Thread.sleep(20)
     } finally sc.removeSparkListener(listener)
-    jobs.asScala.toSeq.filter(_.getProperty("test.fence") == null).map(p =>
+    (jobs.asScala.toSeq.filter(_.getProperty("test.fence") == null).map(p =>
       (Option(p.getProperty(FilePipeline.PhaseProperty)),
-        Option(p.getProperty("spark.job.description")).getOrElse("")))
+        Option(p.getProperty("spark.job.description")).getOrElse(""))),
+      shuffled.get)
   }
 
   private def sinkFiles(dirs: FilePipeline.Dirs): Seq[String] =
@@ -322,7 +329,7 @@ class FilePipelineSpec extends AnyFunSuite {
         .map(_.toString)
     }.sorted
 
-  test("a later small batch runs at most 9 jobs, each named by its phase") {
+  test("a later small batch runs at most 7 jobs and shuffles nothing") {
     import org.apache.spark.sql.streaming.Trigger
     val dirs = chunkDirs()
     val cfg = FilePipeline.Config(chunkSize = 64, errorCorrectionSymbols = 4)
@@ -336,11 +343,12 @@ class FilePipelineSpec extends AnyFunSuite {
     assert(Files.exists(Paths.get(dirs.tracking)))
 
     // 4 new files against an existing tracking table, no failures
-    val jobs = jobsDuring { small("c", "d", "e", "f"); drain() }
+    val (jobs, shuffled) = jobsDuring { small("c", "d", "e", "f"); drain() }
     val phases = jobs.flatMap(_._1)
     assert(jobs.nonEmpty && phases.size == jobs.size, s"jobs without a phase: $jobs")
     assert(jobs.forall { case (p, desc) => desc.endsWith(p.get) }, jobs)
-    assert(jobs.size <= 9, jobs.mkString("\n"))
+    assert(jobs.size <= 7, jobs.mkString("\n"))
+    assert(shuffled == 0, s"$shuffled shuffle bytes written")
     assert(!phases.contains("filepipeline.dead_letter"), phases)
     assert(phases.distinct == Seq("filepipeline.build", "filepipeline.reports",
       "filepipeline.chunks", "filepipeline.status", "filepipeline.tracking"), phases)
@@ -349,9 +357,10 @@ class FilePipelineSpec extends AnyFunSuite {
     val before = sinkFiles(dirs)
     Files.copy(Paths.get(dirs.input, "a.txt"), Paths.get(dirs.input, "copy_of_a.txt"))
     Files.copy(Paths.get(dirs.input, "c.txt"), Paths.get(dirs.input, "copy_of_c.txt"))
-    val dupJobs = jobsDuring(drain())
+    val (dupJobs, _) = jobsDuring(drain())
     assert(sinkFiles(dirs) == before)
-    assert(dupJobs.flatMap(_._1).distinct == Seq("filepipeline.build"), dupJobs)
+    assert(dupJobs.nonEmpty && dupJobs.size <= 2 &&
+      dupJobs.forall(_._1.contains("filepipeline.build")), dupJobs)
   }
 
   test("a later drain reuses the generated classes of the first") {
@@ -359,20 +368,67 @@ class FilePipelineSpec extends AnyFunSuite {
     import org.apache.spark.sql.streaming.Trigger
     val dirs = chunkDirs()
     val cfg = FilePipeline.Config(chunkSize = 64, errorCorrectionSymbols = 4)
-    def drain(seed: Int): Unit = {
+    def drain(seed: Int, copies: Int*): Unit = {
       mixedUtf8Wave(dirs.input, seed)
+      // renamed copies of drain 1's files: the batch drops their paths
+      copies.foreach(i => Files.copy(Paths.get(dirs.input, s"wave_31_$i.txt"),
+        Paths.get(dirs.input, s"copy_${seed}_$i.txt")))
       FilePipeline.run(spark, dirs, cfg, Trigger.AvailableNow()).awaitTermination()
     }
-    // the first drain has no tracking table; the second is the first
-    // to plan the anti-join over one
+    // the first drain has no tracking table; the second is the first to
+    // join its keys with one and to drop a path. The third drops other
+    // paths, and more of them: its filter must reuse the second's code.
     drain(31)
-    drain(32)
-    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME
-    val before = compiles.getCount
-    drain(33)
-    val n = compiles.getCount - before
+    drain(32, 0)
+    def compiled(body: => Unit): Long = {
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      body
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
+    val n = compiled(drain(33, 1, 2))
     // only the sinks' timestamp projections, whose instant is a literal
     assert(n <= 8, s"$n classes compiled by the third drain")
+    // and nothing for the drop filter: a drain that drops no path
+    // compiles as many
+    val plain = compiled(drain(34))
+    assert(n <= plain, s"$n classes compiled with a drop filter, $plain without")
+  }
+
+  test("within a batch the smallest path of each content wins, and tracked content is skipped") {
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.streaming.Trigger
+    import spark.implicits._
+    val cfg = FilePipeline.Config(chunkSize = 64, errorCorrectionSymbols = 4)
+    for (streamed <- Seq(false, true)) {
+      val dirs = freshDirs()
+      Files.createDirectories(Paths.get(dirs.input))
+      def put(name: String, text: String): Unit =
+        Files.write(Paths.get(dirs.input, name), text.getBytes(StandardCharsets.UTF_8))
+      def drain(): Unit =
+        if (streamed) FilePipeline.run(spark, dirs, cfg, Trigger.AvailableNow()).awaitTermination()
+        else FilePipeline.runBatch(spark, dirs, cfg)
+      def rows(): Seq[Long] = Seq(spark.read.parquet(dirs.tracking).count(),
+        spark.read.json(dirs.reports).count(), spark.read.parquet(dirs.statusEvents).count())
+      put("tracked.txt", "content seen before")
+      drain()
+      val before = rows()
+
+      val shared = "one content under three names"
+      Seq("b_dup.txt", "a_dup.txt", "c_dup.txt").foreach(put(_, shared))
+      put("renamed_tracked.txt", "content seen before")
+      put("unique.txt", "a content of its own")
+      drain()
+      val outs = Files.list(Paths.get(dirs.output)).toArray
+        .map(_.asInstanceOf[Path].getFileName.toString).toSet
+      assert(outs == Set("processed_tracked.txt", "processed_a_dup.txt",
+        "processed_unique.txt"), s"streamed=$streamed")
+      assert(rows() == before.map(_ + 2), s"streamed=$streamed")
+      val sharedPaths = spark.read.parquet(dirs.tracking)
+        .filter(col("file_hash") === graft.codec.DnaCodec.md5HexUtf8(shared))
+        .select("file_path").as[String].collect().toSeq
+      assert(sharedPaths.size == 1 && sharedPaths.head.endsWith("/a_dup.txt"),
+        s"streamed=$streamed: $sharedPaths")
+    }
   }
 
   test("every tracked file of a later batch gets its status event") {
