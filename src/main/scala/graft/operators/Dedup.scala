@@ -402,7 +402,7 @@ object Dedup {
     * exactly-once-ingest contract every stored maintainer here
     * assumes (appending the same doc twice would double its counts —
     * the content-hash idempotence layer lives in the ingest pipeline,
-    * FilePipeline's anti-join, not in this layout). One definition so
+    * FilePipeline's key pass, not in this layout). One definition so
     * the layouts cannot drift.
     */
   private def writeChunkHashes(rel: DataFrame, dir: String,

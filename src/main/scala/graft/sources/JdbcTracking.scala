@@ -17,10 +17,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * [[SqlDialect]]: Postgres keeps the reference's exact statement,
   * Derby uses the standard `MERGE`, which lets the whole path run for
   * real against the in-memory Derby that ships with Spark
-  * (JdbcTrackingSpec). Reads go through `spark.read.jdbc` (predicate
-  * pushdown to the indexed columns); writes are per-partition JDBC
-  * batches, executed executor-side so a 1000-executor cluster doesn't
-  * funnel inserts through the driver.
+  * (JdbcTrackingSpec). Relation reads go through `spark.read.jdbc`
+  * (predicate pushdown to the indexed columns); a DataFrame's writes are
+  * per-partition JDBC batches, executed executor-side so a
+  * 1000-executor cluster doesn't funnel inserts through the driver. A
+  * pipeline batch's membership probe ([[tracked]]) and its few tracking
+  * rows ([[upsertRows]]) go over one driver-side connection each.
   */
 object JdbcTracking {
 
@@ -200,26 +202,55 @@ object JdbcTracking {
   /** S9: idempotent executor-side upsert of (file_hash, file_path,
     * file_size, status, output_file) rows — insert-if-absent on
     * file_hash keeps content-addressed exactly-once
-    * (`dags/dag.py:740-759`). Call from `foreachBatch`.
+    * (`dags/dag.py:740-759`). Each partition is one [[upsertRows]].
     */
   def upsert(batch: DataFrame, url: String, user: String, password: String,
-      dialect: SqlDialect = Postgres): Unit = {
-    val sql = dialect.upsertSql(Table)
+      dialect: SqlDialect = Postgres): Unit =
     batch.select("file_hash", "file_path", "file_size", "status", "output_file")
       .foreachPartition { rows: Iterator[org.apache.spark.sql.Row] =>
-        if (rows.nonEmpty) {
-          // materialize so a retried transaction can replay the batch
-          val buf = rows.toArray
-          writeTransaction(url, user, password, dialect) { conn =>
-            val st = conn.prepareStatement(sql)
-            buf.foreach { r =>
-              dialect.bindUpsert(st, r)
-              st.addBatch()
-            }
-            st.executeBatch()
-          }
-        }
+        // materialize so a retried transaction can replay the batch
+        upsertRows(rows.toList, url, user, password, dialect)
       }
+
+  /** [[upsert]] of rows already in hand, in that column order: one
+    * insert-if-absent transaction from the calling JVM.
+    */
+  def upsertRows(rows: Seq[org.apache.spark.sql.Row], url: String, user: String,
+      password: String, dialect: SqlDialect = Postgres): Unit =
+    if (rows.nonEmpty) {
+      val sql = dialect.upsertSql(Table)
+      writeTransaction(url, user, password, dialect) { conn =>
+        val st = conn.prepareStatement(sql)
+        rows.foreach { r =>
+          dialect.bindUpsert(st, r)
+          st.addBatch()
+        }
+        st.executeBatch()
+      }
+    }
+
+  /** Hashes bound into one [[tracked]] statement: a long `IN` list is
+    * slow to compile, and some engines cap it (Oracle at 1000).
+    */
+  private val InChunk = 1000
+
+  /** S5/T2: the subset of `hashes` the table holds, asked of the
+    * database alone (`SELECT file_hash ... WHERE file_hash IN (?, …)`,
+    * [[InChunk]] hashes a statement) over one driver-side connection.
+    */
+  def tracked(url: String, user: String, password: String,
+      hashes: Set[String]): Set[String] = {
+    val conn = DriverManager.getConnection(url, user, password)
+    try hashes.toSeq.grouped(InChunk).flatMap { chunk =>
+      val st = conn.prepareStatement(
+        s"SELECT file_hash FROM $Table WHERE file_hash IN (${chunk.map(_ => "?").mkString(", ")})")
+      try {
+        chunk.zipWithIndex.foreach { case (h, i) => st.setString(i + 1, h) }
+        val rs = st.executeQuery()
+        Iterator.continually(rs).takeWhile(_.next()).map(_.getString(1)).toList
+      } finally st.close()
+    }.toSet
+    finally conn.close()
   }
 
   /** S11: `UPDATE ... SET status=?, processed_at=CURRENT_TIMESTAMP

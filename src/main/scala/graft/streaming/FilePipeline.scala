@@ -2,17 +2,21 @@ package graft.streaming
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
+import java.time.Instant
+import java.util.concurrent.ConcurrentHashMap
 
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 import scala.util.Using
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.InSet
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
-import org.apache.spark.sql.graftbridge.DatasetBridge
+import org.apache.spark.sql.graftbridge.{DatasetBridge, FileWriteBridge}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.unsafe.types.UTF8String
 import graft.functions.DnaFunctions
 
@@ -39,21 +43,37 @@ import graft.functions.DnaFunctions
   *    latest-wins view — fixes the reference's lost-UPDATE quirk
   *    (SURVEY.md §7.4) while keeping the final-table contract.
   *
-  * A micro-batch ([[processBatch]]) first collects one key row per
-  * file, `(file_hash, file_path, tracked)`, where `tracked` comes from a
-  * left-outer join with [[TrackingStore.knownHashes]]; no file content
-  * is shuffled. The driver drops every path whose hash is tracked and,
-  * within the batch, every path but the smallest for each hash (the
-  * first landing wins, deterministically). A batch with nothing fresh
-  * stops there and touches no sink. Otherwise the batch minus the
-  * dropped paths is the processed frame: persisted once, it feeds every
-  * sink, in this order: output files (the action that builds the cache
-  * and counts each branch), reports, chunks, dead letters, status
-  * events, and the tracking upsert LAST, so that a batch that dies
-  * before its upsert is replayed whole and no file is tracked without
-  * its other sinks. A sink whose branch has no row is skipped. Every
-  * job of a batch carries its phase name in the [[PhaseProperty]]
-  * local property and in its job description.
+  * A micro-batch ([[processBatch]]) runs only its content-sized work
+  * as Spark jobs, and keeps each file's bookkeeping on the driver:
+  *  - Key pass (job): one key row per file, `(file_hash, file_path)`,
+  *    is collected; no file content is shuffled. The driver asks the
+  *    store which hashes it holds ([[TrackingStore.tracked]]) and drops
+  *    every path whose hash is tracked and, within the batch, every path
+  *    but the smallest for each hash (the first landing wins,
+  *    deterministically). A batch with nothing fresh stops there and
+  *    touches no sink.
+  *  - Build (job): the batch minus the dropped paths is the processed
+  *    frame, persisted once. One `mapPartitions` + `collect()` builds
+  *    the cache, writes each completed file's `processed_<name>` from
+  *    the executors and brings back each file's bookkeeping row, without
+  *    its content or chunks.
+  *  - Chunk rows and dead-letter payloads (a job each, when their
+  *    branch has a row) are read from the cache.
+  *  - Reports (JSON), status events (parquet) and parquet tracking rows
+  *    are written by the driver from the collected rows, through Spark's
+  *    own format writers (`graftbridge.FileWriteBridge`): one file per
+  *    sink and batch (tracking: per `status=` partition), written under
+  *    a hidden name and renamed into place. One instant per batch stamps
+  *    all three. These three dirs get no `_SUCCESS` marker; nothing
+  *    reads one.
+  *
+  * The sinks are written in this order: output files, reports, chunks,
+  * dead letters, status events, and the tracking upsert LAST, so that a
+  * batch that dies before its upsert is replayed whole and no file is
+  * tracked without its other sinks. Every job of a batch carries its
+  * phase name in the [[PhaseProperty]] local property and in its job
+  * description. The parquet store holds its tracked hashes on the
+  * driver, about 100 B per tracked file ([[ParquetTracking]]).
   *
   * The batch is read twice, by the key pass and by the build. That
   * relies on the file source's contract that a landed file is not
@@ -65,9 +85,9 @@ import graft.functions.DnaFunctions
   * session; executors build one class loader per session, and Spark's
   * generated-code cache is keyed by class loader. Left in the clone,
   * every drain would compile its generated classes afresh. In the
-  * caller's session a later drain compiles only its sinks'
-  * `current_timestamp()` projections, whose instant is inlined as a
-  * literal.
+  * caller's session a later drain compiles none: no plan of it inlines
+  * a per-drain instant, since the timestamped sinks are written by the
+  * driver.
   */
 object FilePipeline {
 
@@ -117,62 +137,136 @@ object FilePipeline {
     * deployment; [[JdbcTrackingStore]] is drop-in parity with the
     * reference's Postgres `processed_files` (`init-scripts.sql:5-14`),
     * executed for real against Derby in JdbcPipelineSpec. Both sides
-    * of the contract matter: [[knownHashes]] feeds the key pass that
-    * makes reprocessing impossible, [[upsert]] must itself be
-    * idempotent on `file_hash` so a replayed micro-batch (foreachBatch
-    * is at-least-once on failure) cannot double-insert.
+    * of the contract run on the driver, with a batch's keys and rows in
+    * hand: [[tracked]] answers the key pass that makes reprocessing
+    * impossible, and [[upsert]] must itself be idempotent on `file_hash`
+    * so a replayed micro-batch (foreachBatch is at-least-once on
+    * failure) cannot double-insert.
     */
   sealed trait TrackingStore extends Serializable {
-    /** `file_hash` of every tracked row. Not deduplicated: a hash
-      * repeats only if a store holds it twice, and then it only repeats
-      * a key row of the batch's left-outer key pass, which the driver
-      * reads as a set.
-      */
-    def knownHashes(spark: SparkSession): DataFrame
+    /** The subset of `hashes` that the store holds. */
+    def tracked(spark: SparkSession, hashes: Set[String]): Set[String]
     /** Idempotent append of
-      * (file_hash, file_path, file_size, status, output_file) rows.
+      * (file_hash, file_path, file_size, status, output_file) rows,
+      * stamped `processedAt` where the store does not stamp them itself.
       */
-    def upsert(spark: SparkSession, rows: DataFrame): Unit
+    def upsert(spark: SparkSession, rows: Seq[Row], processedAt: Instant): Unit
   }
 
   /** Default store: the status-partitioned parquet tracking table
     * (status-scoped sweeps prune partitions instead of scanning all
     * history). Idempotence comes from the caller's key pass — the
     * same ordering the reference relies on (`dags/dag.py:452-474`).
+    *
+    * The driver holds, per qualified table path, the data files it has
+    * folded in and their hashes, about 100 B per tracked file. [[tracked]]
+    * lists the table and reads `file_hash` only from files it has not
+    * folded: those another writer appended. [[upsert]] folds the files
+    * and hashes it writes without reading them back, so in steady state
+    * a batch's membership costs one listing and no job. If a folded file
+    * has vanished (the table was deleted or rewritten), the held set
+    * starts over from the listing.
     */
   final case class ParquetTracking(dir: String) extends TrackingStore {
+    /** Every tracked row's `file_hash`, as a relation read from the
+      * whole table.
+      */
     def knownHashes(spark: SparkSession): DataFrame = {
-      // existence through Hadoop's FileSystem, so a `file:` or `hdfs://`
-      // URI resolves like a plain path does
-      val p = new Path(dir)
-      if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
-        // schema stated: inferring it runs a footer-reading job per batch
-        spark.read.schema("file_hash STRING, file_path STRING, file_size BIGINT, " +
-          "processed_at TIMESTAMP, output_file STRING, status STRING")
-          .parquet(dir).select("file_hash")
+      val (fs, table) = root(spark)
+      if (fs.exists(table))
+        // schema stated: inferring it runs a footer-reading job
+        spark.read.schema(TrackingSchema.add("status", "string"))
+          .parquet(table.toString).select("file_hash")
       else spark.emptyDataset(Encoders.STRING).toDF("file_hash")
     }
-    def upsert(spark: SparkSession, rows: DataFrame): Unit =
-      // one file per status and batch: every later batch reads them all
-      rows.coalesce(1).select(col("file_hash"), col("file_path"), col("file_size"),
-        current_timestamp().as("processed_at"), col("status"), col("output_file"))
-        .write.mode("append").partitionBy("status").parquet(dir)
+
+    /** The table's qualified path: through Hadoop's FileSystem, so a
+      * `file:` or `hdfs://` URI resolves like a plain path does.
+      */
+    private def root(spark: SparkSession): (FileSystem, Path) = {
+      val p = new Path(dir)
+      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      (fs, fs.makeQualified(p))
+    }
+
+    /** The table's data files, skipping what a Spark reader skips: any
+      * name under the table that starts with `_` or `.`.
+      */
+    private def dataFiles(fs: FileSystem, root: Path): Set[String] = {
+      def visible(p: Path): Boolean = p == null || p == root ||
+        !p.getName.startsWith("_") && !p.getName.startsWith(".") && visible(p.getParent)
+      val files = Set.newBuilder[String]
+      if (fs.exists(root)) {
+        val it = fs.listFiles(root, true)
+        while (it.hasNext) {
+          val p = it.next().getPath
+          if (visible(p)) files += p.toString
+        }
+      }
+      files.result()
+    }
+
+    def tracked(spark: SparkSession, hashes: Set[String]): Set[String] = {
+      val (fs, table) = root(spark)
+      val files = dataFiles(fs, table)
+      val held = ParquetTracking.held.computeIfAbsent(table.toString, _ => new ParquetTracking.Held)
+      held.synchronized {
+        if (!held.files.subsetOf(files)) {
+          held.files.clear()
+          held.hashes.clear()
+        }
+        val unfolded = files -- held.files
+        if (unfolded.nonEmpty) {
+          held.hashes ++= spark.read.schema("file_hash STRING")
+            .parquet(unfolded.toSeq: _*).as(Encoders.STRING).collect()
+          held.files ++= unfolded
+        }
+        hashes.filter(held.hashes)
+      }
+    }
+
+    /** One parquet file per status partition, written by the driver. */
+    def upsert(spark: SparkSession, rows: Seq[Row], processedAt: Instant): Unit = {
+      val (_, table) = root(spark)
+      val written = rows.groupBy(_.getString(3)).map { case (status, rs) =>
+        FileWriteBridge.writeFile(spark, "parquet", table.toString, TrackingSchema,
+          rs.map(r => Row(r.get(0), r.get(1), r.get(2), processedAt, r.get(4))),
+          Some("status" -> status)).toString
+      }
+      Option(ParquetTracking.held.get(table.toString)).foreach(held => held.synchronized {
+        held.files ++= written
+        held.hashes ++= rows.map(_.getString(0))
+      })
+    }
   }
 
-  /** The reference's JDBC tracking table as the store: reads go
-    * through `spark.read.jdbc`, writes through the executor-side
-    * insert-if-absent batches of [[graft.sources.JdbcTracking.upsert]]
+  object ParquetTracking {
+    private final class Held {
+      val files = mutable.Set.empty[String]
+      val hashes = mutable.Set.empty[String]
+    }
+    /** Keyed by the table's qualified path, for this JVM's lifetime. */
+    private val held = new ConcurrentHashMap[String, Held]()
+  }
+
+  /** A tracking data file's columns; `status` is its partition. */
+  private val TrackingSchema = StructType.fromDDL("file_hash STRING, file_path STRING, " +
+    "file_size BIGINT, processed_at TIMESTAMP, output_file STRING")
+
+  /** The reference's JDBC tracking table as the store: membership asks
+    * the database about a batch's hashes only, and rows go through the
+    * insert-if-absent batch of [[graft.sources.JdbcTracking.upsertRows]]
     * (Postgres `ON CONFLICT DO NOTHING` / Derby `MERGE`), which makes
     * the upsert idempotent at the DATABASE, not just via the key pass.
+    * The database stamps `processed_at` itself, as the reference's does.
     */
   final case class JdbcTrackingStore(url: String, user: String,
       password: String, dialect: graft.sources.JdbcTracking.SqlDialect)
     extends TrackingStore {
-    def knownHashes(spark: SparkSession): DataFrame =
-      graft.sources.JdbcTracking.read(spark, url, user, password, dialect)
-        .select("file_hash")
-    def upsert(spark: SparkSession, rows: DataFrame): Unit =
-      graft.sources.JdbcTracking.upsert(rows, url, user, password, dialect)
+    def tracked(spark: SparkSession, hashes: Set[String]): Set[String] =
+      graft.sources.JdbcTracking.tracked(url, user, password, hashes)
+    def upsert(spark: SparkSession, rows: Seq[Row], processedAt: Instant): Unit =
+      graft.sources.JdbcTracking.upsertRows(rows, url, user, password, dialect)
   }
 
   /** S4 (`dags/dag.py:426-443`): if the input directory has no .txt
@@ -217,8 +311,8 @@ object FilePipeline {
       octet_length(col("value")).cast("long").as("file_size"))
 
   /** Local property naming the FilePipeline phase a job belongs to:
-    * `filepipeline.build`, `.reports`, `.chunks`, `.dead_letter`,
-    * `.status` or `.tracking`.
+    * `filepipeline.build` (the key pass, a read of tracking files another
+    * writer appended, and the build), `.chunks` or `.dead_letter`.
     */
   val PhaseProperty = "graft.phase"
 
@@ -257,6 +351,24 @@ object FilePipeline {
     }
   }
 
+  /** A processed file as the build hands it to the driver: every field
+    * the report, status and tracking sinks write. `content` is set only
+    * on the executor side, for the output-file write; the rows collected
+    * carry no content and no chunk.
+    */
+  private[streaming] case class Booked(file_path: String, filename: String, file_hash: String,
+      file_size: Long, status: String, original_checksum: String,
+      reconstructed_checksum: String, dna_chunks_count: java.lang.Integer,
+      total_dna_bases: java.lang.Long, content: String)
+
+  private val ReportSchema = StructType.fromDDL("file_path STRING, filename STRING, " +
+    "file_hash STRING, original_checksum STRING, reconstructed_checksum STRING, " +
+    "dna_chunks_count INT, total_dna_bases BIGINT, chunk_size INT, " +
+    "error_correction_symbols INT, processed_at TIMESTAMP")
+
+  private val StatusSchema =
+    StructType.fromDDL("file_hash STRING, status STRING, event_time TIMESTAMP")
+
   /** One micro-batch: dedup → process → fan-out. Also the per-run body
     * of the batch entry point. The dedup rule, the empty-batch gate and
     * the sink order are set out on [[FilePipeline]].
@@ -276,14 +388,11 @@ object FilePipeline {
     // J1/T2: content-hash exactly-once from one narrow key pass. A path
     // is dropped if its hash is tracked, or if a smaller path of the
     // batch holds the same content: the first landing wins.
-    val keys = phase(spark, "filepipeline.build") {
-      batch.select("file_hash", "file_path")
-        .join(tracking.knownHashes(spark).withColumn("tracked", lit(true)),
-          Seq("file_hash"), "left_outer")
-        .select($"file_hash", $"file_path", $"tracked".isNotNull)
-        .as[(String, String, Boolean)].collect()
+    val (keys, known) = phase(spark, "filepipeline.build") {
+      val keys = batch.select("file_hash", "file_path").as[(String, String)].collect()
+      (keys, tracking.tracked(spark, keys.map(_._1).toSet))
     }
-    val keep = keys.filterNot(_._3)
+    val keep = keys.filterNot(k => known(k._1))
       .groupMapReduce(_._1)(_._2)(Ordering[String].min(_, _)).values.toSet
     if (keep.isEmpty) return // F4's empty-input gate (`dags/dag.py:816-821`)
     val drop = keys.map(_._2).toSet -- keep
@@ -319,52 +428,43 @@ object FilePipeline {
       .persist()
 
     try {
-      val ok = processed.filter($"status" === "completed")
-      val failed = processed.filter($"status" =!= "completed")
-
       // S6: reconstructed text, one exact-named file per input
       // (`processed_{filename}`, dags/dag.py:577) — executor-side
       // writer; on a cluster this is a DFS client, locally java.nio.
-      // This action builds the cache; it also counts both branches, so
-      // a sink whose branch has no row is skipped.
-      val completedAcc = spark.sparkContext.longAccumulator
-      val failedAcc = spark.sparkContext.longAccumulator
-      phase(spark, "filepipeline.build") {
-        processed.select($"filename",
+      // This action builds the cache and brings each file's bookkeeping
+      // row to the driver.
+      val booked = phase(spark, "filepipeline.build") {
+        processed.select($"file_path", $"filename", $"file_hash", $"file_size", $"status",
+          $"r.original_checksum".as("original_checksum"),
+          $"r.reconstructed_checksum".as("reconstructed_checksum"),
+          $"r.n_chunks".as("dna_chunks_count"), $"r.total_dna_bases".as("total_dna_bases"),
           when($"status" === "completed", $"content").as("content"))
-          .as[(String, String)]
-          .foreachPartition { it: Iterator[(String, String)] =>
-            it.foreach {
-              case (_, null) => failedAcc.add(1)
-              case (name, text) =>
-                Files.createDirectories(Paths.get(outDir))
-                Files.write(Paths.get(outDir, s"processed_$name"),
-                  text.getBytes(StandardCharsets.UTF_8))
-                completedAcc.add(1)
+          .as[Booked]
+          .mapPartitions(_.map { f =>
+            if (f.content != null) {
+              Files.createDirectories(Paths.get(outDir))
+              Files.write(Paths.get(outDir, s"processed_${f.filename}"),
+                f.content.getBytes(StandardCharsets.UTF_8))
             }
-          }
+            f.copy(content = null)
+          })
+          .collect()
       }
-      val (nCompleted, nFailed) = (completedAcc.sum, failedAcc.sum)
+      val ok = booked.filter(_.status == "completed")
+      val processedAt = Instant.now() // stamps reports, status events and tracking
 
-      if (nCompleted > 0) {
+      if (ok.nonEmpty) {
         // S7: per-file DNA report (nested JSON)
-        phase(spark, "filepipeline.reports") {
-          ok.select($"file_path", $"filename", $"file_hash",
-            $"r.original_checksum".as("original_checksum"),
-            $"r.reconstructed_checksum".as("reconstructed_checksum"),
-            $"r.n_chunks".as("dna_chunks_count"),
-            $"r.total_dna_bases".as("total_dna_bases"),
-            lit(cfg.chunkSize).as("chunk_size"),
-            lit(cfg.errorCorrectionSymbols).as("error_correction_symbols"),
-            current_timestamp().as("processed_at"))
-            .coalesce(1) // a few hundred bytes a file: one file per batch
-            .write.mode("append").json(dirs.reports)
-        }
+        FileWriteBridge.writeFile(spark, "json", dirs.reports, ReportSchema, ok.map(f =>
+          Row(f.file_path, f.filename, f.file_hash, f.original_checksum,
+            f.reconstructed_checksum, f.dna_chunks_count, f.total_dna_bases,
+            cfg.chunkSize, cfg.errorCorrectionSymbols, processedAt)))
 
         // S8: per-chunk DNA + metadata sink, partitioned by file hash
         // (`dags/dag.py:540-569`), when a chunks dir is configured.
         if (dirs.chunks.nonEmpty) phase(spark, "filepipeline.chunks") {
-          ok.select($"file_hash", explode($"chunks").as("chunk"))
+          processed.filter($"status" === "completed")
+            .select($"file_hash", explode($"chunks").as("chunk"))
             .select($"file_hash", $"chunk.chunk_id", $"chunk.idx",
               $"chunk.dna_sequence", $"chunk.checksum", $"chunk.ecc_hex",
               $"chunk.chunk_nbytes")
@@ -375,35 +475,29 @@ object FilePipeline {
       // S10: dead-letter sink — error metadata + original payload;
       // dead-letter filename mirrors the reference's
       // `failed_{timestamp}_{filename}` (X19, dags/dag.py:294-296).
-      if (nFailed > 0) phase(spark, "filepipeline.dead_letter") {
-        failed.select($"file_path", $"filename", $"file_hash", $"file_size",
-          $"error_message", $"content".as("payload"),
-          format_string("failed_%s_%s",
-            date_format(current_timestamp(), "yyyyMMdd_HHmmss"), $"filename")
-            .as("dead_letter_file"),
-          current_timestamp().as("failed_at"))
+      if (ok.length < booked.length) phase(spark, "filepipeline.dead_letter") {
+        processed.filter($"status" =!= "completed")
+          .select($"file_path", $"filename", $"file_hash", $"file_size",
+            $"error_message", $"content".as("payload"),
+            format_string("failed_%s_%s",
+              date_format(current_timestamp(), "yyyyMMdd_HHmmss"), $"filename")
+              .as("dead_letter_file"),
+            current_timestamp().as("failed_at"))
           .coalesce(1)
           .write.mode("append").json(dirs.deadLetter)
       }
 
       // S11/T4: status events, append-only
-      phase(spark, "filepipeline.status") {
-        processed.select($"file_hash", $"status",
-          current_timestamp().as("event_time"))
-          .coalesce(1) // a few bytes a file: one parquet file per batch
-          .write.mode("append").parquet(dirs.statusEvents)
-      }
+      FileWriteBridge.writeFile(spark, "parquet", dirs.statusEvents, StatusSchema,
+        booked.map(f => Row(f.file_hash, f.status, processedAt)))
 
       // S9: tracking upsert (content-addressed; the key pass above plus
       // the store's own insert-if-absent keep ON CONFLICT DO NOTHING
       // semantics) through the pluggable store. Last, so that a batch
       // that dies before it is replayed whole.
-      phase(spark, "filepipeline.tracking") {
-        tracking.upsert(spark,
-          processed.select($"file_hash", $"file_path", $"file_size", $"status",
-            when($"status" === "completed",
-              concat(lit("processed_"), $"filename")).as("output_file")))
-      }
+      tracking.upsert(spark, booked.map(f => Row(f.file_hash, f.file_path, f.file_size,
+        f.status, if (f.status == "completed") s"processed_${f.filename}" else null)),
+        processedAt)
     } finally processed.unpersist()
   }
 

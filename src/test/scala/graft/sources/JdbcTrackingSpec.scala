@@ -93,6 +93,19 @@ class JdbcTrackingSpec extends AnyFunSuite {
     assert(path == Seq(Seq("/in/b.txt")))
   }
 
+  test("membership asks about a batch's hashes only, across IN chunks") {
+    import org.apache.spark.sql.Row
+    init
+    // 2 500 hashes, more than one IN chunk; every other one tracked
+    val hashes = (0 until 2500).map(i => f"m$i%031d")
+    val tracked = hashes.indices.filter(_ % 2 == 0).map(hashes)
+    JdbcTracking.upsertRows(tracked.map(h => Row(h, s"/in/$h.txt", 1L, "completed", null)),
+      url, user, pass, JdbcTracking.Derby)
+    assert(JdbcTracking.tracked(url, user, pass, hashes.toSet) == tracked.toSet)
+    assert(JdbcTracking.tracked(url, user, pass, Set("m-untracked")).isEmpty)
+    assert(JdbcTracking.tracked(url, user, pass, Set.empty).isEmpty)
+  }
+
   test("per-hash count read pushes the predicate and counts 1") {
     init
     JdbcTracking.upsert(batch(("h9", "/in/z.txt", 5L, "completed", null)),

@@ -10,11 +10,11 @@ import graft.sources.JdbcTracking
 
 /** The streaming pipeline tracked through the REFERENCE's store shape:
   * `FilePipeline.run` with a [[FilePipeline.JdbcTrackingStore]], so the
-  * tracking upsert executes `JdbcTracking.upsert`'s real executor-side
-  * JDBC batches (Derby MERGE — the same dialect seam Postgres's
+  * tracking upsert executes `JdbcTracking.upsertRows`' real JDBC batch
+  * (Derby MERGE — the same dialect seam Postgres's
   * `ON CONFLICT DO NOTHING` rides through, `dags/dag.py:740-759`) and
-  * the exactly-once anti-join reads its membership back over
-  * `spark.read.jdbc`. JdbcTrackingSpec proves the dialect in isolation;
+  * the exactly-once key pass asks the database which of its hashes are
+  * tracked (`JdbcTracking.tracked`). JdbcTrackingSpec proves the dialect in isolation;
   * this closes the loop end-to-end: drop → process → JDBC row, then a
   * renamed duplicate in a LATER drop must be rejected by the JDBC
   * store's hashes, not by a parquet side-table.
@@ -83,7 +83,7 @@ class JdbcPipelineSpec extends AnyFunSuite {
 
     // drop 2, same checkpoint: a renamed duplicate of drop 1's content
     // (new PATH, so the file source does deliver it — only the
-    // anti-join against the JDBC store can stop it) plus a new file
+    // membership check against the JDBC store can stop it) plus a new file
     Files.write(Paths.get(dirs.input, "dup_of_first.txt"),
       "tracked through jdbc".getBytes(StandardCharsets.UTF_8))
     Files.write(Paths.get(dirs.input, "second.txt"),
