@@ -233,6 +233,7 @@ object FilePipeline {
           rs.map(r => Row(r.get(0), r.get(1), r.get(2), processedAt, r.get(4))),
           Some("status" -> status)).toString
       }
+      // nothing held yet: the next `tracked` lists the table and reads it
       Option(ParquetTracking.held.get(table.toString)).foreach(held => held.synchronized {
         held.files ++= written
         held.hashes ++= rows.map(_.getString(0))
